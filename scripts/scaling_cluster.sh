@@ -39,6 +39,14 @@ NDOCS=${1:-96000}
 ROUNDS=${2:-5}
 OUT=${3:-BENCH/scaling_rows.md}
 BUDGET_MINS=${GRAFT_CAMPAIGN_BUDGET_MINS:-75}
+IDLE_GRACE_MINS=${GRAFT_CAMPAIGN_IDLE_GRACE_MINS:-15}
+# a budget that does not exceed the grace would start zero rounds and
+# still summarize an empty campaign — refuse it before any leg starts
+if [ "$BUDGET_MINS" -le "$IDLE_GRACE_MINS" ]; then
+  echo "[scaling-driver] GRAFT_CAMPAIGN_BUDGET_MINS=${BUDGET_MINS} must exceed" \
+    "GRAFT_CAMPAIGN_IDLE_GRACE_MINS=${IDLE_GRACE_MINS}, or no round would run" >&2
+  exit 1
+fi
 T_START=$(date +%s)
 rm -f /tmp/campaign_done
 touch /tmp/graft-campaign-running
@@ -136,7 +144,6 @@ leg() {
   cleanup
 }
 
-IDLE_GRACE_MINS=${GRAFT_CAMPAIGN_IDLE_GRACE_MINS:-15}
 for r in $(seq 1 "$ROUNDS"); do
   ELAPSED_MINS=$(( ($(date +%s) - T_START) / 60 ))
   if [ "$ELAPSED_MINS" -ge "$((BUDGET_MINS - IDLE_GRACE_MINS))" ]; then

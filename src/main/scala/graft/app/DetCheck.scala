@@ -2,14 +2,15 @@ package graft.app
 
 import graft.core.{Corpus, Sessions}
 import graft.extract.{DeterministicExtractor, Extract}
-import graft.link.{ConnectedComponents, Linker}
+import graft.link.{Linker, UnionFind}
 import org.apache.spark.sql.functions._
 
 /** Shuffle-determinism stress check: freeze the linker's (names, pairs)
-  * inputs to parquet once, then loop the per-key union-find over the
-  * frozen input, asserting row conservation (|comps| == |names|) on every
-  * iteration. Silent row loss in the groupByKey shuffle shows up as a
-  * varying deficit; a clean engine prints the same count every round.
+  * inputs to parquet once, then loop the linker's per-doc union-find
+  * cogroup over the frozen input, asserting row conservation
+  * (|comps| == |names|) on every iteration. Silent row loss in the
+  * cogroup shuffle shows up as a varying deficit; a clean engine prints
+  * the same count every round.
   *
   * Usage: DetCheck <local[n] | spark://...,totalCores> <nDocs> <rounds> <workDir>
   */
@@ -32,9 +33,8 @@ object DetCheck {
       val chunks = graft.build.Chunker.chunks(docs)
       val raw = Extract.rawLogs(chunks, graft.build.Chunker.visualSpans(docs), extractor)
       val logs = Extract.withProperties(raw, extractor)
-      val names = Linker.uniqueNamesFrom(Linker.mentionAgg(logs))
-      names.write.mode("overwrite").parquet(s"$work/names")
-      Linker.matchedPairs(spark.read.parquet(s"$work/names"))
+      Linker.uniqueNamesSlim(logs).write.mode("overwrite").parquet(s"$work/names")
+      Linker.matchedPairIds(spark.read.parquet(s"$work/names"))
         .write.mode("overwrite").parquet(s"$work/pairs")
     }
     val names = spark.read.parquet(s"$work/names")
@@ -42,76 +42,21 @@ object DetCheck {
     val expected = names.count()
     println(s"[det-check] names=$expected pairs=${pairs.count()}")
     import spark.implicits._
-    val vRows = names.select(col("doc_id").as("key"), col("name_norm").as("a"),
-      lit(null).cast("string").as("b"))
-    val eRows = pairs.select(col("doc_id").as("key"), col("a"), col("b"))
-    val union = vRows.union(eRows)
-    val unionExpected = union.count()
-    println(s"[det-check] union=$unionExpected")
+    // the linker's fold inputs: name ids keyed by doc, pair ids keyed by doc
+    val nameRows = names.select(col("doc_id"), xxhash64(col("name_norm")))
+      .as[(String, Long)].groupByKey(_._1)
+    val pairRows = pairs.select(col("doc_id"), col("a"), col("b"))
+      .as[(String, Long, Long)].groupByKey(_._1)
     var bad = 0
     (1 to rounds).foreach { r =>
-      // in-lambda consistency audit: per group, distinct members via a
-      // plain HashSet vs via the union-find parent map, over a BUFFERED
-      // copy of the group (two passes over identical data). Emits only
-      // groups where any invariant breaks, with the raw values.
-      val viol = union.as[(String, String, String)].groupByKey(_._1)
-        .flatMapGroups { (k, it) =>
-          val buf = it.toArray
-          val set = scala.collection.mutable.HashSet[String]()
-          buf.foreach { case (_, a, b) => set += a; if (b != null) set += b }
-          val parent = scala.collection.mutable.HashMap[String, String]()
-          def add(x: String): Unit = if (!parent.contains(x)) parent(x) = x
-          def find(x: String): String = {
-            var rr = x
-            while (parent(rr) != rr) rr = parent(rr)
-            rr
-          }
-          buf.foreach { case (_, a, b) =>
-            if (b == null) add(a)
-            else {
-              add(a); add(b)
-              val ra = find(a); val rb = find(b)
-              if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-            }
-          }
-          val nullA = buf.count(_._2 == null)
-          val emptyB = buf.count(x => x._3 != null && x._3.isEmpty)
-          if (parent.size != set.size || nullA > 0 || emptyB > 0)
-            Iterator.single((k, buf.length.toLong, set.size.toLong, parent.size.toLong,
-              nullA.toLong, emptyB.toLong,
-              buf.take(40).map(x => s"${x._2}|${x._3}").mkString(" ;; ")))
-          else Iterator.empty
-        }.toDF("key", "rows", "set", "parent", "nullA", "emptyB", "sample")
-      val v = viol.collect()
-      // snapshot-keys variant of the production lambda: identical
-      // union-find WITH path compression, but keys materialized to an
-      // Array BEFORE the find() calls mutate the map during emission
-      val snap = union.as[(String, String, String)].groupByKey(_._1)
-        .flatMapGroups { (k, it) =>
-          val parent = scala.collection.mutable.HashMap[String, String]()
-          def add(x: String): Unit = if (!parent.contains(x)) parent(x) = x
-          def find(x: String): String = {
-            var rr = x
-            while (parent(rr) != rr) rr = parent(rr)
-            var c = x
-            while (parent(c) != rr) { val n = parent(c); parent(c) = rr; c = n }
-            rr
-          }
-          it.foreach { case (_, a, b) =>
-            if (b == null) add(a)
-            else {
-              add(a); add(b)
-              val ra = find(a); val rb = find(b)
-              if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-            }
-          }
-          val ks = parent.keys.toArray
-          ks.iterator.map(vv => (k, vv, find(vv)))
-        }.toDF("key", "v", "component")
-      val snapCount = snap.count()
-      // and the reference comps count in the same round, with per-stage
-      // record metrics: where do rows vanish — shuffle write, shuffle
-      // read, or the group operator's output?
+      val comps = nameRows.cogroup(pairRows) {
+          (doc: String, ns: Iterator[(String, Long)], ps: Iterator[(String, Long, Long)]) =>
+        val uf = new UnionFind[Long]
+        ps.foreach { case (_, a, b) => uf.union(a, b) }
+        ns.map { case (_, nid) => (doc, nid, uf.find(nid)) }
+      }
+      // per-stage record metrics: where do rows vanish — shuffle write,
+      // shuffle read, or the cogroup operator's output?
       val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -124,18 +69,13 @@ object DetCheck {
         }
       }
       spark.sparkContext.addSparkListener(listener)
-      val comps = ConnectedComponents.runPerKey(
-        names.select(col("doc_id").as("key"), col("name_norm").as("v")),
-        pairs.select(col("doc_id").as("key"), col("a"), col("b")))
       val got = comps.count()
       Thread.sleep(2000) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
-      val ok = v.isEmpty && got == expected && snapCount == expected
-      if (!ok) bad += 1
-      println(s"[det-check] round $r comps=$got snapKeys=$snapCount (exp $expected) violGroups=${v.length}")
+      if (got != expected) bad += 1
+      println(s"[det-check] round $r comps=$got (exp $expected)")
       if (got != expected)
         stages.values().forEach(s => println(s"[det-check]   $s"))
-      v.take(3).foreach(r => println(s"[det-check]   VIOL key=${r.getString(0)} rows=${r.getLong(1)} set=${r.getLong(2)} parent=${r.getLong(3)} nullA=${r.getLong(4)} emptyB=${r.getLong(5)} sample=${r.getString(6).take(400)}"))
     }
     println(s"[det-check] rounds=$rounds bad=$bad")
     spark.stop()

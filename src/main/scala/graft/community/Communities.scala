@@ -1,7 +1,7 @@
 package graft.community
 
 import graft.core._
-import graft.link.ConnectedComponents
+import graft.link.UnionFind
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * document node whose children are the communities. No GraphFrames /
   * igraph jar exists here, and community *membership* does not affect the
   * triple parity surface (SURVEY.md §7.5), so we compute communities as
-  * connected components via the same iterative DataFrame union-find used
-  * for linking, preserving the reference's structural invariants that its
-  * tests assert (tests/tools/test_community_builder.py:76-182):
+  * per-document connected components (the linker's per-group
+  * [[graft.link.UnionFind]]) refined by greedy modularity moves
+  * ([[LocalCommunities]]) in one doc-keyed cogroup, preserving the
+  * reference's structural invariants that its tests assert
+  * (tests/tools/test_community_builder.py:76-182):
   *   - partitions disjointly cover the level-0 nodes;
   *   - the level-1 edge set equals the set of community-crossing level-0
   *     edges (one per crossing source edge, description "");
@@ -40,7 +42,7 @@ object Communities {
       communityProperties: DataFrame, // PropertyRow-shaped (findings)
       docNodes: DataFrame, // level-2 NodeRow-shaped
       docProperties: DataFrame, // keyword properties of doc nodes
-      cleanup: () => Unit = () => ()) // frees comps/membership persists
+      cleanup: () => Unit = () => ()) // frees the membership persist
 
   // ids are codegen built-ins (Ids.idCol), not UDFs — see core/Schema.scala
   private def commIdUdf(doc: Column, minMember: Column): Column =
@@ -65,48 +67,39 @@ object Communities {
     val n0 = nodes.toDF()
       .withColumn("doc_id", element_at(col("metadata"), 1).getField("document_id"))
 
-    // --- components over the level-0 graph (per doc: node ids embed doc) --
-    val vertices = n0.select(col("doc_id").as("key"), col("id").as("v"))
-    val edgePairs = edges.toDF().select(
-      element_at(col("metadata"), 1).getField("document_id").as("key"),
-      col("frm").as("a"), col("to").as("b"))
-    spark.sparkContext.setJobDescription("graft-comm:components")
-    val comps = graft.core.Materialize.eager(
-      ConnectedComponents.runPerKey(vertices, edgePairs)
-        .select(col("key").as("doc_id"), col("v").as("node_id"), col("component")))
-
-    // Leiden-style refinement inside each component (components are
-    // per-document entity graphs — small — so this is a local flatMapGroups,
-    // not another distributed iteration). Member rows carry b = null.
+    // --- membership: ONE doc-keyed cogroup of (doc, node) with (doc, frm,
+    // to). Per-doc graphs are bounded by doc size, so component formation
+    // (the shared per-group UnionFind; undeclared edge endpoints bridge
+    // but are not emitted) and the Leiden-style refinement inside each
+    // component both run in one typed fold: each node leaves with the min
+    // member of its sub-community, all the community id depends on.
+    // Refinement is order-insensitive (sorted visits, integer weights,
+    // sorted candidates), so per-group row order cannot change a row.
     import spark.implicits._
-    val memberRows = comps.select(col("doc_id"), col("component"),
-      col("node_id").as("a"), lit(null).cast("string").as("b"))
-    val edgeComp = edgePairs
-      .join(comps, edgePairs("key") === comps("doc_id") && edgePairs("a") === comps("node_id"))
-      .select(comps("doc_id"), comps("component"), edgePairs("a"), edgePairs("b"))
-    val refined = memberRows.union(edgeComp)
-      .as[(String, String, String, String)]
-      .groupByKey { case (doc, compo, _, _) => (doc, compo) }
-      .flatMapGroups { (key: (String, String), rows: Iterator[(String, String, String, String)]) =>
-        val members = Vector.newBuilder[String]
-        val es = Vector.newBuilder[(String, String)]
-        rows.foreach { case (_, _, a, b) => if (b == null) members += a else es += ((a, b)) }
-        LocalCommunities.refine(members.result(), es.result()).map { case (nodeId, sub) =>
-          (key._1, nodeId, key._2 + "#" + sub)
+    val nodeRows = n0.select(col("doc_id"), col("id")).as[(String, String)].groupByKey(_._1)
+    val edgeRows = edges.toDF().select(
+      element_at(col("metadata"), 1).getField("document_id"), col("frm"), col("to"))
+      .as[(String, String, String)].groupByKey(_._1)
+    val minMembers = nodeRows.cogroup(edgeRows) {
+      (doc: String, ns: Iterator[(String, String)], es: Iterator[(String, String, String)]) =>
+        val uf = new UnionFind[String]
+        val members = ns.map(_._2).toVector
+        val pairs = es.map { case (_, a, b) => (a, b) }.toVector
+        pairs.foreach { case (a, b) => uf.union(a, b) }
+        // refine ignores edge endpoints outside the component's members
+        val compEdges = pairs.groupBy { case (a, _) => uf.find(a) }
+        members.groupBy(uf.find).iterator.flatMap { case (root, ms) =>
+          LocalCommunities.refine(ms, compEdges.getOrElse(root, Vector.empty))
+            .groupMap(_._2)(_._1).valuesIterator.flatMap { sub =>
+              val minMember = sub.min
+              sub.iterator.map(node => (doc, node, minMember))
+            }
         }
-      }
-      .toDF("doc_id", "node_id", "sub_component")
-
-    val commIds = refined
-      .groupBy(col("doc_id"), col("sub_component"))
-      .agg(min(col("node_id")).as("min_member"))
-      .select(col("doc_id"), col("sub_component"),
-        commIdUdf(col("doc_id"), col("min_member")).as("community_id"))
+    }.toDF("doc_id", "node_id", "min_member")
 
     spark.sparkContext.setJobDescription("graft-comm:membership")
-    val membership = graft.core.Materialize.eager(
-      refined.join(commIds, Seq("doc_id", "sub_component"))
-        .select(col("doc_id"), col("node_id"), col("community_id")))
+    val membership = graft.core.Materialize.eager(minMembers.select(col("doc_id"), col("node_id"),
+      commIdUdf(col("doc_id"), col("min_member")).as("community_id")))
     spark.sparkContext.setJobDescription(null)
 
     // --- level-0 nodes annotated with their community ---------------------
@@ -216,7 +209,7 @@ object Communities {
       communityProperties,
       docNodes.drop("doc_id"),
       docProperties,
-      () => { comps.unpersist(blocking = false); membership.unpersist(blocking = false) })
+      () => membership.unpersist(blocking = false))
   }
 
   /** F5 — community CSV rendering (reference

@@ -10,7 +10,7 @@ import scala.collection.mutable
   * crossing edges, unlike Leiden); this refinement runs greedy modularity
   * local moves *inside* each component. Components are per-document and
   * small by construction (entity graphs of single documents), so the
-  * refinement is a cheap driver-free `flatMapGroups` over components; a
+  * refinement runs inside the community layer's per-document cogroup; a
   * size cap keeps pathological components as single communities rather
   * than blowing up a task (documented scale valve).
   *

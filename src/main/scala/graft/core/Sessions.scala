@@ -75,10 +75,6 @@ object Sessions {
       new java.io.File("/dev/shm/spark-graft").mkdirs()
       b.config("spark.local.dir", "/dev/shm/spark-graft")
     }
-    // diagnostic toggle: disable GC-driven ContextCleaner cleanup
-    sys.env.get("GRAFT_NO_CLEANER").foreach { _ =>
-      b.config("spark.cleaner.referenceTracking", "false")
-    }
     // diagnostic toggle: arbitrary conf overrides ("k=v;k=v") — applied
     // LAST so A/B bisection runs can override any engine default above
     sys.env.get("GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>

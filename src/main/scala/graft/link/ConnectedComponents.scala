@@ -3,33 +3,35 @@ package graft.link
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Connected components / union-find over DataFrames — iterative min-label
-  * propagation to fixpoint (the union-find named in BASELINE.json
-  * north_rule; reference semantics: transitive closure of the fuzzy-match
-  * graph, eschergraph/tools/fuzzy_matcher.py:79-131).
+/** Connected components over DataFrames for graphs with NO bounded
+  * per-key size (the corpus-global near-dup graph of
+  * `Dedup.dedupClusters`); reference semantics: transitive closure of the
+  * fuzzy-match graph, eschergraph/tools/fuzzy_matcher.py:79-131.
+  * Per-document graphs (linking, communities) never come here: they fit
+  * one task, so their cogroups fold a local [[UnionFind]] instead.
+  * Two plans with one contract: iterative min-label propagation
+  * ([[run]], rounds = component diameter) and large-star/small-star
+  * ([[runBigStar]], O(log² n) rounds on any diameter).
   *
   * Input: `vertices(key, v)` and undirected `edges(key, a, b)`; `key`
-  * scopes independent graphs (here: doc_id), so labels never cross keys
-  * and the shuffle partitioning by (key, vertex) is skew-free even when
-  * one entity name is globally hot.
+  * scopes independent graphs, so labels never cross keys (the dedup
+  * callers pass one constant key: their near-dup graph is corpus-wide).
   *
   * Each iteration propagates the minimum label one hop and cuts the
   * accumulated plan at a persisted materialization (Materialize.stageCut:
   * plan truncated, RDD lineage kept — cluster-safe, unlike localCheckpoint
   * whose blocks are unrecoverable if a remote fetch fails); convergence is
   * detected via a
-  * changed-row count. Iterations are bounded by component diameter —
-  * alias clusters and per-doc relation graphs are shallow, so this
-  * converges in a handful of rounds regardless of corpus size. (At truly
-  * adversarial diameters, swap in large-star/small-star with the same
-  * contract.)
+  * changed-row count. Iterations are bounded by component diameter, so
+  * shallow graphs converge in a handful of rounds regardless of corpus
+  * size; graphs with long chains belong on [[runBigStar]].
   */
 object ConnectedComponents {
 
   /** Returns (key, v, component) with component = min label (string order)
     * over the vertex's component, one row per DECLARED vertex. Edge
     * endpoints absent from `vertices` still BRIDGE (they join components,
-    * exactly as in [[runPerKey]]'s union-find) but are not emitted.
+    * exactly as in [[UnionFind]]) but are not emitted.
     *
     * Superseded iteration caches are freed deterministically (only the
     * final labels stay persisted for the consumer); on non-convergence at
@@ -52,7 +54,7 @@ object ConnectedComponents {
         .distinct())
 
     // declared vertices + ghost endpoints (decl=false), so bridging through
-    // an undeclared endpoint matches runPerKey's union-find semantics
+    // an undeclared endpoint matches UnionFind's semantics
     val init = vertices.select(col("key"), col("v"), lit(true).as("decl"))
       .unionByName(edges.select(col("key"), col("a").as("v"), lit(false).as("decl")))
       .unionByName(edges.select(col("key"), col("b").as("v"), lit(false).as("decl")))
@@ -105,7 +107,7 @@ object ConnectedComponents {
     * edges(key,a,b)) → (key, v, component) with component = min member,
     * ghost endpoints bridge but are not emitted. This is the path for
     * graphs whose diameter is NOT bounded by construction (corpus-global
-    * linking chains); per-document graphs keep using [[runPerKey]].
+    * linking chains); per-document graphs use [[UnionFind]] in a cogroup.
     *
     * Each round is two (groupBy + join) passes over the current pair set:
     *   large-star: every neighbor v > u re-attaches to m = min(Γ(u) ∪ {u});
@@ -181,114 +183,5 @@ object ConnectedComponents {
       .join(lbl, Seq("key", "v"), "left")
       .select(col("key"), col("v"), coalesce(col("m"), col("v")).as("component"))
     (out, pRdd)
-  }
-
-  /** Per-key exact components in ONE shuffle: groupByKey(key) + local
-    * union-find with path compression inside flatMapGroups. Correct and
-    * far cheaper than the iterative path whenever a single key's subgraph
-    * fits in executor memory — which per-document entity graphs do by
-    * construction (a doc has bounded spans → bounded mentions), regardless
-    * of corpus size. The iterative [[run]] stays the fallback for graphs
-    * with unbounded per-key size (e.g. corpus-global linking).
-    *
-    * Component label = lexicographic min member, identical to [[run]]'s
-    * min-label fixpoint (union-by-min keeps the smaller root, so the root
-    * of every tree is its component's minimum).
-    */
-  def runPerKey(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val vRows = vertices.select(col("key"), col("v").as("a"), lit(null).cast("string").as("b"))
-    val eRows = edges.select(col("key"), col("a"), col("b"))
-    vRows.union(eRows).as[(String, String, String)]
-      .groupByKey(_._1)
-      .flatMapGroups { (key: String, rows: Iterator[(String, String, String)]) =>
-        val parent = scala.collection.mutable.HashMap[String, String]()
-        // edge endpoints absent from the vertex stream BRIDGE components
-        // but are not emitted — the same contract as [[run]]
-        val declared = scala.collection.mutable.HashSet[String]()
-        def add(x: String): Unit = if (!parent.contains(x)) parent(x) = x
-        def find(x: String): String = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        rows.foreach { case (_, a, b) =>
-          if (b == null) { add(a); declared += a }
-          else {
-            add(a); add(b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-          }
-        }
-        // SNAPSHOT the keys before emitting: find() path-compresses, i.e.
-        // WRITES to `parent`, and scala 2.13 mutable.HashMap.put checks the
-        // growth trigger BEFORE probing for the existing key — a value
-        // update can therefore RESIZE the table mid-iteration and the live
-        // keysIterator silently skips entries. Found as nondeterministic
-        // vertex loss (~10 ppm) on multi-executor runs only: shuffle-fetch
-        // arrival order varies union order, hence tree depth, hence whether
-        // compression fires during emission (DetCheck reproduces; local
-        // fetch order never hit the resize boundary).
-        val ks = parent.keys.toArray
-        ks.iterator.filter(declared).map(v => (key, v, find(v)))
-      }
-      .toDF("key", "v", "component")
-  }
-
-  /** [[runPerKey]] over 64-bit vertex ids: the groupByKey shuffle carries
-    * `(key, long, long)` rows instead of name strings — the linker's
-    * dictionary-encoded path (names are hashed to ids after the slim name
-    * table materializes; strings rejoin from that side table at cluster
-    * resolution). Same union-find, same contract: edge endpoints absent
-    * from the vertex stream bridge components but are not emitted.
-    *
-    * Component label = MIN id of the component — deterministic but NOT the
-    * lexicographic-min member name (ids are hashes); callers treat labels
-    * as opaque grouping keys, which is all the linker's resolution stage
-    * ever did with them.
-    *
-    * Vertex rows ride the same union as edge rows with `b` = the vertex id
-    * itself and a marker flag (a typed Dataset of primitive longs cannot
-    * carry the string path's `null` sentinel).
-    */
-  def runPerKeyLong(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val vRows = vertices.select(col("key"), col("v").as("a"), col("v").as("b"),
-      lit(true).as("is_v"))
-    val eRows = edges.select(col("key"), col("a"), col("b"), lit(false).as("is_v"))
-    vRows.union(eRows).as[(String, Long, Long, Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroups { (key: String, rows: Iterator[(String, Long, Long, Boolean)]) =>
-        val parent = new scala.collection.mutable.LongMap[Long]()
-        val declared = new scala.collection.mutable.LongMap[Boolean]()
-        def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        rows.foreach { case (_, a, b, isV) =>
-          if (isV) { add(a); declared(a) = true }
-          else {
-            add(a); add(b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-          }
-        }
-        // snapshot keys before emitting — find() path-compresses (writes),
-        // and LongMap, like HashMap, may grow mid-iteration; see the
-        // string twin above for the multi-executor row-loss post-mortem
-        val ks = new Array[Long](parent.size)
-        var i = 0
-        parent.foreachKey { k => ks(i) = k; i += 1 }
-        ks.iterator.filter(declared.contains).map(v => (key, v, find(v)))
-      }
-      .toDF("key", "v", "component")
   }
 }

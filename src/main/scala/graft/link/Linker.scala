@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *   1. blocking join — names exploded by normalized token, self-joined on
   *      (doc_id, token); a token_set_ratio >= 95 match requires a shared
   *      token, so blocking loses nothing while killing the O(n²);
-  *   2. connected components over the match graph (union-find as iterative
-  *      DataFrame joins — [[ConnectedComponents]]);
+  *   2. connected components over the match graph: a per-document
+  *      [[UnionFind]] inside the same doc-keyed cogroup that resolves
+  *      the clusters (one exchange per input, no iterative joins);
   *   3. deterministic cluster resolution mirroring the reference prompt's
   *      rules (identifying_nodes.jinja): canonical entities are the
   *      cluster's maximal names (token set not strictly contained in
@@ -233,9 +234,9 @@ object Linker {
     * live HttpExtractor) could rank ambiguous-member overrides against
     * different descriptions than the name table saw. Every in-repo caller
     * passes a checkpointed/persisted stage (BuildPipeline's logs stage,
-    * ShuffleProbe's eager cut); external callers with a lazy
+    * or an eager cut of the logs); external callers with a lazy
     * non-deterministic source must cut it first. A deterministic lazy
-    * plan (MappingDump) is correct but pays a second extraction pass. */
+    * plan is correct but pays a second extraction pass. */
   def canonicalMappingResult(logs: Dataset[ExtractionLog]): LinkResult = {
     val spark = logs.sparkSession
     import spark.implicits._
@@ -281,8 +282,7 @@ object Linker {
     // the name rows (id + name payload) with the match-pair rows (ids
     // only). Per-doc graphs are bounded by doc size, so the whole
     // component formation AND resolveCluster run inside a single typed
-    // fold — the same per-key 8-byte union-find the round-5 plan ran in
-    // ConnectedComponents.runPerKeyLong, now inlined so the round-5
+    // fold over the shared per-group [[UnionFind]], so the round-5
     // three-exchange chain (union-find groupByKey → comps⋈names rejoin →
     // second groupByKey((doc, component)) into resolveCluster) collapses
     // to one exchange per input. cogroup, NOT a unioned groupByKey: each
@@ -306,38 +306,17 @@ object Linker {
     val resolved = timed("resolved")(materialize(nameRows.cogroup(pairRows) {
       (doc: String, ns: Iterator[(String, Long, String, String)],
        ps: Iterator[(String, Long, Long)]) =>
-        // union-find over 8-byte ids with path compression (union-by-min
-        // is NOT needed here: labels are only grouping keys, and
-        // resolveCluster output is independent of which member roots)
-        val parent = new scala.collection.mutable.LongMap[Long]()
-        val members = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
-        def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        ns.foreach { case (_, nid, norm, display) =>
-          add(nid); members += ((nid, norm, display))
-        }
-        ps.foreach { case (_, a, b) =>
-          add(a); add(b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
+        // union-find over 8-byte ids (roots are opaque here: resolveCluster
+        // output is independent of which member roots its component)
+        val uf = new UnionFind[Long]
+        ps.foreach { case (_, a, b) => uf.union(a, b) }
         // group declared members by component root; every name row is
         // retained as its own member (two same-doc names colliding on
         // xxhash64 would both appear, exactly like the pre-fusion rejoin)
-        val byComp = scala.collection.mutable.LongMap
-          .empty[scala.collection.mutable.ArrayBuffer[(String, String, String)]]
-        members.foreach { case (nid, norm, display) =>
-          byComp.getOrElseUpdate(find(nid),
-            scala.collection.mutable.ArrayBuffer.empty) += ((norm, display, ""))
-        }
+        val byComp = ns.toVector.groupMap(n => uf.find(n._2)) { case (_, _, norm, display) =>
+          (norm, display, "") }
         byComp.valuesIterator.flatMap { ms =>
-          resolveCluster(ms.toVector)
+          resolveCluster(ms)
             .map(r => (doc, r.name_norm, r.canonical_norm, r.canonical, r.candidates))
         }
       }

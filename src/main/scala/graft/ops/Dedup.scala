@@ -212,13 +212,10 @@ object Dedup {
       // size(ids) after collecting would still accumulate a boilerplate
       // shingle's entire posting list (millions of ids at corpus scale)
       // in one aggregation buffer before discarding it.
-      // with the exploded stream uncached, stage-cut the (tiny, O(#hot
-      // shingles)) hot table itself: it feeds BOTH the grouped and the
-      // docFeats stage-cuts, and leaving it lazy makes each of them
-      // recompute the aggregation — a fourth full-corpus shingle scan
       // ALWAYS stage-cut the (tiny, O(#hot shingles)) hot table: its two
-      // consumers sit in DIFFERENT jobs (the `grouped` stage cut's
-      // anti-join broadcast and the final job's left-join broadcast), so
+      // consumers sit in DIFFERENT jobs (the `docFeats` stage cut's
+      // left-join broadcast and the final job's anti-join broadcast under
+      // the lazy `grouped`), so
       // without a cut the full-corpus hot aggregation runs once per
       // broadcast — exchange reuse never applies across jobs. One tiny
       // barrier buys back a full exploded-stream aggregation.
@@ -235,7 +232,7 @@ object Dedup {
       // bounded by the cap. The r5 stage cut here paid a barrier plus a
       // cache copy of every ids array to save that duplicate final merge —
       // measured at sf0.1 (QTime min of 5): cut 4.45 s, lazy 2.05 s, rows
-      // identical, shuffle 38→32 MiB, jobs 16→13. (Contrast `hot` below,
+      // identical, shuffle 38→32 MiB, jobs 16→13. (Contrast `hot` above,
       // whose consumers are in DIFFERENT jobs — exchange reuse never
       // applies across jobs, so its cut stays.) Pairs expand through a
       // posexplode self-join on (group, i < j) — pure codegen, and

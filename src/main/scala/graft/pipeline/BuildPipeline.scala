@@ -90,7 +90,7 @@ object BuildPipeline {
     // handles of the no-workdir stage cuts, so BuildResult.cleanup can free
     // them deterministically once the caller has persisted the outputs —
     // a long-running stream would otherwise accumulate ~9 cached RDDs per
-    // micro-batch until driver GC (or forever under GRAFT_NO_CLEANER)
+    // micro-batch until driver GC
     val cuts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
     // The input table has THREE consumers (chunk packing, visual-span

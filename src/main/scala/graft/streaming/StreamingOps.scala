@@ -101,14 +101,17 @@ object StreamingOps {
     * fixed costs (provider init, delta file, commit) for a state holding
     * O(file) rows (guide §2.2: fewer, larger partitions when partitions
     * are tiny). Production streams go through [[StreamingBuild]] on the
-    * caller's own session and keep its scale-adaptive setting; the count
-    * here is parameterised for measurement (GRAFT_STREAM_BRIDGE_PARTITIONS).
+    * caller's own session and keep its scale-adaptive setting.
     * forceDeleteTempCheckpointLocation: the bridge's throwaway temp
-    * checkpoint is deleted on stop instead of warning at session exit. */
+    * checkpoint is deleted on stop instead of warning at session exit.
+    *
+    * The clone builds its SQLConf from the SparkContext's conf: runtime
+    * `spark.conf.set` values of the caller's session are NOT inherited
+    * (nor are its temp views), and the returned DataFrame stays bound to
+    * the clone. */
   private def bridgeSession(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_BRIDGE_PARTITIONS", "8"))
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     s.conf.set("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
     s
   }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.community.LocalCommunities
+import graft.community.{Communities, LocalCommunities}
+import graft.core._
 
 class CommunitySpec extends SparkSpec {
 
@@ -64,5 +65,42 @@ class CommunitySpec extends SparkSpec {
     // edge still renders (reference _filter_edges: either endpoint)
     assert(csv("c2")._1 === "node_name,property")
     assert(csv("c2")._2 === "from,to,description\nBeta Labs,Gamma Inc,supplies")
+  }
+
+  test("Communities.build: per-doc components refined, ghosts bridge unseen, ids per doc") {
+    import spark.implicits._
+    def node(doc: String, n: String) =
+      NodeRow(s"$doc:$n", n, "", 0, is_visual = false, "", Seq.empty, Seq(Meta(doc, 0)))
+    def edge(doc: String, a: String, b: String) =
+      EdgeRow(s"$doc:$a-$b", s"$doc:$a", s"$doc:$b", "rel", Seq(Meta(doc, 0)))
+    val barbell = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x"))
+    val docs = Seq("d1", "d2")
+    // same barbell in both docs; d1 also has an isolated node and an edge
+    // to an endpoint that is never declared as a node
+    val nodes = docs.flatMap(d => Seq("a", "b", "c", "x", "y", "z").map(node(d, _))) :+ node("d1", "solo")
+    val edges = docs.flatMap(d => barbell.map { case (a, b) => edge(d, a, b) }) :+ edge("d1", "a", "ghost")
+    val layer = Communities.build(nodes.toDS(), edges.toDS(), Seq.empty[PropertyRow].toDS(),
+      docs.map(d => (d, Seq("kw"))).toDF("doc_id", "keywords"),
+      docs.map(d => (d, "summary")).toDF("doc_id", "summary"))
+    try {
+      val got = layer.nodesWithCommunity.select("id", "community_id").as[(String, String)]
+        .collect().toMap
+      assert(got.keySet === nodes.map(_.id).toSet, "every declared node once, the ghost never")
+      def comm(doc: String, minMember: String) = Ids.communityId(doc, s"$doc:$minMember", 1)
+      val expect = docs.flatMap { d =>
+        Seq("a", "b", "c").map(n => s"$d:$n" -> comm(d, "a")) ++
+          Seq("x", "y", "z").map(n => s"$d:$n" -> comm(d, "x"))
+      }.toMap + ("d1:solo" -> comm("d1", "solo"))
+      assert(got === expect)
+      val commNodes = layer.communityNodes.select("id", "child_ids").as[(String, Seq[String])]
+        .collect().toMap
+      assert(commNodes.keySet === expect.values.toSet)
+      assert(commNodes(comm("d1", "solo")) === Seq("d1:solo"))
+      assert(!commNodes.values.flatten.exists(_.contains("ghost")))
+      // the c-x bridge crosses communities once per doc; the ghost edge
+      // has no community on its far end
+      assert(layer.communityEdges.select("frm", "to").as[(String, String)].collect().toSet ===
+        docs.map(d => (comm(d, "a"), comm(d, "x"))).toSet)
+    } finally layer.cleanup()
   }
 }

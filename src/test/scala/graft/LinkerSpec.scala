@@ -2,7 +2,7 @@ package graft
 
 import graft.core._
 import graft.functions.TextFns
-import graft.link.{ConnectedComponents, Linker}
+import graft.link.{ConnectedComponents, Linker, UnionFind}
 import org.apache.spark.sql.functions._
 
 /** Linking semantics: token_set_ratio fixtures, cluster resolution
@@ -10,6 +10,15 @@ import org.apache.spark.sql.functions._
   * connected components vs brute-force transitive closure (seeded
   * property-style sweep). */
 class LinkerSpec extends SparkSpec {
+
+  /** Per-group labels from the shared UnionFind: each declared vertex
+    * labelled with the min member of its component (the contract of
+    * ConnectedComponents.run), ghost endpoints bridging but not emitted. */
+  private def unionFindLabels(vs: Seq[String], es: Seq[(String, String)]): Seq[(String, String)] = {
+    val uf = new UnionFind[String]
+    es.foreach { case (a, b) => uf.union(a, b) }
+    vs.groupBy(uf.find).values.toSeq.flatMap(c => c.map(_ -> c.min))
+  }
 
   test("token_set_ratio: subset aliases score 100, distinct names do not match") {
     assert(TextFns.tokenSetRatio("Lennart", "Lennart Timmermans") === 100)
@@ -85,9 +94,7 @@ class LinkerSpec extends SparkSpec {
       val got = ConnectedComponents.run(
           vs.toDF("key", "v"), es.toDF("key", "a", "b"))
         .collect().map(r => r.getString(1) -> r.getString(2)).toMap
-      val gotPerKey = ConnectedComponents.runPerKey(
-          vs.toDF("key", "v"), es.toDF("key", "a", "b"))
-        .collect().map(r => r.getString(1) -> r.getString(2)).toMap
+      val gotUnionFind = unionFindLabels(vs.map(_._2), es.map(e => (e._2, e._3))).toMap
       val gotBigStar = ConnectedComponents.runBigStar(
           vs.toDF("key", "v"), es.toDF("key", "a", "b"))
         .collect().map(r => r.getString(1) -> r.getString(2)).toMap
@@ -102,7 +109,7 @@ class LinkerSpec extends SparkSpec {
         v -> vs.map(_._2).filter(u => find(u) == find(v)).min
       }.toMap
       assert(got === expect, s"pairs=$pairs")
-      assert(gotPerKey === expect, s"(perKey) pairs=$pairs")
+      assert(gotUnionFind === expect, s"(UnionFind) pairs=$pairs")
       assert(gotBigStar === expect, s"(bigStar) pairs=$pairs")
     }
   }
@@ -146,38 +153,40 @@ class LinkerSpec extends SparkSpec {
     assert(empty === Map("a" -> "a", "b" -> "b", "z" -> "z"))
   }
 
-  test("runPerKey conserves every vertex at HashMap growth-trigger sizes") {
-    // regression: the fold once emitted via parent.keysIterator while
-    // find() was still path-compressing; scala 2.13 HashMap.put checks the
-    // growth trigger BEFORE probing for the existing key, so a value
-    // update on an existing key can RESIZE the table mid-iteration and
-    // the live iterator skips entries. 11 members (trigger = 12 at the
-    // default capacity 16) + a chain that leaves a deep uncompressed path
-    // at emission is the smallest shape that can fire it.
-    import spark.implicits._
-    val vs = (0 to 10).map(i => ("k", f"v$i%02d"))
-    val es = (9 to 0 by -1).map(i => ("k", f"v$i%02d", f"v${i + 1}%02d"))
-    val out = ConnectedComponents.runPerKey(
-        vs.toDF("key", "v").coalesce(1), es.toDF("key", "a", "b").coalesce(1))
-      .collect().map(r => (r.getString(1), r.getString(2)))
-    assert(out.map(_._1).sorted.toSeq === vs.map(_._2).sorted.toSeq,
-      "every vertex must be emitted exactly once")
+  test("UnionFind conserves every vertex at HashMap growth-trigger sizes") {
+    // regression: the map-backed per-key folds once emitted via
+    // parent.keysIterator while find() was still path-compressing; scala
+    // 2.13 HashMap.put checks the growth trigger BEFORE probing for the
+    // existing key, so a value update could RESIZE the table mid-iteration
+    // and the live iterator skipped entries. 11 members (trigger = 12 at
+    // the default capacity 16) + a chain that leaves a deep uncompressed
+    // path at emission is the smallest shape that could fire it; the
+    // array-backed forest must emit every vertex exactly once, also while
+    // iterating its keys past the initial array capacity.
+    val vs = (0 to 10).map(i => f"v$i%02d")
+    val es = (9 to 0 by -1).map(i => (f"v$i%02d", f"v${i + 1}%02d"))
+    val out = unionFindLabels(vs, es)
+    assert(out.map(_._1).sorted === vs.sorted, "every vertex must be emitted exactly once")
     assert(out.forall(_._2 == "v00"), "single chain => one component rooted at min")
+    val big = (0 until 40).map(i => f"w$i%02d")
+    val chain = unionFindLabels(big, big.reverse.zip(big.reverse.tail))
+    assert(chain.map(_._1).sorted === big.sorted)
+    assert(chain.forall(_._2 == "w00"))
   }
 
-  test("undeclared edge endpoints bridge but are not emitted (run == runPerKey)") {
+  test("undeclared edge endpoints bridge but are not emitted (run == UnionFind)") {
     import spark.implicits._
-    val vs = Seq(("k", "a"), ("k", "b")).toDF("key", "v")
+    val vs = Seq(("k", "a"), ("k", "b"))
     // "x" never appears as a vertex: it must connect a and b into one
     // component without appearing in the output of either implementation
-    val es = Seq(("k", "a", "x"), ("k", "x", "b")).toDF("key", "a", "b")
+    val es = Seq(("k", "a", "x"), ("k", "x", "b"))
     val expect = Map("a" -> "a", "b" -> "a")
-    val got = ConnectedComponents.run(vs, es)
+    val got = ConnectedComponents.run(vs.toDF("key", "v"), es.toDF("key", "a", "b"))
       .collect().map(r => r.getString(1) -> r.getString(2)).toMap
-    val gotPerKey = ConnectedComponents.runPerKey(vs, es)
-      .collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    val gotUnionFind = unionFindLabels(vs.map(_._2), es.map(e => (e._2, e._3)))
     assert(got === expect)
-    assert(gotPerKey === expect)
+    assert(gotUnionFind.toMap === expect)
+    assert(gotUnionFind.length === 2)
   }
 
   test("prefix blocking reaches single-token spelling variants") {
