@@ -140,7 +140,7 @@ leg() {
     -cp "$CLASSES:/opt/spark/jars/*" \
     graft.app.ScalingBench cluster $MASTER_URL $((k*8)) $NDOCS $CSV \
     2>&1 | tee /tmp/graft-scaling-driver-${k}x.log \
-         | grep -E "\[scaling|\[stage-timing|\[link-timing" || true
+         | grep -E "\[scaling|\[stage-timing" || true
   cleanup
 }
 

@@ -97,10 +97,10 @@ object Communities {
         }
     }.toDF("doc_id", "node_id", "min_member")
 
-    spark.sparkContext.setJobDescription("graft-comm:membership")
-    val membership = graft.core.Materialize.eager(minMembers.select(col("doc_id"), col("node_id"),
-      commIdUdf(col("doc_id"), col("min_member")).as("community_id")))
-    spark.sparkContext.setJobDescription(null)
+    val membership = graft.core.Par.labelled(spark, "graft-comm:membership") {
+      graft.core.Materialize.eager(minMembers.select(col("doc_id"), col("node_id"),
+        commIdUdf(col("doc_id"), col("min_member")).as("community_id")))
+    }
 
     // --- level-0 nodes annotated with their community ---------------------
     val nodesWithCommunity = n0

@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   * overlap instead of paying one job-latency each, and in local mode it
   * keeps cores busy through the small stage-boundary jobs that otherwise
   * serialize the build (~1-2 s scheduling+shuffle latency apiece).
+  * [[labelled]] names the jobs of each such branch, so a profile can
+  * attribute them.
   */
 object Par {
 
@@ -17,10 +19,38 @@ object Par {
         val t = new Thread(r, "graft-par"); t.setDaemon(true); t
       })
 
-  /** Run `body` on the pool; the active SparkSession is thread-local, so
-    * re-pin it before any SQL work. */
-  def fork[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] =
-    scala.concurrent.Future { SparkSession.setActiveSession(spark); body }(pool)
+  private val JobDescription = "spark.job.description"
+
+  /** Run `body` on the pool; the active SparkSession and the job label are
+    * thread-local, so re-pin both to the caller's before any SQL work (a
+    * reused pool thread otherwise keeps whatever label it last ran under). */
+  def fork[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] = {
+    val label = spark.sparkContext.getLocalProperty(JobDescription)
+    scala.concurrent.Future {
+      SparkSession.setActiveSession(spark)
+      spark.sparkContext.setJobDescription(label)
+      body
+    }(pool)
+  }
+
+  /** Run `body` with every Spark job it submits from this thread labelled
+    * `label` (`spark.job.description`: the UI and `graft.app.Profile`
+    * attribute jobs by it, and AQE sub-jobs inherit it). The previous label
+    * is restored even when `body` throws, so a nested label never leaves
+    * its caller's later jobs unlabelled. `GRAFT_STAGE_TIMING` prints the
+    * wall of each labelled body. */
+  def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    val t0 = System.nanoTime()
+    sc.setJobDescription(label)
+    try body
+    finally {
+      sc.setJobDescription(prev)
+      if (sys.env.contains("GRAFT_STAGE_TIMING"))
+        System.err.println(f"[stage-timing] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+    }
+  }
 
   def await[T](f: scala.concurrent.Future[T]): T =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
@@ -81,7 +111,7 @@ object Materialize {
 
   /** [[stageCut]] plus the persisted RDD handle, for iterative callers
     * that free superseded iterations deterministically (the CC loop would
-    * otherwise pin one full label-table copy per iteration for the
+    * otherwise pin one full pair-table copy per iteration for the
     * session's lifetime). Unpersisting early is always safe: the RDD
     * lineage is kept, so a late consumer recomputes instead of failing. */
   def stageCutHandle(df: org.apache.spark.sql.DataFrame)
@@ -118,25 +148,5 @@ object Materialize {
     val rdd = df.queryExecution.toRdd.map(_.copy())
       .persist(CacheLevel)
     (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema), rdd)
-  }
-
-  /** [[stageCutHandle]] that additionally counts rows whose BOOLEAN column
-    * at `boolOrdinal` is true, folded into the SAME materializing action
-    * via an accumulator (foreach over the persisted InternalRow RDD — a
-    * plain RDD action, no external-Row conversion). One job instead of
-    * two per iteration for loops whose convergence probe is a
-    * changed-row count (the min-label CC). Accumulator updates inside an
-    * action are applied exactly once per task, so the count is exact. */
-  def stageCutHandleFlagCount(df: org.apache.spark.sql.DataFrame, boolOrdinal: Int)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-         Long) = {
-    val spark = df.sparkSession
-    val acc = spark.sparkContext.longAccumulator("stage-cut-flag-count")
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(CacheLevel)
-    rdd.foreach(r => if (!r.isNullAt(boolOrdinal) && r.getBoolean(boolOrdinal)) acc.add(1L))
-    (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema),
-      rdd, acc.value)
   }
 }

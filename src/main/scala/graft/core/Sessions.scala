@@ -26,8 +26,7 @@ import org.apache.spark.sql.SparkSession
   * The four SQL-level settings below are the engine's session defaults
   * (formerly mutated inside BuildPipeline.run — a build must NOT leak conf
   * changes into a caller's session, so they live here, set once at
-  * construction; `GRAFT_EXTRA_CONF` below still overrides any of them for
-  * A/B runs):
+  * construction):
   *
   *   - `autoBroadcastJoinThreshold=-1` — corpus-proportional intermediates
   *     must never be driver-broadcast: building + java-serializing an
@@ -75,12 +74,6 @@ object Sessions {
       new java.io.File("/dev/shm/spark-graft").mkdirs()
       b.config("spark.local.dir", "/dev/shm/spark-graft")
     }
-    // diagnostic toggle: arbitrary conf overrides ("k=v;k=v") — applied
-    // LAST so A/B bisection runs can override any engine default above
-    sys.env.get("GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k.trim, v.trim)
-    })
     b
   }
 

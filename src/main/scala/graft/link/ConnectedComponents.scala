@@ -9,105 +9,29 @@ import org.apache.spark.sql.functions._
   * fuzzy-match graph, eschergraph/tools/fuzzy_matcher.py:79-131.
   * Per-document graphs (linking, communities) never come here: they fit
   * one task, so their cogroups fold a local [[UnionFind]] instead.
-  * Two plans with one contract: iterative min-label propagation
-  * ([[run]], rounds = component diameter) and large-star/small-star
-  * ([[runBigStar]], O(log² n) rounds on any diameter).
   *
   * Input: `vertices(key, v)` and undirected `edges(key, a, b)`; `key`
   * scopes independent graphs, so labels never cross keys (the dedup
   * callers pass one constant key: their near-dup graph is corpus-wide).
   *
-  * Each iteration propagates the minimum label one hop and cuts the
-  * accumulated plan at a persisted materialization (Materialize.stageCut:
-  * plan truncated, RDD lineage kept — cluster-safe, unlike localCheckpoint
-  * whose blocks are unrecoverable if a remote fetch fails); convergence is
-  * detected via a
-  * changed-row count. Iterations are bounded by component diameter, so
-  * shallow graphs converge in a handful of rounds regardless of corpus
-  * size; graphs with long chains belong on [[runBigStar]].
+  * One plan, large-star/small-star ([[runBigStar]]): its round count is
+  * O(log² n) on any diameter. Min-label propagation needs one round per
+  * hop of diameter, so any fixed round cap splits a deep enough chain, and
+  * it was no faster on q_dedup_clusters' shallow sf0.1 graph (4 cores,
+  * best of 8 warm runs per JVM: 3.9–4.0 s min-label, 2.9–4.4 s here).
   */
 object ConnectedComponents {
-
-  /** Returns (key, v, component) with component = min label (string order)
-    * over the vertex's component, one row per DECLARED vertex. Edge
-    * endpoints absent from `vertices` still BRIDGE (they join components,
-    * exactly as in [[UnionFind]]) but are not emitted.
-    *
-    * Superseded iteration caches are freed deterministically (only the
-    * final labels stay persisted for the consumer); on non-convergence at
-    * `maxIter` the partial labels are still returned — one component may
-    * be reported as several — with a loud stderr warning, since silently
-    * splitting a component would corrupt dedup groups downstream. */
-  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame =
-    runHandle(vertices, edges, maxIter)._1
-
-  /** [[run]] plus the final persisted label RDD, so long-lived callers can
-    * free the one cache this loop leaves behind deterministically (the
-    * lineage is kept — a post-unpersist consumer recomputes instead of
-    * failing). */
-  def runHandle(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    // adjacency in both directions, deduped
-    val (adj, adjRdd) = graft.core.Materialize.stageCutHandle(
-      edges.select(col("key"), col("a"), col("b"))
-        .union(edges.select(col("key"), col("b").as("a"), col("a").as("b")))
-        .distinct())
-
-    // declared vertices + ghost endpoints (decl=false), so bridging through
-    // an undeclared endpoint matches UnionFind's semantics
-    val init = vertices.select(col("key"), col("v"), lit(true).as("decl"))
-      .unionByName(edges.select(col("key"), col("a").as("v"), lit(false).as("decl")))
-      .unionByName(edges.select(col("key"), col("b").as("v"), lit(false).as("decl")))
-      .groupBy(col("key"), col("v")).agg(max(col("decl")).as("decl"))
-      .select(col("key"), col("v"), col("v").as("label"), col("decl"))
-    var (labels, labelsRdd) = graft.core.Materialize.stageCutHandle(init)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = adj
-        .join(labels, adj("key") === labels("key") && adj("a") === labels("v"))
-        .groupBy(adj("key").as("nk"), adj("b").as("nv"))
-        .agg(min(col("label")).as("nbr_label"))
-      val updated = labels
-        .join(nbrMin, labels("key") === col("nk") && labels("v") === col("nv"), "left")
-        .select(
-          labels("key"),
-          labels("v"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("new_label"),
-          labels("decl"),
-          (col("nbr_label").isNotNull && col("nbr_label") < col("label")).as("changed"))
-      val t0 = System.nanoTime()
-      // changed-row probe folded into the materializing action itself
-      // (accumulator over the persisted rows, ordinal 4 = `changed`) —
-      // one job per iteration where the round-5 loop paid two
-      val (cp, cpRdd, changed) =
-        graft.core.Materialize.stageCutHandleFlagCount(updated, 4)
-      labelsRdd.unpersist(blocking = false) // superseded; cp holds the data
-      labelsRdd = cpRdd
-      labels = cp.select(col("key"), col("v"), col("new_label").as("label"), col("decl"))
-      converged = changed == 0L
-      iter += 1
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[cc-timing] iter=$iter changed=${changed > 0} ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    }
-    adjRdd.unpersist(blocking = false)
-    if (!converged)
-      System.err.println(s"[graft] WARNING: connected components did NOT converge in " +
-        s"$maxIter iterations — a component with diameter > $maxIter is split into " +
-        s"several labels; raise maxIter (or use large-star/small-star) for this graph")
-    (labels.filter(col("decl")).select(col("key"), col("v"), col("label").as("component")),
-      labelsRdd)
-  }
 
   /** Large-star/small-star connected components (Kiveris et al. 2014,
     * "Connected Components in MapReduce and Beyond", public algorithm) —
     * the alternating star-contraction whose round count is O(log² n)
-    * on ANY graph, vs [[run]]'s min-label propagation whose rounds equal
-    * the component diameter. Same contract as [[run]]: (vertices(key,v),
-    * edges(key,a,b)) → (key, v, component) with component = min member,
-    * ghost endpoints bridge but are not emitted. This is the path for
-    * graphs whose diameter is NOT bounded by construction (corpus-global
-    * linking chains); per-document graphs use [[UnionFind]] in a cogroup.
+    * on ANY graph. Contract: (vertices(key,v), edges(key,a,b)) →
+    * (key, v, component) with component = min member (string order), one
+    * row per DECLARED vertex; edge endpoints absent from `vertices` still
+    * BRIDGE (they join components, exactly as in [[UnionFind]]) but are
+    * not emitted. This is the path for graphs whose diameter is NOT
+    * bounded by construction (corpus-global near-dup chains);
+    * per-document graphs use [[UnionFind]] in a cogroup.
     *
     * Each round is two (groupBy + join) passes over the current pair set:
     *   large-star: every neighbor v > u re-attaches to m = min(Γ(u) ∪ {u});
@@ -118,11 +42,19 @@ object ConnectedComponents {
     * cached iterations, not a checksum. At fixpoint the relation is a
     * star: every non-root points directly at its component minimum. */
   def runBigStar(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame =
-    runBigStarHandle(vertices, edges, maxIter)._1
+    vertices.select(col("key"), col("v"))
+      .join(runBigStarHandle(edges, maxIter)._1, Seq("key", "v"), "left")
+      .select(col("key"), col("v"), coalesce(col("component"), col("v")).as("component"))
 
-  /** [[runBigStar]] plus the final persisted RDD for deterministic cache
-    * release (same discipline as [[runHandle]]). */
-  def runBigStarHandle(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40)
+  /** The contraction behind [[runBigStar]], without the declared vertices:
+    * (key, v, component) for every edge endpoint whose component minimum
+    * is not itself. Roots have no row, so a caller labels any vertex
+    * missing here with itself. Plus the final persisted RDD, so long-lived
+    * callers can free the one cache this loop leaves behind
+    * deterministically (the lineage is kept: a post-unpersist consumer
+    * recomputes instead of failing). Superseded iteration caches are freed
+    * as the loop goes. */
+  def runBigStarHandle(edges: DataFrame, maxIter: Int = 40)
       : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
     // canonical orientation u > v; self-loops dropped; set semantics
     val init = edges
@@ -174,14 +106,10 @@ object ConnectedComponents {
     if (!converged)
       System.err.println(s"[graft] WARNING: large-star/small-star did NOT reach its " +
         s"fixpoint in $maxIter rounds — labels may split a component; raise maxIter")
-    // fixpoint relation is a star (u → component min); roots and isolated
-    // declared vertices label themselves. min() guards a non-converged
-    // partial relation where u could still carry several parents.
-    val lbl = p.groupBy("key", "u").agg(min("v").as("m"))
-      .select(col("key"), col("u").as("v"), col("m"))
-    val out = vertices.select(col("key"), col("v"))
-      .join(lbl, Seq("key", "v"), "left")
-      .select(col("key"), col("v"), coalesce(col("m"), col("v")).as("component"))
-    (out, pRdd)
+    // the fixpoint relation is a star: one row u → component min per
+    // non-root. min() guards a non-converged partial relation, where u
+    // could still carry several parents.
+    val star = if (converged) p else p.groupBy("key", "u").agg(min("v").as("v"))
+    (star.select(col("key"), col("u").as("v"), col("v").as("component")), pRdd)
   }
 }

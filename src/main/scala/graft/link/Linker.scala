@@ -83,7 +83,7 @@ object Linker {
     * union concatenates the branches' partitions, so a (doc, name) seen by
     * several branches never collapses in the same map-side partial
     * aggregation, and the name-rollup exchange grew ~9% at 96k docs
-    * (ShuffleProbe) while the interpreted explode itself profiled at only
+    * (build shuffle write) while the interpreted explode itself profiled at only
     * ~0.2 s per full pass at sf0.1. */
   def mentionsRaw(logs: Dataset[ExtractionLog]): DataFrame = {
     def m(display: Column, description: Column, isProp: Boolean) =
@@ -241,16 +241,6 @@ object Linker {
     val spark = logs.sparkSession
     import spark.implicits._
 
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.setJobDescription(s"graft-link:$what")
-      val out = body
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[link-timing] $what%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    }
-
     def materialize(df: DataFrame): DataFrame = graft.core.Materialize.eager(df)
 
     // SLIM name table straight from the logs: the blocking join,
@@ -266,11 +256,11 @@ object Linker {
     // EAGER: the name table has three consumers inside the `resolved` job
     // (the fused resolve's nameRows and both sides of the prefix-blocking
     // self-join). A lazy plan was measured to RE-RUN the mention-explode
-    // rollup per consumer at 96k docs (ShuffleProbe: linker shuffle
+    // rollup per consumer at 96k docs (graft-link:* shuffle write:
     // 505 -> 1406 MiB — the rollup's exchange was not reused across the
     // three differently-projected subtrees), so the one-barrier cut is
     // the cheaper trade at scale.
-    val names = timed("names")(materialize(uniqueNamesSlim(logs)))
+    val names = Par.labelled(spark, "graft-link:names")(materialize(uniqueNamesSlim(logs)))
     // Dictionary encoding: a 64-bit xxhash64 id per name. Pair rows carry
     // 8-byte ids instead of name strings (matchedPairIds). A same-doc id
     // collision would merge two names; at ~2^-64 per same-doc name pair it
@@ -303,7 +293,7 @@ object Linker {
       .as[(String, Long, String, String)]
       .groupByKey(_._1)
     val pairRows = pairs.as[(String, Long, Long)].groupByKey(_._1)
-    val resolved = timed("resolved")(materialize(nameRows.cogroup(pairRows) {
+    val resolved = Par.labelled(spark, "graft-link:resolved")(materialize(nameRows.cogroup(pairRows) {
       (doc: String, ns: Iterator[(String, Long, String, String)],
        ps: Iterator[(String, Long, Long)]) =>
         // union-find over 8-byte ids (roots are opaque here: resolveCluster

@@ -88,16 +88,6 @@ object GraphTables {
     val spark = logs.sparkSession
     import spark.implicits._
 
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.setJobDescription(s"graft-mat:$what")
-      val out = body
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[mat-timing] $what%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    }
-
     // ---- node mentions → nodes ---------------------------------------
     val mentions = logs
       .select(col("doc_id"), col("chunk_id"), col("is_visual"),
@@ -141,7 +131,8 @@ object GraphTables {
     // materialized once: consumed as the nodes table AND as the endpoint
     // resolution map for edges/properties. Independent of the edge-mention
     // resolution below — the two materializations overlap (Par).
-    val nodesF = Par.fork(spark)(timed("nodes_map")(graft.core.Materialize.eager(nodesPlan)))
+    val nodesF = Par.fork(spark)(
+      Par.labelled(spark, "graft-mat:nodes_map")(Materialize.eager(nodesPlan)))
 
     lazy val nodes = Par.await(nodesF)
     lazy val nodeKeys = nodes.select(col("doc_id").as("nk_doc"), col("canonical_norm").as("nk_name"),
@@ -157,7 +148,7 @@ object GraphTables {
         lower(trim(col("e.source"))).as("src_norm"), lower(trim(col("e.target"))).as("dst_norm"))
 
     // materialized once: dropped/triples/edges all branch from this join
-    val resolved = timed("edge_resolve")(graft.core.Materialize.eager(resolveNames(
+    val resolved = Par.labelled(spark, "graft-mat:edge_resolve")(Materialize.eager(resolveNames(
         resolveNames(edgeMentions, mapping, "src_norm", "s"), mapping, "dst_norm", "d")
       .withColumnRenamed("s_canon_norm", "src_canon_norm")
       .withColumnRenamed("s_canon", "src_canon")

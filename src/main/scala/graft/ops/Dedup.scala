@@ -231,7 +231,7 @@ object Dedup {
       // it; only the cheap final collect_set merge runs once per side,
       // bounded by the cap. The r5 stage cut here paid a barrier plus a
       // cache copy of every ids array to save that duplicate final merge —
-      // measured at sf0.1 (QTime min of 5): cut 4.45 s, lazy 2.05 s, rows
+      // measured at sf0.1 (min of 5 cold runs): cut 4.45 s, lazy 2.05 s, rows
       // identical, shuffle 38→32 MiB, jobs 16→13. (Contrast `hot` above,
       // whose consumers are in DIFFERENT jobs — exchange reuse never
       // applies across jobs, so its cut stays.) Pairs expand through a
@@ -459,46 +459,35 @@ object Dedup {
     * a similarity graph whose connected components are dedup groups; one
     * canonical survivor (min id) is kept per group. Pairs come from any of
     * the pair generators above. The graph is corpus-global (no doc key
-    * bounds a component), so this exercises the ITERATIVE DataFrame
-    * union-find — min-label propagation rounds are bounded by component
-    * diameter, which near-dup transitivity keeps shallow.
+    * bounds a component, and near-dup chains have no bounded diameter), so
+    * components come from the DataFrame large-star/small-star contraction
+    * ([[graft.link.ConnectedComponents.runBigStar]]), O(log² n) rounds.
     * Output: (id, group, keep). Singleton docs keep themselves. */
-  def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame,
-                    bigStar: Boolean = false): DataFrame =
-    dedupClustersHandle(df, idCol, pairs, bigStar)._1
+  def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dedupClustersHandle(df, idCol, pairs)._1
 
   /** [[dedupClusters]] plus a cleanup thunk for long-lived sessions: the
     * expensive pair-table cache is ALWAYS freed eagerly here (once CC has
-    * converged the label cache carries everything the output plan reads;
-    * kept lineage means a post-unpersist block loss recomputes instead of
-    * failing), and the thunk frees the remaining small label cache once
-    * the caller has consumed/persisted the result — without it, repeated
-    * invocations in one session would pin one label table each. */
-  /** `bigStar = true` routes component formation through the large-star/
-    * small-star contraction ([[graft.link.ConnectedComponents.runBigStar]])
-    * instead of min-label propagation — same labels (min member), round
-    * count O(log² n) instead of component diameter, for pair graphs whose
-    * transitive chains are not bounded by construction. */
-  def dedupClustersHandle(df: DataFrame, idCol: String, pairs: DataFrame,
-                          bigStar: Boolean = false): (DataFrame, () => Unit) = {
-    import graft.link.ConnectedComponents
+    * converged the star-relation cache carries everything the output plan
+    * reads; kept lineage means a post-unpersist block loss recomputes
+    * instead of failing), and the thunk frees that small cache once the
+    * caller has consumed/persisted the result — without it, repeated
+    * invocations in one session would pin one star relation each. */
+  def dedupClustersHandle(df: DataFrame, idCol: String, pairs: DataFrame)
+      : (DataFrame, () => Unit) = {
     // materialize the pair stage ONCE (it is typically the output of an
     // expensive LSH pipeline) so CC iterations never recompute it
     val (p, pRdd) = graft.core.Materialize.stageCutHandle(
       pairs.select(col("ida").cast("string").as("a"),
         col("idb").cast("string").as("b")))
-    // iterate only over vertices that occur in a pair — the near-dup graph
-    // is a vanishing fraction of the corpus, so the label-propagation
-    // rounds never shuffle the full id set
-    val touched = p.select(col("a").as("v")).union(p.select(col("b").as("v"))).distinct()
-    val cc = if (bigStar) ConnectedComponents.runBigStarHandle(_, _, 40)
-             else ConnectedComponents.runHandle(_, _, 25)
-    val (comp, compRdd) = cc(
-      touched.select(lit("g").as("key"), col("v")),
+    // only the pair graph iterates — the near-dup graph is a vanishing
+    // fraction of the corpus, so the contraction rounds never shuffle the
+    // full id set
+    val (comp, compRdd) = graft.link.ConnectedComponents.runBigStarHandle(
       p.select(lit("g").as("key"), col("a"), col("b")))
     pRdd.unpersist(blocking = false)
-    // component label = lexicographic min member (min-label fixpoint), so
-    // keep == (id == group) — no window shuffle; singletons keep themselves
+    // component label = lexicographic min member, so keep == (id == group)
+    // — no window shuffle; roots and singletons (no row) keep themselves
     val out = df.select(col(idCol).cast("string").as("id"))
       .join(comp.select(col("v").as("id"), col("component")), Seq("id"), "left")
       .withColumn("group", coalesce(col("component"), col("id")))

@@ -208,16 +208,16 @@ object Similarity {
     * nProbe/nLists of the data.
     *
     * `nProbe` IS the recall/cost knob. Measured operating curve on the
-    * driver's sf0.01 feature-hash embeddings (graft.app.IvfCurve,
-    * nLists=16, recall@5 vs brute force): nProbe=4 → 0.61, 6 → 0.75,
+    * sf0.01 feature-hash embeddings (nLists=16, 50 queries, recall@5 vs
+    * [[bruteForceTopK]]): nProbe=4 → 0.61, 6 → 0.75,
     * **8 → 0.84 (default)**, 10 → 0.92, 12 → 0.95, 16 → 1.00 — roughly
     * linear in the fraction scanned, because deterministic feature-hash
     * vectors spread nearly uniformly and the coarse quantizer separates
     * them weakly; real model embeddings cluster, which moves the whole
     * curve up at the same nProbe. Raise nProbe (or nLists with
     * proportional nProbe) when the corpus distribution disappoints —
-    * recall audits live in OpsSpec and IvfCurve reproduces the curve on
-    * any parquet embedding table. */
+    * this curve is the record, and the OpsSpec ivf recall test pins the
+    * default operating point. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nLists: Int = 16, nProbe: Int = 8, iterations: Int = 5,
               seed: Long = 7L, maxTrainSample: Int = 4096): DataFrame = {

@@ -104,29 +104,23 @@ object BuildPipeline {
     val (docsCut, docsRdd) = Materialize.stageCutLazyHandle(docs.toDF())
     cuts += docsRdd
     val docsC = docsCut.as[DocRow]
-    def stage(name: String, shared: Boolean = true)(compute: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      // label the materializing jobs (guide: setJobDescription is
-      // thread-local and AQE sub-jobs inherit it) so the UI and the
-      // shuffle probe attribute stages to pipeline stages by name
-      spark.sparkContext.setJobDescription(s"graft-stage:$name")
-      val out = checkpoints match {
-        case Some(cp) => cp.stage(name)(compute)
-        case None =>
-          if (shared) {
-            val (df, rdd) = Materialize.stageCutHandle(compute)
-            // stage() runs from concurrently forked branches — guard the
-            // plain ArrayBuffer (a lost append would leak the RDD past
-            // BuildResult.cleanup; a resize race could crash the build)
-            cuts.synchronized { cuts += rdd }
-            df
-          } else compute
+    // label the materializing jobs so the UI and graft.app.Profile
+    // attribute stages to pipeline stages by name
+    def stage(name: String, shared: Boolean = true)(compute: => DataFrame): DataFrame =
+      Par.labelled(spark, s"graft-stage:$name") {
+        checkpoints match {
+          case Some(cp) => cp.stage(name)(compute)
+          case None =>
+            if (shared) {
+              val (df, rdd) = Materialize.stageCutHandle(compute)
+              // stage() runs from concurrently forked branches — guard the
+              // plain ArrayBuffer (a lost append would leak the RDD past
+              // BuildResult.cleanup; a resize race could crash the build)
+              cuts.synchronized { cuts += rdd }
+              df
+            } else compute
+        }
       }
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[stage-timing] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    }
 
     // Overlap independent stages (graft.core.Par: concurrent job
     // submission — how independent DAG branches overlap on a real cluster).
@@ -207,9 +201,7 @@ object BuildPipeline {
       checkpoints match {
         case Some(cp) => cp.stage(name)(base.unionByName(part))
         case None =>
-          spark.sparkContext.setJobDescription(s"graft-stage:$name-part")
-          val (p, rdd) = Materialize.stageCutHandle(part)
-          spark.sparkContext.setJobDescription(null)
+          val (p, rdd) = Par.labelled(spark, s"graft-stage:$name-part")(Materialize.stageCutHandle(part))
           cuts.synchronized { cuts += rdd }
           base.unionByName(p)
       }

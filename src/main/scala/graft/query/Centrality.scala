@@ -31,8 +31,9 @@ object Centrality {
     *    never a driver-side collect, so the whole iteration stays on the
     *    executors.
     *  - each iteration materializes its rank table and FREES the superseded
-    *    one (same discipline as ConnectedComponents.runHandle): plans stay
-    *    O(1) deep instead of O(iterations) — flat driver planning time —
+    *    one (same discipline as ConnectedComponents.runBigStarHandle):
+    *    plans stay O(1) deep instead of O(iterations) — flat driver
+    *    planning time —
     *    and a run pins exactly one rank-table cache at any moment, not one
     *    per iteration for the session's lifetime.
     *

@@ -30,4 +30,9 @@ object GraftShims {
                       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
                       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Block until every listener has seen every event posted so far
+    * (`listenerBus` is private[spark]): a profile reads its listener's
+    * counters after this instead of sleeping and hoping. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -154,8 +154,8 @@ class OpsSpec extends SparkSpec {
     assert(ivf.groupBy("qid").count().agg(max("count")).head().getLong(0) <= 5L)
     val recall = (bf intersect pairs).size.toDouble / bf.size
     info(f"ivf recall@5 (nProbe=8/16): $recall%.3f")
-    // measured operating point of the default (IvfCurve: 0.84 at 8/16 on
-    // the sf0.01 feature-hash distribution; curve pinned in the scaladoc)
+    // measured operating point of the default (0.84 at 8/16 on the sf0.01
+    // feature-hash distribution; the curve is in the ivfTopK scaladoc)
     assert(recall >= 0.8)
   }
 
@@ -191,6 +191,26 @@ class OpsSpec extends SparkSpec {
     assert(out === Set(
       ("a", "a", true), ("b", "a", false), ("c", "a", false),
       ("d", "d", true), ("e", "e", true)))
+    // a 40-vertex pair chain: diameter 39, deeper than any fixed round cap
+    // of min-label propagation (25), must still form ONE group
+    val ids = (0 until 40).map(i => f"c$i%02d")
+    val chain = Dedup.dedupClusters(ids.toDF("id"), "id", ids.zip(ids.tail).toDF("ida", "idb"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
+    assert(chain.length === 40)
+    assert(chain.map(_._2).toSet === Set("c00"), "one chain => one group")
+    assert(chain.count(_._3) === 1, "exactly one survivor")
+  }
+
+  test("ngram jaccard: the hot-shingle cap drops no pair at sf0.01") {
+    // maxShingleDf prunes candidates only; q_ngram_jaccard relies on the
+    // capped pair set equalling the uncapped one (its oracle is uncapped)
+    val d01 = spark.read.parquet(sf.replace("sf0.001", "sf0.01") + "/documents.parquet")
+    def pairs(cap: Long) = Dedup.ngramJaccardPairs(d01, "doc_id", "text", k = 3,
+      threshold = 0.8, maxShingleDf = cap)
+    val (capped, uncapped) = (pairs(50L), pairs(0L))
+    assert(uncapped.count() === 25L)
+    assert(capped.exceptAll(uncapped).count() === 0L, "spurious pairs under the cap")
+    assert(uncapped.exceptAll(capped).count() === 0L, "pairs missing under the cap")
   }
 
   test("exact dedup keeps exactly one survivor per content hash") {
