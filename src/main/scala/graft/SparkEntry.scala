@@ -301,7 +301,8 @@ object SparkEntry {
     // DedupSpec recall tests recompute approx-vs-exact equality on the
     // driver's own sf0.01 corpus every `sbt test`, and app.OracleCheck
     // audits sf0.01 + sf0.1. A corpus where recall drops below 1.0 fails
-    // the test suite, not silently the oracle hash.
+    // the test suite, not silently the oracle hash. Lazy, no cache: the
+    // shared band core (Dedup.bandedJaccard) size-prunes in the join.
     "q_minhash_lsh" -> ((s, d) =>
       Dedup.minhashLshPairs(s.read.parquet(t(d, "documents")), "doc_id", "text",
         k = 3, numPerm = 16, bands = 4, threshold = 0.8)),
@@ -309,7 +310,9 @@ object SparkEntry {
     // bands, Hamming<=15 — the Hamming net is structurally complete by
     // pigeonhole, and wide because J=0.8 pairs reach Hamming 13 on the
     // audited corpora; Jaccard recall audited 1.0 and test-asserted),
-    // exact Jaccard verification — output equals the exact pair relation
+    // exact Jaccard verification — output equals the exact pair relation.
+    // Same band core as q_minhash_lsh; its one stage cut is the (id, sig, n)
+    // table the candidate-volume valve reads.
     "q_simhash" -> ((s, d) =>
       Dedup.simhashVerifiedPairs(s.read.parquet(t(d, "documents")), "doc_id", "text",
         k = 3, threshold = 0.8)),

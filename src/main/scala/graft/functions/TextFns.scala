@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Deterministic scalar functions of the engine (SURVEY.md §2.8).
@@ -313,6 +314,24 @@ object TextFns {
       i += 1
     }
     if (w == n) hs else java.util.Arrays.copyOf(hs, w)
+  }
+
+  /** |a ∩ b| of two arrays sorted ascending and distinct, as
+    * [[shingleHashes]] returns them: one merge pass over the unsafe arrays,
+    * no hash set and no result array (what `array_intersect` builds per
+    * row). */
+  def sortedIntersectSize(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0; var j = 0; var n = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x == y) { n += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    n
   }
 
   /** MinHash signature of `numPerm` 64-bit minima over shingles. */

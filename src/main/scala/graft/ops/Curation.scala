@@ -78,7 +78,7 @@ object Curation {
     // formation, and the survivor semi join
     val (exc, excRdd) = graft.core.Materialize.stageCutHandle(ex)
 
-    val (pairs, pairsFree) = Dedup.minhashLshPairsHandle(exc, "id", "text_clean")
+    val pairs = Dedup.minhashLshPairs(exc, "id", "text_clean")
     val (clusters, clustersFree) = Dedup.dedupClustersHandle(exc, "id", pairs)
     // dedupClusters emits STRING ids (CC labels are strings); cast them
     // back to the funnel's long ids EXPLICITLY — leaving the cross-type
@@ -113,7 +113,7 @@ object Curation {
       .unionByName(stage("packed", packed))
 
     val cleanup: () => Unit = () => {
-      pairsFree(); clustersFree(); packedFree()
+      clustersFree(); packedFree()
       qcRdd.unpersist(blocking = false)
       excRdd.unpersist(blocking = false)
       ()

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.TextFns
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication family for large-scale training-data pipelines.
@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * verification on the candidate pairs only. Nothing here is O(n²) in docs;
   * the joins shuffle on blocking keys whose fan-out we bound explicitly
   * (`maxShingleDf`), which is the knob that keeps candidate generation
-  * linear when a shingle is stop-word-common at 100 TB.
+  * linear when a shingle is stop-word-common at 100 TB. The banded ops
+  * (simhash, minhash LSH) share one candidate core, [[bandJoin]], and one
+  * filter-and-verify core, [[bandedJaccard]].
   */
 object Dedup {
 
@@ -41,18 +43,26 @@ object Dedup {
         (col("id") === col("min_id")).as("keep"))
   }
 
-  private val shinglesUdf = udf((t: String, k: Int) => TextFns.shingleHashes(t, k))
   private val minhashUdf = udf((t: String, k: Int, p: Int) => TextFns.minhash(t, k, p))
   private val simhashUdf = udf((t: String) => TextFns.simhash64(t))
 
-  /** Per-doc distinct k-shingle sets as 64-BIT FNV-1a HASHES, computed
-    * ONCE per corpus: every verification path joins against this instead
-    * of re-shingling both documents per candidate pair (O(pairs x doc
-    * length) repeated work). Hashing is a byte diet (guide §2.3, narrower
-    * types): the exploded (id, shingle) stream feeds THREE corpus-wide
-    * shuffles on the capped path (hot counts, dup groups, per-doc
-    * features) and every verify join — 8-byte longs where ~25-byte
-    * shingle strings used to ride. Set sizes, intersections and unions
+  /** The shingle set of a document with no alphanumeric token: the
+    * oracles give such a document the one shingle `''`, so any two of them
+    * pair at Jaccard 1.0 on every path. */
+  private val EmptyShingle: Long = TextFns.fnv1a64("")
+  private val shinglesUdf = udf((t: String, k: Int) => {
+    val h = TextFns.shingleHashes(t, k)
+    if (h.isEmpty) Array(EmptyShingle) else h
+  })
+
+  /** Per-doc distinct k-shingle sets as 64-BIT FNV-1a HASHES (a token-less
+    * document gets `[fnv1a64("")]`, see [[EmptyShingle]]), sorted, so the
+    * verify joins count intersections by one merge
+    * ([[graft.functions.SortedIntersectSize]]). Hashing is a
+    * byte diet (guide §2.3, narrower types): the exploded (id, shingle)
+    * stream feeds every corpus-wide shingle shuffle and the verify joins
+    * rejoin the sets — 8-byte longs where ~25-byte shingle strings used to
+    * ride. Set sizes, intersections and unions
     * are preserved unless two DISTINCT shingles collide in 64 bits: the
     * expected number of colliding pairs among n corpus-wide distinct
     * shingles is ~n²/2^65, and one collision perturbs ONE pair's
@@ -64,69 +74,59 @@ object Dedup {
   private def shingleSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol).as("id"), shinglesUdf(col(textCol), lit(k)).as("sh"))
 
-  /** Exact-Jaccard verification of candidate (ida, idb) pairs against the
-    * pre-computed full shingle sets — `array_intersect`/`size` built-ins,
-    * whole-stage-codegen, no per-pair re-shingling.
-    *
-    * The threshold filter runs on the UNROUNDED value (rounding first would
-    * admit pairs whose true Jaccard sits in [threshold − 5e-5, threshold),
-    * which the DuckDB oracles — filtering unrounded — exclude); rounding to
-    * 4 decimals happens only on the reported column. Two EMPTY shingle sets
-    * are identical (empty) documents: Jaccard 1, matching the oracle, whose
-    * empty docs carry a single ''-shingle — not a 0/0 null that would
-    * silently drop the pair. */
-  /** NOTE: constructing the returned DataFrame is EAGER (the candidate
-    * stage materializes at stageCut time) — by design, since both caches
-    * below have two consumers each; plan-only callers (explain dumps)
-    * should prefer the capped ngramJaccard path or accept the compute.
-    * The cleanup thunk frees both caches; lineage is kept, so a
-    * post-cleanup consumer recomputes instead of failing. */
-  private def verifyJaccardHandle(cands0: DataFrame, sets: DataFrame,
-                                  threshold: Double): (DataFrame, () => Unit) = {
-    // materialize the (slim) candidate pairs once: they feed the touched-id
-    // projection and the verify join — recomputing them would re-run the
-    // whole candidate-generation subtree per consumer
-    val (cands, candsRdd) = graft.core.Materialize.stageCutHandle(
-      cands0.select("ida", "idb"))
-    val touched = cands.select(col("ida").as("id"))
-      .union(cands.select(col("idb").as("id"))).distinct()
-    // verification working set: shingle sets for candidate-TOUCHED docs
-    // only — one corpus pass (semi join; AQE broadcasts the tiny touched
-    // side), cached so the ida- and idb-side joins below don't each
-    // re-shingle the full corpus. Bounded by the candidate volume, the
-    // same working set any exact verification must hold.
-    val (tsets, tsetsRdd) = graft.core.Materialize.stageCutHandle(
-      sets.join(touched, Seq("id"), "left_semi"))
-    // LOSSLESS size prefilter before the heavy array join: inter <=
-    // min(na, nb) and union >= max(na, nb), so J >= t forces
-    // min(na, nb) >= t * max(na, nb). Candidate pairs are generated from
-    // one shared blocking key and routinely outnumber true pairs 1000:1;
-    // pruning on two cached longs keeps the full shingle ARRAYS (the
-    // dominant shuffle payload — KBs per row vs 16 bytes) off every pair
-    // the size ratio alone refutes. Both-empty pairs pass (0 >= t*0) and
-    // land on the J=1.0 branch, matching the oracle's empty-doc semantics.
-    val sizes = tsets.select(col("id"), size(col("sh")).as("n"))
-    val pruned = cands
-      .join(sizes.select(col("id").as("ida"), col("n").as("na")), Seq("ida"))
-      .join(sizes.select(col("id").as("idb"), col("n").as("nb")), Seq("idb"))
-      .filter(least(col("na"), col("nb")).cast("double") >=
-        lit(threshold) * greatest(col("na"), col("nb")).cast("double"))
-      .select("ida", "idb")
-    val inter = size(array_intersect(col("sha"), col("shb")))
-    val exact = when(size(col("sha")) === 0 && size(col("shb")) === 0, lit(1.0))
-      .otherwise(inter.cast("double") /
-        (size(col("sha")) + size(col("shb")) - inter))
-    val out = pruned
-      .join(tsets.select(col("id").as("ida"), col("sh").as("sha")), Seq("ida"))
-      .join(tsets.select(col("id").as("idb"), col("sh").as("shb")), Seq("idb"))
-      .withColumn("j", exact)
+  /** LOSSLESS size prune over the set sizes `na`/`nb`: inter <= min(na, nb)
+    * and union >= max(na, nb), so J >= t forces min(na, nb) >= t·max(na, nb). */
+  private def sizeOk(threshold: Double): Column =
+    least(col("na"), col("nb")).cast("double") >=
+      lit(threshold) * greatest(col("na"), col("nb")).cast("double")
+
+  /** (ida, idb, jaccard) from the exact intersection `inter` and the set
+    * sizes `na`/`nb`. The threshold filter runs on the UNROUNDED value
+    * (rounding first would admit pairs whose true Jaccard sits in
+    * [threshold − 5e-5, threshold), which the DuckDB oracles — filtering
+    * unrounded — exclude); rounding to 4 decimals happens only on the
+    * reported column. */
+  private def exactJaccard(pairs: DataFrame, inter: Column, threshold: Double): DataFrame =
+    pairs.withColumn("j", inter.cast("double") / (col("na") + col("nb") - inter))
       .filter(col("j") >= threshold)
       .select(col("ida"), col("idb"), round(col("j"), 4).as("jaccard"))
-    (out, () => {
-      candsRdd.unpersist(blocking = false)
-      tsetsRdd.unpersist(blocking = false)
-    })
+
+  /** The banded candidate join, emitting each candidate pair EXACTLY ONCE.
+    * `rows` are (id, payload...), the payload leaving the join suffixed
+    * `a`/`b`; `keys` is an array of `bands` blocking keys over them. The
+    * (band, key) self-join with `ida < idb` keeps a row only when `keep`
+    * holds and its band is the pair's LOWEST agreeing band (`differs(b)`
+    * must hold exactly when the band-b keys differ). Each candidate has
+    * exactly one lowest agreeing band, so this is the pair set a `distinct`
+    * over the join gives, without shuffling every (pair, band) row. */
+  private[graft] def bandJoin(rows: DataFrame, keys: Column, bands: Int, keep: Column,
+                              differs: Int => Column): DataFrame = {
+    val payload = rows.columns.toSeq.filterNot(_ == "id")
+    val ex = rows.select(col("id") +: payload.map(col) :+ posexplode(keys): _*)
+    def side(s: String) = ex.select(Seq(col("pos").as(s"band$s"), col("col").as(s"key$s"),
+      col("id").as(s"id$s")) ++ payload.map(p => col(p).as(p + s)): _*)
+    // one conjunction, cheapest first: a join condition would be appended
+    // after the pushed-down filter, evaluating `keep` on both pair orders
+    val owned = (0 until bands - 1).foldLeft(col("ida") < col("idb") && keep)((c, b) =>
+      c && (col("banda") <= b || differs(b)))
+    side("a").join(side("b"), col("banda") === col("bandb") && col("keya") === col("keyb"))
+      .filter(owned)
   }
+
+  /** Exact-Jaccard pairs >= threshold over [[bandJoin]] candidates, for
+    * [[minhashLshPairs]] and [[simhashVerifiedPairs]]. `rows` carry
+    * `n` = |shingle set|, so the size prune runs in the join's filter after
+    * the blocker's `keep`; only survivors rejoin the lazy shingle `sets`.
+    * Nothing is cached. */
+  private def bandedJaccard(rows: DataFrame, keys: Column, bands: Int, keep: Column,
+                            differs: Int => Column, sets: DataFrame,
+                            threshold: Double): DataFrame =
+    exactJaccard(
+      bandJoin(rows, keys, bands, keep && sizeOk(threshold), differs)
+        .select("ida", "idb", "na", "nb")
+        .join(sets.select(col("id").as("ida"), col("sh").as("sha")), Seq("ida"))
+        .join(sets.select(col("id").as("idb"), col("sh").as("shb")), Seq("idb")),
+      graft.functions.SortedIntersectSize(col("sha"), col("shb")), threshold)
 
   /** Exact n-gram (word k-shingle) Jaccard near-dup pairs >= threshold.
     *
@@ -160,12 +160,12 @@ object Dedup {
       cacheExploded = false)._1
 
   /** [[ngramJaccardPairs]] plus a cleanup thunk for long-lived sessions:
-    * frees the working-set caches (candidate pairs + touched shingle sets
-    * on the uncapped path; the exploded stream + hot-shingle table on the
-    * capped path) once
-    * the caller has consumed the result. Without it each invocation pins
-    * its working set for the session's lifetime; lineage is kept, so a
-    * post-cleanup consumer recomputes instead of failing. */
+    * frees the capped path's working-set caches (the exploded stream + the
+    * hot-shingle table) once the caller has consumed the result; the
+    * uncapped path caches nothing, so its thunk is a no-op. Without it
+    * each capped invocation pins its working set for the session's
+    * lifetime; lineage is kept, so a post-cleanup consumer recomputes
+    * instead of failing. */
   def ngramJaccardPairsHandle(df: DataFrame, idCol: String, textCol: String,
                               k: Int = 3, threshold: Double = 0.8,
                               maxShingleDf: Long = DefaultMaxShingleDf): (DataFrame, () => Unit) =
@@ -182,10 +182,10 @@ object Dedup {
                                k: Int, threshold: Double, maxShingleDf: Long,
                                cacheExploded: Boolean): (DataFrame, () => Unit) = {
     val sets = shingleSets(df, idCol, textCol, k)
-    val lazyEx = sets.select(col("id"), explode(col("sh")).as("g"))
     if (maxShingleDf > 0) {
       // the capped path reads the exploded (id, g) stream THREE times (hot
       // shingle counts, dup-shingle groups, per-doc features)
+      val lazyEx = sets.select(col("id"), explode(col("sh")).as("g"))
       val (ex, exFree): (DataFrame, () => Unit) =
         if (cacheExploded) {
           val (d, r) = graft.core.Materialize.stageCutHandle(lazyEx)
@@ -263,106 +263,92 @@ object Dedup {
           val (d, r) = graft.core.Materialize.stageCutHandle(docFeats0)
           (d, () => r.unpersist(blocking = false))
         }
-      // lossless size prune before the hot-set join: inter <= min(na, nb)
-      // and union >= max(na, nb), so J >= t forces min >= t * max
+      // size prune before the hot-set intersection
       val withFeats = pairRare
         .join(docFeats.select(col("id").as("ida"), col("n").as("na"),
           col("hsh").as("hsha")), Seq("ida"))
         .join(docFeats.select(col("id").as("idb"), col("n").as("nb"),
           col("hsh").as("hshb")), Seq("idb"))
-        .filter(least(col("na"), col("nb")).cast("double") >=
-          lit(threshold) * greatest(col("na"), col("nb")).cast("double"))
-      val inter = (col("ir") +
-        size(array_intersect(col("hsha"), col("hshb")))).cast("double")
-      val out = withFeats
-        .withColumn("j", inter / (col("na") + col("nb") - inter))
-        .filter(col("j") >= threshold)
-        .select(col("ida"), col("idb"), round(col("j"), 4).as("jaccard"))
+        .filter(sizeOk(threshold))
+      val out = exactJaccard(withFeats,
+        col("ir") + size(array_intersect(col("hsha"), col("hshb"))), threshold)
       (out, () => {
         docFeatsFree()
         hotFree()
         exFree()
       })
     } else {
-      // uncapped (oracle-parity mode): group sizes are unbounded, so a
-      // collect_set could blow a single task's memory — keep the blocked
-      // self-join, whose shuffles stream, and verify against full sets
-      val a = lazyEx.select(col("g"), col("id").as("ida"))
-      val b = lazyEx.select(col("g").as("g2"), col("id").as("idb"))
-      val cands = a.join(b, col("g") === col("g2") && col("ida") < col("idb"))
-        .select("ida", "idb").distinct()
-      verifyJaccardHandle(cands, sets, threshold)
+      // uncapped (oracle-parity mode): the oracle's own formulation — group
+      // sizes are unbounded, so no collect_set, but a streaming self-join
+      // on the shingle hash whose per-pair count is the exact intersection;
+      // the set sizes ride the exploded rows, so nothing is rejoined.
+      val e = sets.select(col("id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
+      def side(s: String) = e.select(col("g").as(s"g$s"), col("id").as(s"id$s"), col("n").as(s"n$s"))
+      val shared = side("a").join(side("b"),
+          col("ga") === col("gb") && col("ida") < col("idb") && sizeOk(threshold))
+        .groupBy("ida", "idb", "na", "nb").agg(count(lit(1)).as("inter"))
+      (exactJaccard(shared, col("inter"), threshold), () => ())
     }
+  }
+
+  /** Minhash banding: band b's key hashes its slice of the `sig` array.
+    * Returns (keys over `sig`, band-b differs over `siga`/`sigb`). Ownership
+    * re-hashes the slices: a key-array payload would need a projection over
+    * `sig` that the optimizer inlines, running the minhash UDF per band. */
+  private[graft] def minhashBanding(numPerm: Int, bands: Int): (Column, Int => Column) = {
+    val rows = numPerm / bands
+    def key(sig: String, b: Any) = s"hash(slice($sig, $b*$rows+1, $rows))"
+    (expr(s"transform(sequence(0, ${bands - 1}), b -> ${key("sig", "b")})"),
+      b => expr(key("siga", b)) =!= expr(key("sigb", b)))
   }
 
   /** MinHash + LSH near-dup candidates, verified with exact Jaccard.
     * signature → `bands` bands of numPerm/bands rows each → band-hash
-    * equi-join → exact verification restricted to candidates. */
+    * [[bandedJaccard]]. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, numPerm: Int = 16, bands: Int = 4,
-                      threshold: Double = 0.8): DataFrame =
-    minhashLshPairsHandle(df, idCol, textCol, k, numPerm, bands, threshold)._1
-
-  /** [[minhashLshPairs]] plus a cleanup thunk freeing the verification
-    * working-set caches (same contract as [[ngramJaccardPairsHandle]]). */
-  def minhashLshPairsHandle(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = 3, numPerm: Int = 16, bands: Int = 4,
-                            threshold: Double = 0.8): (DataFrame, () => Unit) = {
-    val rows = numPerm / bands
-    val sig = df.select(col(idCol).as("id"),
-      minhashUdf(col(textCol), lit(k), lit(numPerm)).as("sig"))
-    // band value = hash of its slice of the signature; candidates carry only
-    // (band, bh, id) — shingle sets rejoin after the pair-distinct, so the
-    // heavy payload never rides the candidate shuffle
-    val withBands = sig.select(col("id"),
-      explode(expr(s"transform(sequence(0, ${bands - 1}), b -> struct(b as band, hash(slice(sig, b*$rows+1, $rows)) as bh))")).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bh"))
-    val l = withBands.select(col("band"), col("bh"), col("id").as("ida"))
-    val r = withBands.select(col("band").as("band2"), col("bh").as("bh2"), col("id").as("idb"))
-    val cands = l.join(r, col("band") === col("band2") && col("bh") === col("bh2") && col("ida") < col("idb"))
-      .select("ida", "idb").distinct()
-    verifyJaccardHandle(cands, shingleSets(df, idCol, textCol, k), threshold)
+                      threshold: Double = 0.8): DataFrame = {
+    val (keys, differs) = minhashBanding(numPerm, bands)
+    val rows = df.select(col(idCol).as("id"),
+      minhashUdf(col(textCol), lit(k), lit(numPerm)).as("sig"),
+      size(shinglesUdf(col(textCol), lit(k))).as("n"))
+    bandedJaccard(rows, keys, bands, lit(true), differs,
+      shingleSets(df, idCol, textCol, k), threshold)
   }
+
+  /** Simhash banding: checks the parameters (pigeonhole: maxHamming <=
+    * bands − 1) and returns (band count, keys over `sig`, band-b differs
+    * over `siga`/`sigb`). Band b is bits [b·w, (b+1)·w); a pair differs
+    * there iff their xor has a bit in that lane — shifts and masks only
+    * (ANSI-safe), and no key array riding the wide net's join. */
+  private[graft] def simhashBanding(maxHamming: Int, bandBits: Int): (Int, Column, Int => Column) = {
+    require(64 % bandBits == 0, s"bandBits must divide 64, got $bandBits")
+    val bands = 64 / bandBits
+    require(maxHamming <= bands - 1,
+      s"maxHamming=$maxHamming needs >= ${maxHamming + 1} bands (pigeonhole); got $bands")
+    val mask = -1L >>> (64 - bandBits)
+    (bands,
+      expr(s"transform(sequence(0, ${bands - 1}), b -> shiftright(sig, b*$bandBits) & ${mask}L)"),
+      b => shiftright(col("siga").bitwiseXOR(col("sigb")), b * bandBits)
+        .bitwiseAND(lit(mask)) =!= 0L)
+  }
+
+  private val hamming = bit_count(col("siga").bitwiseXOR(col("sigb")))
 
   /** SimHash near-dup pairs: 64-bit simhash split into `64/bandBits` bands
     * (pigeonhole: any pair within Hamming distance `bands-1` must agree on
     * >= 1 band, so blocking recall for the Hamming criterion is structurally
     * 1.0 whenever maxHamming <= 64/bandBits - 1), verified by exact Hamming
-    * distance. Default 4 x 16-bit bands covers the classic maxHamming=3;
-    * bandBits=8 gives 8 bands covering maxHamming<=7 at the cost of more
-    * candidates (the 100 TB trade-off knob). */
+    * distance inside the [[bandJoin]] filter. Default 4 x 16-bit bands
+    * covers the classic maxHamming=3; bandBits=8 gives 8 bands covering
+    * maxHamming<=7 at the cost of more candidates (the 100 TB trade-off
+    * knob). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, bandBits: Int = 16): DataFrame =
-    simhashPairsFromSigs(
-      df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig")),
-      maxHamming, bandBits)
-
-  /** [[simhashPairs]] over an ALREADY-COMPUTED (id, sig) table — lets a
-    * caller that needs the signatures for its own purposes (the
-    * candidate-volume valve) compute them exactly once. */
-  private[graft] def simhashPairsFromSigs(sigs: DataFrame,
-                                          maxHamming: Int, bandBits: Int): DataFrame = {
-    require(64 % bandBits == 0, s"bandBits must divide 64, got $bandBits")
-    val bands = 64 / bandBits
-    require(maxHamming <= bands - 1,
-      s"maxHamming=$maxHamming needs >= ${maxHamming + 1} bands (pigeonhole); got $bands")
-    val mask = (1L << bandBits) - 1
-    val banded = sigs.select(col("id"), col("sig"),
-      explode(expr(s"transform(sequence(0, ${bands - 1}), b -> struct(b as band, shiftright(sig, b*$bandBits) & ${mask}L as bv))")).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bv"))
-    val l = banded.select(col("band"), col("bv"), col("id").as("ida"), col("sig").as("sa"))
-    val r = banded.select(col("band").as("band2"), col("bv").as("bv2"), col("id").as("idb"), col("sig").as("sb"))
-    // Hamming filter BEFORE the pair-distinct: the xor/bit_count is a
-    // per-joined-row codegen expression, while distinct is a shuffle — at
-    // wide nets (4-bit bands => n/16 docs per bucket) the co-bucketed
-    // candidate volume dwarfs the surviving pairs, so filtering first cuts
-    // the distinct's input by orders of magnitude. Identical output set
-    // (hamming is a function of the pair, so filter and distinct commute).
-    l.join(r, col("band") === col("band2") && col("bv") === col("bv2") && col("ida") < col("idb"))
-      .select(col("ida"), col("idb"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+                   maxHamming: Int = 3, bandBits: Int = 16): DataFrame = {
+    val (bands, keys, differs) = simhashBanding(maxHamming, bandBits)
+    bandJoin(df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig")),
+        keys, bands, hamming <= maxHamming, differs)
+      .select(col("ida"), col("idb"), hamming.as("hamming"))
   }
 
   /** SimHash-blocked near-dup pairs with EXACT n-gram Jaccard verification:
@@ -391,8 +377,9 @@ object Dedup {
     * valve fires on a hot-bucket corpus and stays silent on normal data). */
   @volatile private[graft] var simhashValveTrips: Long = 0L
 
-  /** [[simhashVerifiedPairs]] plus a cleanup thunk freeing the verification
-    * working-set caches (same contract as [[ngramJaccardPairsHandle]]).
+  /** [[simhashVerifiedPairs]] plus a cleanup thunk freeing the one cache it
+    * holds, the (id, sig, n) signature table the valve probe and the band
+    * join both read (same contract as [[ngramJaccardPairsHandle]]).
     *
     * '''Candidate-volume valve''': the wide net (4-bit bands) buckets
     * ~n/16 docs per band value on a homogeneous corpus, so co-bucketed
@@ -415,22 +402,18 @@ object Dedup {
     // config on a hot corpus silently succeeds through the minhash
     // fallback while the same call on a sparse corpus throws — parameter
     // validation must not be data-dependent
-    require(64 % bandBits == 0, s"bandBits must divide 64, got $bandBits")
-    val bands = 64 / bandBits
-    require(maxHamming <= bands - 1,
-      s"maxHamming=$maxHamming needs >= ${maxHamming + 1} bands (pigeonhole); got $bands")
-    val mask = (1L << bandBits) - 1
-    // signatures computed ONCE and stage-cut: the valve probe and the
-    // non-tripped pair generation both read them (recomputing the
-    // tokenize+FNV fold per consumer would double the corpus scan cost)
+    val (bands, keys, differs) = simhashBanding(maxHamming, bandBits)
+    // signatures and set sizes computed ONCE, in one pass over the text,
+    // and stage-cut: the valve probe and the non-tripped band join both
+    // read them (recomputing the tokenize+FNV fold per consumer would
+    // double the corpus scan cost)
     val (sigs, sigsRdd) = graft.core.Materialize.stageCutHandle(
-      df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig")))
+      df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig"),
+        size(shinglesUdf(col(textCol), lit(k))).as("n")))
     // double, not long: the probe is a heuristic and Σc² on a pathological
     // corpus can exceed Long — overflow must not wrap into "small"
-    val vol = sigs
-      .select(explode(expr(s"transform(sequence(0, ${bands - 1}), " +
-        s"b -> struct(b as band, shiftright(sig, b*$bandBits) & ${mask}L as bv))")).as("bb"))
-      .groupBy(col("bb.band"), col("bb.bv")).agg(count(lit(1)).as("c"))
+    val vol = sigs.select(posexplode(keys))
+      .groupBy(col("pos"), col("col")).agg(count(lit(1)).as("c"))
       .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2))
       .head().getAs[Any](0) match {
         case null => 0.0
@@ -445,13 +428,11 @@ object Dedup {
         "DedupSpec/OracleCheck). The wide net is an oracle bridge for verify-scale " +
         "corpora, not a production detector -- see simhashPairs for the linear path.")
       sigsRdd.unpersist(blocking = false)
-      minhashLshPairsHandle(df, idCol, textCol, k, threshold = threshold)
-    } else {
-      val (res, free) = verifyJaccardHandle(
-        simhashPairsFromSigs(sigs, maxHamming, bandBits).select("ida", "idb"),
-        shingleSets(df, idCol, textCol, k), threshold)
-      (res, () => { free(); sigsRdd.unpersist(blocking = false) })
-    }
+      (minhashLshPairs(df, idCol, textCol, k, threshold = threshold), () => ())
+    } else
+      (bandedJaccard(sigs, keys, bands, hamming <= maxHamming, differs,
+        shingleSets(df, idCol, textCol, k), threshold),
+        () => sigsRdd.unpersist(blocking = false))
   }
 
   /** Near-dup **clustering with survivor selection** — what a training

@@ -58,6 +58,27 @@ class GraftFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("native sorted-intersect size equals the set intersection of sorted hash sets") {
+    import graft.functions.SortedIntersectSize
+    val rnd = new scala.util.Random(7L)
+    // small alphabets (negative values included) so random sets overlap
+    def set(): Array[Long] = Array.fill(rnd.nextInt(12))(rnd.nextInt(24).toLong - 12L).distinct.sorted
+    val rows = (0 until 200).map(i => (i.toLong, Option(set()), Option(set()))) ++
+      Seq((900L, Some(Array.empty[Long]), Some(Array(1L))), (901L, None, Some(Array(1L))),
+        (902L, Some(TextFns.shingleHashes("a b c d e", 3)),
+          Some(TextFns.shingleHashes("x b c d e", 3))))
+    val got = rows.toDF("id", "a", "b")
+      .select(col("id"), SortedIntersectSize(col("a"), col("b")))
+      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+    rows.foreach { case (id, a, b) =>
+      assert(got(id) === (for (x <- a; y <- b) yield (x.toSet intersect y.toSet).size), s"row $id")
+    }
+    assert(got(902L) === Some(2))
+    val err = intercept[Exception](Seq((Array(1), Array(1))).toDF("a", "b")
+      .select(SortedIntersectSize(col("a"), col("b"))).collect())
+    assert(err.getMessage.contains("sorted_intersect_size"))
+  }
+
   test("native cosine expression equals the Scala function, handles nulls and dim mismatch") {
     import graft.functions.CosineSim
     val rows = Seq(

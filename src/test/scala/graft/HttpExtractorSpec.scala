@@ -22,20 +22,24 @@ class HttpExtractorSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val inner = new DeterministicExtractor
   private val requests = new AtomicLong(0L)
-  /** Every Nth request fails with 500 once (flaky-mode), keyed by a
-    * counter so retries of the same call eventually pass. */
+  /** Flaky mode: the first attempt of every request whose body hashes to
+    * 0 mod `failEvery` fails with 500. The failure is keyed by the request
+    * body, not by a global counter, so each request fails at most once
+    * however many calls run concurrently, and its retry passes. */
   @volatile private var failEvery: Int = 0
+  private val failedBodies = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def jStr(s: String) = JString(s)
 
   private def handle(ex: HttpExchange): Unit = {
-    val n = requests.incrementAndGet()
-    if (failEvery > 0 && n % failEvery == 0) {
+    requests.incrementAndGet()
+    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    if (failEvery > 0 && Math.floorMod(body.hashCode, failEvery) == 0 && failedBodies.add(body)) {
       val msg = "transient".getBytes(StandardCharsets.UTF_8)
       ex.sendResponseHeaders(500, msg.length)
       ex.getResponseBody.write(msg); ex.close(); return
     }
-    val req = JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+    val req = JsonMethods.parse(body)
     val task = req \ "task" match { case JString(s) => s; case _ => "" }
     val text = req \ "text" match { case JString(s) => s; case _ => "" }
     val nodes = req \ "nodes" match {
@@ -104,7 +108,8 @@ class HttpExtractorSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("transient 5xx responses are retried with backoff and never change the result") {
-    failEvery = 7 // every 7th request dies once; retries must absorb it
+    failEvery = 7 // about one request in 7 dies once; retries must absorb it
+    failedBodies.clear()
     val before = requests.get()
     val docs = Corpus.docs(spark, 12)
     val viaHttp = triplesOf(BuildPipeline.run(docs,
@@ -113,6 +118,7 @@ class HttpExtractorSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val direct = triplesOf(BuildPipeline.run(docs, new DeterministicExtractor))
     assert(viaHttp === direct)
     assert(requests.get() - before > 0)
+    assert(!failedBodies.isEmpty, "the flaky mode must have failed some requests")
   }
 
   test("non-retryable 4xx fails loudly instead of silently extracting nothing") {

@@ -15,16 +15,72 @@ class OpsSpec extends SparkSpec {
     .select(col("vec_id").as("id"), col("embedding").as("vec")).cache()
 
   test("two empty documents pair at jaccard 1.0 (no 0/0 null drop)") {
-    // empty docs band-collide in every band (all-MaxValue signatures); the
-    // exact verification must report them as identical (the DuckDB oracle
-    // gives empty docs one ''-shingle and reports the pair at 1.0), not
-    // drop them on a 0/0 null
-    val d = Seq((1L, ""), (2L, "   "), (3L, "a real document about graphs"))
+    // the DuckDB oracle gives a document with no alphanumeric token one
+    // ''-shingle, so any two such documents are a pair at 1.0 — on every
+    // path: empty docs band-collide in every band (all-MaxValue minhash
+    // signatures, simhash 0), and both ngram paths need the '' shingle to
+    // generate the candidate at all
+    val d = Seq((1L, ""), (2L, "   "), (3L, "a real document about graphs"), (4L, "!!! ---"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashLshPairs(d, "doc_id", "text", k = 3, numPerm = 16,
-        bands = 4, threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs === Set((1L, 2L, 1.0)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val empties = Set((1L, 2L, 1.0), (1L, 4L, 1.0), (2L, 4L, 1.0))
+    assert(rows(Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 3, threshold = 0.8)) === empties,
+      "ngram capped")
+    assert(rows(Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 3, threshold = 0.8,
+      maxShingleDf = 0L)) === empties, "ngram uncapped")
+    assert(rows(Dedup.minhashLshPairs(d, "doc_id", "text", k = 3, numPerm = 16,
+      bands = 4, threshold = 0.8)) === empties, "minhash")
+    assert(rows(Dedup.simhashVerifiedPairs(d, "doc_id", "text", k = 3, threshold = 0.8)) ===
+      empties, "simhash verified")
+  }
+
+  /** (ida, idb) of the band join as a multiset, sorted. */
+  private def pairList(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  /** the candidate relation the banded ops used before ownership: every
+    * (band, key) co-occurrence, collapsed by a pair distinct */
+  private def distinctBandJoin(rows: org.apache.spark.sql.DataFrame,
+                               keys: org.apache.spark.sql.Column) = {
+    val ex = rows.select(col("id"), posexplode(keys))
+    pairList(ex.toDF("ida", "band", "key").join(ex.toDF("idb", "band", "key"),
+      Seq("band", "key")).filter(col("ida") < col("idb")).select("ida", "idb").distinct())
+  }
+
+  test("band ownership emits every candidate pair exactly once (simhash and minhash keys)") {
+    val rnd = new scala.util.Random(20261018L)
+    for (bandBits <- Seq(4, 8, 16)) {
+      val bands = 64 / bandBits
+      val (_, keys, differs) = Dedup.simhashBanding(bands - 1, bandBits)
+      val lane = -1L >>> (64 - bandBits)
+      // random signatures (about half negative) plus planted pairs that
+      // agree on all bands, on only the last band, and on none
+      val base = (0 until 150).map(i => (i.toLong, rnd.nextLong()))
+      val s0 = base.head._2
+      val flipped = s0 ^ ~(lane << ((bands - 1) * bandBits)) // every lane but the last differs
+      val planted = Seq((1000L, s0), (1001L, s0), (1002L, flipped), (1003L, ~s0))
+      val sigs = (base ++ planted).toDF("id", "sig")
+      assert(sigs.filter(col("sig") < 0).count() > 0, "negative signatures must be covered")
+      val owned = pairList(Dedup.bandJoin(sigs, keys, bands, lit(true), differs))
+      val expected = distinctBandJoin(sigs, keys)
+      assert(owned === expected, s"bandBits=$bandBits: ownership must equal the distinct join")
+      assert(owned.distinct.size === owned.size, s"bandBits=$bandBits: a pair emitted twice")
+      val ps = owned.toSet
+      assert(ps.contains((0L, 1000L)) && ps.contains((1000L, 1001L)), "all-band agreement")
+      assert(ps.contains((1000L, 1002L)), "last-band-only agreement")
+      assert(!ps.contains((1000L, 1003L)) && !ps.contains((0L, 1003L)), "no agreeing band")
+    }
+    // minhash band-hash keys: signatures over a 3-value alphabet so slices
+    // collide across bands, plus one pair agreeing on the last band only
+    val (keys, differs) = Dedup.minhashBanding(numPerm = 16, bands = 4)
+    val sigs = ((0 until 120).map(i => (i.toLong, Seq.fill(16)(rnd.nextInt(3).toLong - 1L))) ++
+        Seq((500L, Seq.fill(16)(7L)), (501L, Seq.fill(12)(8L) ++ Seq.fill(4)(7L))))
+      .toDF("id", "sig")
+    val owned = pairList(Dedup.bandJoin(sigs, keys, 4, lit(true), differs))
+    assert(owned === distinctBandJoin(sigs, keys))
+    assert(owned.distinct.size === owned.size)
+    assert(owned.contains((500L, 501L)))
   }
 
   test("minhash LSH finds all very-high-jaccard pairs found exactly") {
