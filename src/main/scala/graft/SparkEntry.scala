@@ -134,9 +134,9 @@ object SparkEntry {
   /** Memoized curation funnel per (session, sf-dir) — q_curate_pack and
     * q_curate_stats read the same run (the funnel eagerly materializes
     * its two fan-in corpora; building it once per session is the same
-    * sharing discipline as [[kg]]). The cleanup thunk is deliberately
-    * dropped: the caches live for the session, and loops that sweep
-    * (Bench) only force a lineage recompute, never a failure. Keyed by
+    * sharing discipline as [[kg]]). No scope is open here, so the
+    * caches live for the session, and loops that sweep (Bench) only force
+    * a lineage recompute, never a failure. Keyed by
     * the session like [[kgCache]], so a later session in the same JVM
     * never receives frames bound to a stopped one. */
   private val curateCache = scala.collection.concurrent.TrieMap[
@@ -146,11 +146,8 @@ object SparkEntry {
     // same stopped-session eviction as [[kg]]
     curateCache.keysIterator.filter(_._1.sparkContext.isStopped)
       .foreach(curateCache.remove)
-    curateCache.getOrElseUpdate((s, d), {
-      val (packed, stats, _) = graft.ops.Curation.curateHandle(
-        s.read.parquet(t(d, "documents")), "doc_id", "text")
-      (packed, stats)
-    })
+    curateCache.getOrElseUpdate((s, d),
+      graft.ops.Curation.curate(s.read.parquet(t(d, "documents")), "doc_id", "text"))
   }
 
   /** Synthesized per-document source URL for the domain-curation entries
@@ -287,12 +284,12 @@ object SparkEntry {
     // shingle is hot. Measured capped (50) vs uncapped, exceptAll both ways:
     // sf0.01 25 = 25 pairs, sf0.1 256 = 256 pairs, missing=0 spurious=0
     // (OpsSpec pins the sf0.01 case).
-    // handle variant (thunk dropped): keeps the single-shingle-pass cache
-    // for the benched hot path; Bench sweeps all persisted RDDs after each
-    // query and Verify exits after one pass, so nothing pins past its use
+    // no scope is open here, so the single-shingle-pass cache stays until
+    // a sweep: Bench sweeps all persisted RDDs after each query and Verify
+    // exits after one pass, so nothing pins past its use
     "q_ngram_jaccard" -> ((s, d) =>
-      Dedup.ngramJaccardPairsHandle(s.read.parquet(t(d, "documents")), "doc_id", "text",
-        k = 3, threshold = 0.8, maxShingleDf = 50L)._1),
+      Dedup.ngramJaccardPairs(s.read.parquet(t(d, "documents")), "doc_id", "text",
+        k = 3, threshold = 0.8, maxShingleDf = 50L)),
     // oracle-checkable: candidates are verified with the EXACT shingle
     // Jaccard (no spurious pairs, values exact), so the only assumption the
     // exact-set oracle adds is banding recall 1.0 at J>=0.8. That is

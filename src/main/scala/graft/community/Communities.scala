@@ -42,7 +42,7 @@ object Communities {
       communityProperties: DataFrame, // PropertyRow-shaped (findings)
       docNodes: DataFrame, // level-2 NodeRow-shaped
       docProperties: DataFrame, // keyword properties of doc nodes
-      cleanup: () => Unit = () => ()) // frees the membership persist
+      cleanup: () => Unit = () => ()) // frees the membership cache
 
   // ids are codegen built-ins (Ids.idCol), not UDFs — see core/Schema.scala
   private def commIdUdf(doc: Column, minMember: Column): Column =
@@ -58,7 +58,15 @@ object Communities {
       properties: Dataset[PropertyRow],
       docKeywords: DataFrame, // (doc_id, keywords: array<string>)
       docSummaries: DataFrame // (doc_id, summary)
-  ): CommunityLayer = {
+  ): CommunityLayer = Materialize.Scope.open { scope =>
+    layer(nodes, edges, properties, docKeywords, docSummaries)
+      .copy(cleanup = () => scope.close())
+  }
+
+  /** The layer; its membership cache registers with the current scope. */
+  private def layer(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow],
+      properties: Dataset[PropertyRow], docKeywords: DataFrame,
+      docSummaries: DataFrame): CommunityLayer = {
     val spark = nodes.sparkSession
 
     // NOT checkpointed: `nodes` arrives materialized (GraphTables checkpoints
@@ -97,8 +105,8 @@ object Communities {
         }
     }.toDF("doc_id", "node_id", "min_member")
 
-    val membership = graft.core.Par.labelled(spark, "graft-comm:membership") {
-      graft.core.Materialize.eager(minMembers.select(col("doc_id"), col("node_id"),
+    val membership = Par.labelled(spark, "graft-comm:membership") {
+      Materialize.eager(minMembers.select(col("doc_id"), col("node_id"),
         commIdUdf(col("doc_id"), col("min_member")).as("community_id")))
     }
 
@@ -208,8 +216,7 @@ object Communities {
       communityEdges,
       communityProperties,
       docNodes.drop("doc_id"),
-      docProperties,
-      () => membership.unpersist(blocking = false))
+      docProperties)
   }
 
   /** F5 — community CSV rendering (reference

@@ -21,15 +21,18 @@ object Par {
 
   private val JobDescription = "spark.job.description"
 
-  /** Run `body` on the pool; the active SparkSession and the job label are
-    * thread-local, so re-pin both to the caller's before any SQL work (a
-    * reused pool thread otherwise keeps whatever label it last ran under). */
+  /** Run `body` on the pool; the active SparkSession, the job label and
+    * the current [[Materialize.Scope]] are thread-local, so re-pin all
+    * three to the caller's before any SQL work (a reused pool thread
+    * otherwise keeps whatever label it last ran under, and its caches
+    * would escape the caller's scope). */
   def fork[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] = {
     val label = spark.sparkContext.getLocalProperty(JobDescription)
+    val scope = Materialize.Scope.current
     scala.concurrent.Future {
       SparkSession.setActiveSession(spark)
       spark.sparkContext.setJobDescription(label)
-      body
+      Materialize.Scope.pinned(scope)(body)
     }(pool)
   }
 
@@ -59,12 +62,20 @@ object Par {
 /** Materialize-once for INTERNAL multi-consumer intermediates: eager
   * persist instead of localCheckpoint. Same barrier semantics, two
   * differences that matter in a shared local-mode heap:
-  *   1. blocks are freed DETERMINISTICALLY by `unpersist()` (stage cleanup
-  *      hooks) — localCheckpoint blocks wait for driver-GC + ContextCleaner
-  *      and pin memory for the whole build;
+  *   1. blocks are freed DETERMINISTICALLY by `unpersist()` — localCheckpoint
+  *      blocks wait for driver-GC + ContextCleaner and pin memory for the
+  *      whole build;
   *   2. lineage stays intact, so freeing early is always SAFE — a late
   *      consumer recomputes from the upstream checkpoint instead of
   *      crashing on missing checkpoint blocks.
+  *
+  * Cache lifetime is decided in ONE place, [[Scope]]: every cache made
+  * here registers with the innermost scope open on the calling thread and
+  * is freed when that scope closes. With no scope open nothing registers,
+  * and the cache stays pinned until the caller sweeps
+  * `sparkContext.getPersistentRDDs` (what Bench does between queries).
+  * Iterative callers still free superseded iterations themselves, through
+  * the RDD [[stageCutHandleN]] returns.
   */
 object Materialize {
 
@@ -82,7 +93,70 @@ object Materialize {
     *      resource. */
   private val CacheLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
+  /** A registry of the caches made while it is current; `close()` frees
+    * them, newest first. It is current only while a [[within]] body runs
+    * on that thread (and on the [[Par.fork]] threads that body starts), so
+    * a function never returns with its scope still open on the caller's
+    * thread. A scope opened while another is current is also freed by
+    * that outer scope's close. Registering with a closed scope throws, so
+    * a cache made after its owner's cleanup fails loudly instead of
+    * leaking. Thread-safe: forked branches register concurrently. */
+  final class Scope extends AutoCloseable {
+    private val frees = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    private var closed = false
+    Option(Scope.current).foreach(_.register(() => close()))
+
+    private[Materialize] def register(free: () => Unit): Unit = synchronized {
+      if (closed) throw new IllegalStateException("cache registered with a closed Materialize.Scope")
+      frees += free
+    }
+
+    /** Run `body` with this scope current on this thread; the previous
+      * one is restored on exit, also when `body` throws. */
+    def within[T](body: => T): T = Scope.pinned(this)(body)
+
+    /** Free every registered cache; later calls do nothing. */
+    def close(): Unit = {
+      val fs = synchronized { closed = true; val fs = frees.reverse; frees.clear(); fs }
+      fs.foreach(_())
+    }
+  }
+
+  object Scope {
+    private val active = new ThreadLocal[Scope]
+
+    /** The scope caches made on this thread register with; null if none. */
+    private[core] def current: Scope = active.get
+
+    /** Run `body` with `scope` (null: none) current on this thread. */
+    private[core] def pinned[T](scope: Scope)(body: => T): T = {
+      val prev = active.get
+      active.set(scope)
+      try body finally active.set(prev)
+    }
+
+    /** Run `body` in a new scope that outlives it: for layers whose result
+      * carries `() => scope.close()` as its cleanup. The scope is closed
+      * at once if `body` throws. */
+    def open[T](body: Scope => T): T = {
+      val scope = new Scope
+      try scope.within(body(scope))
+      catch { case e: Throwable => scope.close(); throw e }
+    }
+  }
+
+  private def register(free: () => Unit): Unit =
+    Option(Scope.current).foreach(_.register(free))
+
+  /** Persist `rdd` at the engine's cache level, registered with the
+    * current scope. */
+  def persist[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
+    register(() => rdd.unpersist(blocking = false))
+    rdd.persist(CacheLevel)
+  }
+
   def eager(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    register(() => df.unpersist(blocking = false))
     val p = df.persist(CacheLevel)
     // count(), NOT foreachPartition: foreachPartition is a typed action that
     // deserializes every InternalRow to an external Row (GenerateSafeProjection
@@ -107,46 +181,33 @@ object Materialize {
     * their output row buffer — same as Dataset.localCheckpoint's own
     * materialization path. */
   def stageCut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    stageCutHandle(df)._1
+    stageCutHandleN(df)._1
 
-  /** [[stageCut]] plus the persisted RDD handle, for iterative callers
-    * that free superseded iterations deterministically (the CC loop would
-    * otherwise pin one full pair-table copy per iteration for the
-    * session's lifetime). Unpersisting early is always safe: the RDD
-    * lineage is kept, so a late consumer recomputes instead of failing. */
-  def stageCutHandle(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val (d, r, _) = stageCutHandleN(df)
-    (d, r)
-  }
-
-  /** [[stageCutHandle]] plus the ROW COUNT of the materialized stage —
-    * the materializing action is a count anyway, so iterative callers
-    * whose convergence test needs the count (the big-star CC fixpoint)
-    * get it for free instead of paying a second count job per iteration. */
+  /** [[stageCut]] plus the persisted RDD and the ROW COUNT of the
+    * materialized stage. The RDD is for iterative callers that free
+    * superseded iterations deterministically (the CC loop would otherwise
+    * pin one full pair-table copy per iteration until its scope closes);
+    * unpersisting early is always safe, since the lineage is kept. The
+    * materializing action is a count anyway, so callers whose convergence
+    * test needs the count (the big-star CC fixpoint) get it for free
+    * instead of paying a second count job per iteration. */
   def stageCutHandleN(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame,
          org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
          Long) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(CacheLevel)
+    val rdd = persist(df.queryExecution.toRdd.map(_.copy()))
     val n = rdd.count()
     (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema), rdd, n)
   }
 
-  /** [[stageCutHandle]] WITHOUT the materializing count: persist + wrap
-    * only. The FIRST consumer populates the cache (the block manager's
+  /** [[stageCut]] WITHOUT the materializing count: persist + wrap only.
+    * The FIRST consumer populates the cache (the block manager's
     * per-partition locking dedups concurrent computation — two forked
     * consumers hitting the same uncomputed cached partition compute it
     * once and share it), so the upstream plan still runs exactly once,
     * but the producer thread never blocks — its consumers can be forked
     * immediately instead of waiting behind an eager count barrier. */
-  def stageCutLazyHandle(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(CacheLevel)
-    (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema), rdd)
-  }
+  def stageCutLazy(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession,
+      persist(df.queryExecution.toRdd.map(_.copy())), df.schema)
 }

@@ -142,10 +142,6 @@ object Ids {
 
   def nodeId(docId: String, nameNorm: String, level: Int): String =
     of("node", docId, nameNorm, level.toString)
-  def edgeId(frm: String, to: String, description: String): String =
-    of("edge", frm, to, description)
-  def propertyId(nodeId: String, description: String): String =
-    of("prop", nodeId, description)
   def communityId(docScope: String, memberMin: String, level: Int): String =
     of("comm", docScope, memberMin, level.toString)
 }

@@ -43,19 +43,16 @@ object ConnectedComponents {
     * star: every non-root points directly at its component minimum. */
   def runBigStar(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame =
     vertices.select(col("key"), col("v"))
-      .join(runBigStarHandle(edges, maxIter)._1, Seq("key", "v"), "left")
+      .join(starRelation(edges, maxIter), Seq("key", "v"), "left")
       .select(col("key"), col("v"), coalesce(col("component"), col("v")).as("component"))
 
   /** The contraction behind [[runBigStar]], without the declared vertices:
     * (key, v, component) for every edge endpoint whose component minimum
     * is not itself. Roots have no row, so a caller labels any vertex
-    * missing here with itself. Plus the final persisted RDD, so long-lived
-    * callers can free the one cache this loop leaves behind
-    * deterministically (the lineage is kept: a post-unpersist consumer
-    * recomputes instead of failing). Superseded iteration caches are freed
-    * as the loop goes. */
-  def runBigStarHandle(edges: DataFrame, maxIter: Int = 40)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    * missing here with itself. It reads the loop's final cache, which
+    * registers with the caller's [[graft.core.Materialize.Scope]];
+    * superseded iteration caches are freed as the loop goes. */
+  private[graft] def starRelation(edges: DataFrame, maxIter: Int = 40): DataFrame = {
     // canonical orientation u > v; self-loops dropped; set semantics
     val init = edges
       .select(col("key"), greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
@@ -110,6 +107,6 @@ object ConnectedComponents {
     // non-root. min() guards a non-converged partial relation, where u
     // could still carry several parents.
     val star = if (converged) p else p.groupBy("key", "u").agg(min("v").as("v"))
-    (star.select(col("key"), col("u").as("v"), col("v").as("component")), pRdd)
+    star.select(col("key"), col("u").as("v"), col("v").as("component"))
   }
 }

@@ -195,10 +195,7 @@ object Linker {
   /** Per-occurrence mention contexts: (doc_id, chunk_id, name_norm,
     * descs) — the per-chunk description text an ambiguous occurrence is
     * re-ranked against (the "mention's description" of
-    * node_matcher.py:81-102). Same single-pass scan as [[uniqueNames]]. */
-  def mentionOccurrences(logs: Dataset[ExtractionLog]): DataFrame =
-    mentionOccurrencesFrom(mentionAgg(logs))
-
+    * node_matcher.py:81-102), from a [[mentionAgg]] scan. */
   def mentionOccurrencesFrom(agg: DataFrame): DataFrame =
     agg.select(col("doc_id"), col("chunk_id"), col("name_norm"),
       array_join(array_sort(col("descs_set")), " ").as("odescs"))
@@ -206,26 +203,19 @@ object Linker {
 
   private val rerankUdf = udf((q: String, t: String) => TextFns.rerankScore(q, t))
 
-  /** name → canonical mapping:
+  /** `mapping` is the name → canonical mapping:
     * (doc_id, chunk_id, name_norm, canonical_norm, canonical).
     * chunk_id = -1 rows are the doc-level default (one per unique name);
     * chunk_id >= 0 rows are per-chunk overrides, emitted ONLY for members
     * of ambiguous clusters (several maximal candidates), re-ranked against
     * the occurrence's own chunk context — the reference's per-log
-    * assignment (node_matcher.py:199-296). */
-  /** Canonical mapping plus a cleanup hook that unpersists the linker's
-    * internal checkpoints — call it once the mapping stage itself is
-    * materialized. In local mode every eager localCheckpoint pins block-
-    * manager memory for the build's lifetime; freeing the linker's
-    * internal materializations (agg / names / resolved / ambiguous and
-    * the ambiguous-doc desc slices) after the
-    * mapping checkpoint exists cuts the live heap for all downstream
-    * stages (shared-heap GC pressure was the largest local-mode
-    * anti-scaling term at 96k docs). */
+    * assignment (node_matcher.py:199-296).
+    * `cleanup` frees the linker's internal materializations (names /
+    * resolved / ambiguous and the ambiguous-doc desc slices) — call it
+    * once the mapping stage itself is materialized. Freeing them after the mapping checkpoint exists cuts
+    * the live heap for all downstream stages (shared-heap GC pressure was
+    * the largest local-mode anti-scaling term at 96k docs). */
   case class LinkResult(mapping: DataFrame, cleanup: () => Unit)
-
-  def canonicalMapping(logs: Dataset[ExtractionLog]): DataFrame =
-    canonicalMappingResult(logs).mapping
 
   /** PRECONDITION: `logs` must be MATERIALIZED (checkpointed/persisted) or
     * at least a deterministic plan. The round-5 split scans `logs` twice —
@@ -237,11 +227,15 @@ object Linker {
     * or an eager cut of the logs); external callers with a lazy
     * non-deterministic source must cut it first. A deterministic lazy
     * plan is correct but pays a second extraction pass. */
-  def canonicalMappingResult(logs: Dataset[ExtractionLog]): LinkResult = {
+  def canonicalMappingResult(logs: Dataset[ExtractionLog]): LinkResult =
+    Materialize.Scope.open(scope => LinkResult(mappingPlan(logs), () => scope.close()))
+
+  /** The mapping; its materializations register with the current scope. */
+  private def mappingPlan(logs: Dataset[ExtractionLog]): DataFrame = {
     val spark = logs.sparkSession
     import spark.implicits._
 
-    def materialize(df: DataFrame): DataFrame = graft.core.Materialize.eager(df)
+    def materialize(df: DataFrame): DataFrame = Materialize.eager(df)
 
     // SLIM name table straight from the logs: the blocking join,
     // union-find, and resolution read only (doc_id, name_norm, display).
@@ -327,11 +321,12 @@ object Linker {
     // description text instead of all of it
     val logsAmbig = logs.toDF().join(ambigDocs, Seq("doc_id"), "left_semi")
       .as[graft.core.ExtractionLog]
-    val aggAmbig = materialize(mentionAgg(logsAmbig))
+    def ambiguousCut(df: DataFrame) = Par.labelled(spark, "graft-link:ambiguous")(materialize(df))
+    val aggAmbig = ambiguousCut(mentionAgg(logsAmbig))
     // full name table (descs/ne_descs/prop_descs) for ambiguous docs —
     // containment gathering scans ALL names of the doc, so this derives
     // from the doc-scoped semi join, not from the ambiguous names alone
-    val namesAmbig = materialize(uniqueNamesFrom(aggAmbig))
+    val namesAmbig = ambiguousCut(uniqueNamesFrom(aggAmbig))
 
     // A6 — candidate context gathered by SUBSTRING CONTAINMENT across the
     // doc's mention names (reference node_matcher.py:104-143: a candidate
@@ -355,7 +350,7 @@ object Linker {
     // candidates with containment-gathered context (falls back to empty
     // when nothing in the doc contains the candidate name); materialized
     // once — BOTH the doc-level default and the per-chunk overrides join it
-    val ambiguous = materialize(resolved.filter(size(col("candidates")) > 1)
+    val ambiguous = ambiguousCut(resolved.filter(size(col("candidates")) > 1)
       .select(col("doc_id"), col("name_norm"), explode(col("candidates")).as("c"))
       .select(col("doc_id"), col("name_norm"),
         col("c._1").as("cand_norm"), col("c._2").as("cand_display"))
@@ -395,13 +390,7 @@ object Linker {
       .select(col("doc_id"), col("chunk_id"),
         col("name_norm"), col("cand_norm").as("canonical_norm"), col("cand_display").as("canonical"))
 
-    LinkResult(docLevel.unionByName(overrides), () => {
-      names.unpersist(blocking = false)
-      resolved.unpersist(blocking = false)
-      ambiguous.unpersist(blocking = false)
-      aggAmbig.unpersist(blocking = false)
-      namesAmbig.unpersist(blocking = false)
-    })
+    docLevel.unionByName(overrides)
   }
 
   /** A member's resolution: doc-level canonical plus, when the member was

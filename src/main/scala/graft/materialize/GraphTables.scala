@@ -30,17 +30,18 @@ import org.apache.spark.sql.functions._
   */
 object GraphTables {
 
-  /** `cleanup` unpersists the two internal materializations (the node map
-    * and the endpoint-resolution join) — call once the downstream table
-    * checkpoints exist. Safe at any point: they are eager PERSISTS with
-    * intact lineage, so a late consumer recomputes instead of failing. */
+  /** `cleanup` frees the three internal materializations (the node map,
+    * the endpoint-resolution join and the node-resolved edge cut) — call
+    * once the downstream table checkpoints exist. Safe at any point: they
+    * are PERSISTS with intact lineage, so a late consumer recomputes
+    * instead of failing. */
   case class Materialized(
       nodes: Dataset[NodeRow],
       edges: Dataset[EdgeRow],
       properties: Dataset[PropertyRow],
       triples: DataFrame, // (doc_id, subj, pred, obj) distinct, canonical
       droppedEdges: DataFrame, // (doc_id, chunk_id, source, target, relationship)
-      cleanup: () => Unit)
+      cleanup: () => Unit = () => ())
 
   /** Provenance struct incl. visual origin (reference MetadataVisual,
     * persistence/metadata.py:10-22): mentions sourced from a table/figure
@@ -84,7 +85,11 @@ object GraphTables {
         s"${prefix}_cd", s"${prefix}_cc", s"${prefix}_cn", s"${prefix}_ccn", s"${prefix}_ccan")
   }
 
-  def build(logs: Dataset[ExtractionLog], mapping: DataFrame): Materialized = {
+  def build(logs: Dataset[ExtractionLog], mapping: DataFrame): Materialized =
+    Materialize.Scope.open(scope => tables(logs, mapping).copy(cleanup = () => scope.close()))
+
+  /** The tables; their materializations register with the current scope. */
+  private def tables(logs: Dataset[ExtractionLog], mapping: DataFrame): Materialized = {
     val spark = logs.sparkSession
     import spark.implicits._
 
@@ -188,7 +193,7 @@ object GraphTables {
     // first one to arrive populates the cache (block-level locking dedups
     // the concurrent computation). Column-pruned to what the two
     // consumers and metaStruct read.
-    val (withIds, withIdsRdd) = graft.core.Materialize.stageCutLazyHandle(withBoth
+    val withIds = Materialize.stageCutLazy(withBoth
       .filter(col("frm_id").isNotNull && col("to_id").isNotNull)
       .select(col("doc_id"), col("chunk_id"), col("media_ref"), col("visual_kind"),
         col("relationship"), col("src_canon"), col("dst_canon"),
@@ -248,8 +253,6 @@ object GraphTables {
       edges.as[EdgeRow],
       properties.as[PropertyRow],
       triples,
-      droppedEdges,
-      () => { nodes.unpersist(blocking = false); resolved.unpersist(blocking = false)
-        withIdsRdd.unpersist(blocking = false) })
+      droppedEdges)
   }
 }

@@ -44,18 +44,13 @@ object Classifier {
 
   /** Train on `train(labelCol, trainTextCol)`, score every row of `df`.
     * Returns (id, pred, n_tokens, n_oov, score), one row per document,
-    * score = the winning class's unnormalized log-posterior (4 dp). */
+    * score = the winning class's unnormalized log-posterior (4 dp). The
+    * one cache, the class-token count model, registers with the caller's
+    * [[graft.core.Materialize.Scope]] (lineage kept: consumers after it
+    * closes recompute instead of failing). */
   def naiveBayes(df: DataFrame, idCol: String, textCol: String,
                  train: DataFrame, labelCol: String, trainTextCol: String,
-                 addK: Double = 1.0): DataFrame =
-    naiveBayesHandle(df, idCol, textCol, train, labelCol, trainTextCol, addK)._1
-
-  /** [[naiveBayes]] plus a cleanup thunk freeing the one cache it pins
-    * (the class-token count model; lineage kept, late consumers recompute
-    * instead of failing). */
-  def naiveBayesHandle(df: DataFrame, idCol: String, textCol: String,
-                       train: DataFrame, labelCol: String, trainTextCol: String,
-                       addK: Double = 1.0): (DataFrame, () => Unit) = {
+                 addK: Double = 1.0): DataFrame = {
     val tr = train.select(col(labelCol).cast("string").as("c"),
       tokArr(col(trainTextCol)).as("ws"))
 
@@ -67,7 +62,7 @@ object Classifier {
     // ONE train token scan: (class, token) occurrence counts; class totals
     // and the global vocabulary are exact rollups of the materialized
     // aggregate, not extra corpus passes
-    val (ct, ctRdd) = graft.core.Materialize.stageCutHandle(
+    val ct = graft.core.Materialize.stageCut(
       tr.select(col("c"), explode(col("ws")).as("t"))
         .groupBy("c", "t").agg(count(lit(1)).as("cnt")))
     val ctot = ct.groupBy("c").agg(sum("cnt").as("cnt_c"))
@@ -113,11 +108,10 @@ object Classifier {
 
     // argmax with deterministic ties: min of (−s, c) picks the highest
     // score, then the lexicographically smaller class — no window shuffle
-    val out = scored.groupBy("id")
+    scored.groupBy("id")
       .agg(min(struct((-col("s")).as("ns"), col("c"), col("n_d"), col("n_oov"), col("s"))).as("w"))
       .select(col("id"), col("w.c").as("pred"),
         col("w.n_d").as("n_tokens"), col("w.n_oov").as("n_oov"),
         round(col("w.s"), 4).as("score"))
-    (out, () => ctRdd.unpersist(blocking = false))
   }
 }

@@ -25,12 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** [[curateHandle]] for one-shot use (caches stay pinned to session end). */
-  def curate(docs: DataFrame, idCol: String, textCol: String,
-             budget: Long = 2048, lang: String = "en"): DataFrame =
-    curateHandle(docs, idCol, textCol, budget, lang)._1
-
-  /** Run the funnel. Returns (packed, stats, cleanup):
+  /** Run the funnel. Returns (packed, stats):
     *
     * '''Id contract''': `idCol` must be castable to LONG — the funnel
     * normalizes ids to long at entry (the packer's deterministic
@@ -42,12 +37,12 @@ object Curation {
     * fingerprint column if collision risk is acceptable).
     *   packed — (id, n_tokens, tok_offset, bin), the training-shard layout
     *   of every surviving train-split document;
-    *   stats — (stage, n) retention counts per funnel stage, in order;
-    *   cleanup — frees the two funnel caches plus each stage operator's
-    *   working sets (lineage kept: late consumers recompute, never fail). */
-  def curateHandle(docs: DataFrame, idCol: String, textCol: String,
-                   budget: Long = 2048, lang: String = "en")
-      : (DataFrame, DataFrame, () => Unit) = {
+    *   stats — (stage, n) retention counts per funnel stage, in order.
+    * The two funnel caches and each stage operator's working sets register
+    * with the caller's [[graft.core.Materialize.Scope]] (lineage kept:
+    * consumers after it closes recompute, never fail). */
+  def curate(docs: DataFrame, idCol: String, textCol: String,
+             budget: Long = 2048, lang: String = "en"): (DataFrame, DataFrame) = {
     val base = docs.select(col(idCol).cast("long").as("id"),
       coalesce(col(textCol), lit("")).as("text"))
 
@@ -69,17 +64,17 @@ object Curation {
         round(graft.functions.TextFns.nonAlphaRatioCol(col("text_clean")), 4) <= 0.4)
     // fan-in 1: the quality-surviving corpus feeds exact dedup AND the
     // survivor semi join
-    val (qc, qcRdd) = graft.core.Materialize.stageCutHandle(qKept)
+    val qc = graft.core.Materialize.stageCut(qKept)
 
     val ex = qc.join(
       Dedup.exact(qc, "id", "text_clean").filter(col("keep")).select("id"),
       Seq("id"), "left_semi")
     // fan-in 2: exact survivors feed LSH pair generation, cluster
     // formation, and the survivor semi join
-    val (exc, excRdd) = graft.core.Materialize.stageCutHandle(ex)
+    val exc = graft.core.Materialize.stageCut(ex)
 
     val pairs = Dedup.minhashLshPairs(exc, "id", "text_clean")
-    val (clusters, clustersFree) = Dedup.dedupClustersHandle(exc, "id", pairs)
+    val clusters = Dedup.dedupClusters(exc, "id", pairs)
     // dedupClusters emits STRING ids (CC labels are strings); cast them
     // back to the funnel's long ids EXPLICITLY — leaving the cross-type
     // equi-join to implicit coercion is exact under ANSI but degrades to
@@ -100,7 +95,7 @@ object Curation {
     val toks = trainDocs.select(col("id"),
       graft.functions.TextFns.estimateTokensCol(col("text_clean"))
         .cast("long").as("n_tokens"))
-    val (packed, packedFree) = Packing.packHandle(toks, "id", "n_tokens", budget)
+    val packed = Packing.pack(toks, "id", "n_tokens", budget)
 
     def stage(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).cast("long").as("n")).select(lit(name).as("stage"), col("n"))
@@ -111,13 +106,6 @@ object Curation {
       .unionByName(stage("neardup_kept", nearKept))
       .unionByName(stage("train_split", trainDocs))
       .unionByName(stage("packed", packed))
-
-    val cleanup: () => Unit = () => {
-      clustersFree(); packedFree()
-      qcRdd.unpersist(blocking = false)
-      excRdd.unpersist(blocking = false)
-      ()
-    }
-    (packed, stats, cleanup)
+    (packed, stats)
   }
 }

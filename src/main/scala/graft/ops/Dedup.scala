@@ -145,52 +145,21 @@ object Dedup {
     * i.e. the two docs overlap only through boilerplate; at the default
     * 0.8 threshold such a pair is not a near-duplicate. Pass
     * maxShingleDf=0 to EXPLICITLY opt into the uncapped all-shingles
-    * plan (small data / oracle-parity mode only). */
+    * plan (small data / oracle-parity mode only).
+    *
+    * The capped path caches the exploded (id, shingle) stream and the
+    * hot-shingle table; both register with the caller's
+    * [[graft.core.Materialize.Scope]]. The uncapped path caches nothing. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.8,
-                        maxShingleDf: Long = DefaultMaxShingleDf): DataFrame =
-    // fire-and-forget callers discard the cleanup thunk, so this wrapper
-    // must not pin a corpus-TOKEN-sized cache for the session lifetime:
-    // it trades the exploded-stream cache for re-shingling (3 scans) and
-    // pins only the bounded working sets (dup groups <= cap members each,
-    // per-doc features O(#docs)). Latency-sensitive callers that can free
-    // eagerly use [[ngramJaccardPairsHandle]], which keeps the
-    // single-shingle-pass cache.
-    ngramJaccardImpl(df, idCol, textCol, k, threshold, maxShingleDf,
-      cacheExploded = false)._1
-
-  /** [[ngramJaccardPairs]] plus a cleanup thunk for long-lived sessions:
-    * frees the capped path's working-set caches (the exploded stream + the
-    * hot-shingle table) once the caller has consumed the result; the
-    * uncapped path caches nothing, so its thunk is a no-op. Without it
-    * each capped invocation pins its working set for the session's
-    * lifetime; lineage is kept, so a post-cleanup consumer recomputes
-    * instead of failing. */
-  def ngramJaccardPairsHandle(df: DataFrame, idCol: String, textCol: String,
-                              k: Int = 3, threshold: Double = 0.8,
-                              maxShingleDf: Long = DefaultMaxShingleDf): (DataFrame, () => Unit) =
-    ngramJaccardImpl(df, idCol, textCol, k, threshold, maxShingleDf,
-      cacheExploded = true)
-
-  /** `cacheExploded = true`: cache the exploded (id, shingle) stream so
-    * the corpus is shingled exactly once (fastest; corpus-token-sized
-    * cache until the handle's cleanup runs). `false`: never materialize
-    * anything corpus-token-sized — the shingle scan runs once per
-    * consumer (3×), and only the bounded dup-group / per-doc-feature
-    * tables are cached (the right trade for callers that cannot free). */
-  private def ngramJaccardImpl(df: DataFrame, idCol: String, textCol: String,
-                               k: Int, threshold: Double, maxShingleDf: Long,
-                               cacheExploded: Boolean): (DataFrame, () => Unit) = {
+                        maxShingleDf: Long = DefaultMaxShingleDf): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, k)
     if (maxShingleDf > 0) {
       // the capped path reads the exploded (id, g) stream THREE times (hot
-      // shingle counts, dup-shingle groups, per-doc features)
-      val lazyEx = sets.select(col("id"), explode(col("sh")).as("g"))
-      val (ex, exFree): (DataFrame, () => Unit) =
-        if (cacheExploded) {
-          val (d, r) = graft.core.Materialize.stageCutHandle(lazyEx)
-          (d, () => r.unpersist(blocking = false))
-        } else (lazyEx, () => ())
+      // shingle counts, dup-shingle groups, per-doc features): cut it, so
+      // the corpus is shingled exactly once
+      val ex = graft.core.Materialize.stageCut(
+        sets.select(col("id"), explode(col("sh")).as("g")))
       // Capped path: candidate generation AND exact verification without
       // ever shuffling a full shingle array. Shared shingles split by the
       // global hotness of the shingle (df > cap), and the two halves of
@@ -213,18 +182,14 @@ object Dedup {
       // shingle's entire posting list (millions of ids at corpus scale)
       // in one aggregation buffer before discarding it.
       // ALWAYS stage-cut the (tiny, O(#hot shingles)) hot table: its two
-      // consumers sit in DIFFERENT jobs (the `docFeats` stage cut's
-      // left-join broadcast and the final job's anti-join broadcast under
-      // the lazy `grouped`), so
+      // consumers are two broadcasts (the `docFeats` left join and the
+      // anti-join under the lazy `grouped`), each its own job, so
       // without a cut the full-corpus hot aggregation runs once per
       // broadcast — exchange reuse never applies across jobs. One tiny
       // barrier buys back a full exploded-stream aggregation.
       val hot0 = ex.groupBy("g").agg(count(lit(1)).as("df_g"))
         .filter(col("df_g") > maxShingleDf).select("g")
-      val (hot, hotFree): (DataFrame, () => Unit) = {
-        val (d, r) = graft.core.Materialize.stageCutHandle(hot0)
-        (d, () => r.unpersist(blocking = false))
-      }
+      val hot = graft.core.Materialize.stageCut(hot0)
       // dup-shingle working set (groups of 2..cap docs): LAZY — its two
       // consumers (the l/r posexplode sides of the pair join) sit in the
       // SAME job, so AQE stage reuse dedups the aggregation exchange under
@@ -249,20 +214,11 @@ object Dedup {
       // one corpus pass for both per-doc features: full set size and the
       // doc's (small) hot-shingle set — collect_set skips the nulls the
       // left join leaves on non-hot shingles, so hsh is [] when none.
-      // Consumed twice (ida / idb join sides): with the exploded stream
-      // uncached, stage-cut this O(#docs) table instead so the second
-      // consumer doesn't trigger a fourth shingle scan.
-      val docFeats0 = ex
+      val docFeats = ex
         .join(broadcast(hot.withColumn("is_hot", lit(true))), Seq("g"), "left")
         .groupBy("id")
         .agg(count(lit(1)).as("n"),
           collect_set(when(col("is_hot"), col("g"))).as("hsh"))
-      val (docFeats, docFeatsFree): (DataFrame, () => Unit) =
-        if (cacheExploded) (docFeats0, () => ())
-        else {
-          val (d, r) = graft.core.Materialize.stageCutHandle(docFeats0)
-          (d, () => r.unpersist(blocking = false))
-        }
       // size prune before the hot-set intersection
       val withFeats = pairRare
         .join(docFeats.select(col("id").as("ida"), col("n").as("na"),
@@ -270,13 +226,8 @@ object Dedup {
         .join(docFeats.select(col("id").as("idb"), col("n").as("nb"),
           col("hsh").as("hshb")), Seq("idb"))
         .filter(sizeOk(threshold))
-      val out = exactJaccard(withFeats,
+      exactJaccard(withFeats,
         col("ir") + size(array_intersect(col("hsha"), col("hshb"))), threshold)
-      (out, () => {
-        docFeatsFree()
-        hotFree()
-        exFree()
-      })
     } else {
       // uncapped (oracle-parity mode): the oracle's own formulation — group
       // sizes are unbounded, so no collect_set, but a streaming self-join
@@ -287,7 +238,7 @@ object Dedup {
       val shared = side("a").join(side("b"),
           col("ga") === col("gb") && col("ida") < col("idb") && sizeOk(threshold))
         .groupBy("ida", "idb", "na", "nb").agg(count(lit(1)).as("inter"))
-      (exactJaccard(shared, col("inter"), threshold), () => ())
+      exactJaccard(shared, col("inter"), threshold)
     }
   }
 
@@ -351,6 +302,10 @@ object Dedup {
       .select(col("ida"), col("idb"), hamming.as("hamming"))
   }
 
+  /** Valve-trip counter — spec observability only (OpsSpec asserts the
+    * valve fires on a hot-bucket corpus and stays silent on normal data). */
+  @volatile private[graft] var simhashValveTrips: Long = 0L
+
   /** SimHash-blocked near-dup pairs with EXACT n-gram Jaccard verification:
     * same banded candidate generation as [[simhashPairs]], but candidates
     * are verified against the true k-shingle Jaccard (>= threshold) rather
@@ -367,19 +322,7 @@ object Dedup {
     * ([[simhashPairs]]'s 16-bit default) is the near-duplicate detector
     * for ham<=3 / J>=0.95 territory. This verified variant is audited
     * recall 1.0 vs the exact pair set (OracleCheck + the OpsSpec
-    * exact-set test). */
-  def simhashVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
-                           k: Int = 3, threshold: Double = 0.8,
-                           maxHamming: Int = 15, bandBits: Int = 4): DataFrame =
-    simhashVerifiedPairsHandle(df, idCol, textCol, k, threshold, maxHamming, bandBits)._1
-
-  /** Valve-trip counter — spec observability only (OpsSpec asserts the
-    * valve fires on a hot-bucket corpus and stays silent on normal data). */
-  @volatile private[graft] var simhashValveTrips: Long = 0L
-
-  /** [[simhashVerifiedPairs]] plus a cleanup thunk freeing the one cache it
-    * holds, the (id, sig, n) signature table the valve probe and the band
-    * join both read (same contract as [[ngramJaccardPairsHandle]]).
+    * exact-set test).
     *
     * '''Candidate-volume valve''': the wide net (4-bit bands) buckets
     * ~n/16 docs per band value on a homogeneous corpus, so co-bucketed
@@ -392,12 +335,15 @@ object Dedup {
     * audited by DedupSpec/OracleCheck) instead of materializing a
     * quadratic join. The default bound caps the candidate join at a size
     * one stage handles comfortably; verify-scale corpora never trip it,
-    * so the oracle bridge keeps its exact wide-net semantics there. */
-  def simhashVerifiedPairsHandle(df: DataFrame, idCol: String, textCol: String,
-                                 k: Int = 3, threshold: Double = 0.8,
-                                 maxHamming: Int = 15, bandBits: Int = 4,
-                                 maxCandidates: Long = 100000000L)
-      : (DataFrame, () => Unit) = {
+    * so the oracle bridge keeps its exact wide-net semantics there.
+    *
+    * The one cache, the (id, sig, n) signature table the valve probe and
+    * the band join both read, registers with the caller's
+    * [[graft.core.Materialize.Scope]]; a valve trip frees it at once. */
+  def simhashVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
+                           k: Int = 3, threshold: Double = 0.8,
+                           maxHamming: Int = 15, bandBits: Int = 4,
+                           maxCandidates: Long = 100000000L): DataFrame = {
     // validate UNCONDITIONALLY, before the probe: otherwise a bad banding
     // config on a hot corpus silently succeeds through the minhash
     // fallback while the same call on a sparse corpus throws — parameter
@@ -407,7 +353,7 @@ object Dedup {
     // and stage-cut: the valve probe and the non-tripped band join both
     // read them (recomputing the tokenize+FNV fold per consumer would
     // double the corpus scan cost)
-    val (sigs, sigsRdd) = graft.core.Materialize.stageCutHandle(
+    val (sigs, sigsRdd, _) = graft.core.Materialize.stageCutHandleN(
       df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig"),
         size(shinglesUdf(col(textCol), lit(k))).as("n")))
     // double, not long: the probe is a heuristic and Σc² on a pathological
@@ -428,11 +374,10 @@ object Dedup {
         "DedupSpec/OracleCheck). The wide net is an oracle bridge for verify-scale " +
         "corpora, not a production detector -- see simhashPairs for the linear path.")
       sigsRdd.unpersist(blocking = false)
-      (minhashLshPairs(df, idCol, textCol, k, threshold = threshold), () => ())
+      minhashLshPairs(df, idCol, textCol, k, threshold = threshold)
     } else
-      (bandedJaccard(sigs, keys, bands, hamming <= maxHamming, differs,
-        shingleSets(df, idCol, textCol, k), threshold),
-        () => sigsRdd.unpersist(blocking = false))
+      bandedJaccard(sigs, keys, bands, hamming <= maxHamming, differs,
+        shingleSets(df, idCol, textCol, k), threshold)
   }
 
   /** Near-dup **clustering with survivor selection** — what a training
@@ -443,37 +388,30 @@ object Dedup {
     * bounds a component, and near-dup chains have no bounded diameter), so
     * components come from the DataFrame large-star/small-star contraction
     * ([[graft.link.ConnectedComponents.runBigStar]]), O(log² n) rounds.
-    * Output: (id, group, keep). Singleton docs keep themselves. */
-  def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
-    dedupClustersHandle(df, idCol, pairs)._1
-
-  /** [[dedupClusters]] plus a cleanup thunk for long-lived sessions: the
-    * expensive pair-table cache is ALWAYS freed eagerly here (once CC has
-    * converged the star-relation cache carries everything the output plan
-    * reads; kept lineage means a post-unpersist block loss recomputes
-    * instead of failing), and the thunk frees that small cache once the
-    * caller has consumed/persisted the result — without it, repeated
-    * invocations in one session would pin one star relation each. */
-  def dedupClustersHandle(df: DataFrame, idCol: String, pairs: DataFrame)
-      : (DataFrame, () => Unit) = {
+    * Output: (id, group, keep). Singleton docs keep themselves.
+    *
+    * The expensive pair-table cache is freed before returning (once CC has
+    * converged, the star-relation cache carries everything the output
+    * reads); that small cache registers with the caller's
+    * [[graft.core.Materialize.Scope]]. */
+  def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     // materialize the pair stage ONCE (it is typically the output of an
     // expensive LSH pipeline) so CC iterations never recompute it
-    val (p, pRdd) = graft.core.Materialize.stageCutHandle(
+    val (p, pRdd, _) = graft.core.Materialize.stageCutHandleN(
       pairs.select(col("ida").cast("string").as("a"),
         col("idb").cast("string").as("b")))
     // only the pair graph iterates — the near-dup graph is a vanishing
     // fraction of the corpus, so the contraction rounds never shuffle the
     // full id set
-    val (comp, compRdd) = graft.link.ConnectedComponents.runBigStarHandle(
+    val comp = graft.link.ConnectedComponents.starRelation(
       p.select(lit("g").as("key"), col("a"), col("b")))
     pRdd.unpersist(blocking = false)
     // component label = lexicographic min member, so keep == (id == group)
     // — no window shuffle; roots and singletons (no row) keep themselves
-    val out = df.select(col(idCol).cast("string").as("id"))
+    df.select(col(idCol).cast("string").as("id"))
       .join(comp.select(col("v").as("id"), col("component")), Seq("id"), "left")
       .withColumn("group", coalesce(col("component"), col("id")))
       .select(col("id"), col("group"), (col("id") === col("group")).as("keep"))
-    (out, () => compRdd.unpersist(blocking = false))
   }
 
   /** Embedding-cosine near-dup pairs via multi-table random-hyperplane LSH
@@ -649,17 +587,16 @@ object Dedup {
     * Output: (ida, idb, cluster, cosine) with ida < idb.
     *
     * NOTE: the valve probe makes DataFrame construction EAGER here (the
-    * assignment stage-cuts so probe + pair join share one pass). */
+    * assignment stage-cuts so probe + pair join share one pass; the cut
+    * registers with the caller's [[graft.core.Materialize.Scope]]). */
   def semanticClusterPairs(df: DataFrame, idCol: String, vecCol: String,
                            centroids: Array[Array[Float]],
                            threshold: Double = 0.95,
                            maxCandidates: Long = 100000000L): DataFrame = {
-    val (assigned, aRdd) = graft.core.Materialize.stageCutHandle(
+    val assigned = graft.core.Materialize.stageCut(
       Similarity.assignClusters(
         df.select(col(idCol).as("id"), col(vecCol).as("v")), "v", centroids))
-    val out = guardedPairsFromAssigned(assigned, threshold, maxCandidates)
-    aRdd.unpersist(blocking = false) // lineage kept; consumers recompute
-    out
+    guardedPairsFromAssigned(assigned, threshold, maxCandidates)
   }
 
   /** Valve-trip counter — spec observability only (OpsSpec asserts the
@@ -734,35 +671,27 @@ object Dedup {
     * near-dup set, same survivor contract as the other dedup ops.
     * Callers that need oracle-reproducible clustering pass explicit
     * `centroids` (e.g. the first-k-ids seed set the q_semantic_dedup
-    * entry uses); production passes None and trains. The materialized
-    * assignment stays cached for the session (slim id+cluster+vec rows);
-    * long-lived sessions free it via [[semanticDedupHandle]]. */
+    * entry uses); production passes None and trains. `maxCandidates` is
+    * the hot-cluster valve of [[semanticClusterPairs]]. The assignment
+    * (slim id+cluster+vec rows) and the component caches register with
+    * the caller's [[graft.core.Materialize.Scope]]. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     centroids: Option[Array[Array[Float]]] = None,
                     threshold: Double = 0.95, nClusters: Int = 16,
-                    seed: Long = 7L): DataFrame =
-    semanticDedupHandle(df, idCol, vecCol, centroids, threshold, nClusters, seed)._1
-
-  /** [[semanticDedup]] plus a cleanup thunk freeing the assignment and
-    * component caches once the caller has consumed the result. */
-  def semanticDedupHandle(df: DataFrame, idCol: String, vecCol: String,
-                          centroids: Option[Array[Array[Float]]] = None,
-                          threshold: Double = 0.95, nClusters: Int = 16,
-                          seed: Long = 7L,
-                          maxCandidates: Long = 100000000L): (DataFrame, () => Unit) = {
+                    seed: Long = 7L,
+                    maxCandidates: Long = 100000000L): DataFrame = {
     val cents = centroids.getOrElse(
       Similarity.trainCentroids(df.select(col(idCol), col(vecCol)),
         idCol, vecCol, nLists = nClusters, seed = seed))
-    val (assigned, aRdd) = graft.core.Materialize.stageCutHandle(
+    val assigned = graft.core.Materialize.stageCut(
       Similarity.assignClusters(
         df.select(col(idCol).as("id"), col(vecCol).as("v")), "v", cents))
-    val (surv, freeCc) = dedupClustersHandle(
+    val surv = dedupClusters(
       assigned.select("id"), "id",
       guardedPairsFromAssigned(assigned, threshold, maxCandidates))
-    val out = assigned.select(col("id").cast("string").as("id"),
+    assigned.select(col("id").cast("string").as("id"),
         col("cluster").cast("long").as("cluster"))
       .join(surv, Seq("id"))
       .select("id", "cluster", "group", "keep")
-    (out, () => { freeCc(); aRdd.unpersist(blocking = false) })
   }
 }

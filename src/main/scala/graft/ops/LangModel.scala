@@ -62,20 +62,13 @@ object LangModel {
     * `train`. Returns (id, n_tokens, n_oov, avg_logprob, ppl), one row
     * per input document, ratios rounded to 4 decimals.
     *
-    * The bigram-count model table stays cached for the session (it is
-    * vocabulary-sized, the thing worth caching); long-lived sessions use
-    * [[bigramPerplexityHandle]] and free it once the result is consumed. */
+    * The bigram-count model table is cached (it is vocabulary-sized, the
+    * thing worth caching) and registers with the caller's
+    * [[graft.core.Materialize.Scope]] (lineage kept: consumers after it
+    * closes recompute instead of failing). */
   def bigramPerplexity(df: DataFrame, idCol: String, textCol: String,
                        train: DataFrame, trainTextCol: String,
-                       addK: Double = 1.0): DataFrame =
-    bigramPerplexityHandle(df, idCol, textCol, train, trainTextCol, addK)._1
-
-  /** [[bigramPerplexity]] plus a cleanup thunk freeing the one cache it
-    * pins (the bigram-count model table; lineage is kept, so a late
-    * consumer recomputes instead of failing). */
-  def bigramPerplexityHandle(df: DataFrame, idCol: String, textCol: String,
-                             train: DataFrame, trainTextCol: String,
-                             addK: Double = 1.0): (DataFrame, () => Unit) = {
+                       addK: Double = 1.0): DataFrame = {
     val tp = pairs(train, trainTextCol, trainTextCol)
       .select("w1", "w2")
     // ONE train scan: the bigram-count aggregate is materialized
@@ -86,7 +79,7 @@ object LangModel {
     // distinct w2 IS the train vocabulary, so `<s>` can never leak in.
     // The previous shape derived vocab/bc/cc from three independent lazy
     // scans of the exploded pair stream.
-    val (bc, bcRdd) = graft.core.Materialize.stageCutHandle(
+    val bc = graft.core.Materialize.stageCut(
       tp.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
     val vocab = bc.select(col("w2").as("w")).distinct()
     val vsize = vocab.agg(count(lit(1)).as("v"))
@@ -116,12 +109,11 @@ object LangModel {
       .agg(count(lit(1)).as("n_tokens"), sum("oov").as("n_oov"),
         sum("lp").as("s"))
 
-    val out = df.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
+    df.select(col(idCol).as("id")).join(scored, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("n_oov"), lit(0L)).as("n_oov"),
         round(coalesce(col("s") / col("n_tokens"), lit(0.0)), 4).as("avg_logprob"),
         round(coalesce(exp(-(col("s") / col("n_tokens"))), lit(0.0)), 4).as("ppl"))
-    (out, () => bcRdd.unpersist(blocking = false))
   }
 }

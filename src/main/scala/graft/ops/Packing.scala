@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Sequence packing for training export: assign every document a global
   * token offset (exclusive running sum of its token count in ascending id
@@ -31,36 +30,27 @@ import org.apache.spark.storage.StorageLevel
   */
 object Packing {
 
-  /** [[packHandle]] without the cache-cleanup thunk, for one-shot use —
-    * the intermediate (id, tokens) cache stays pinned until session end,
-    * so sessions that pack repeatedly must use [[packHandle]] (or sweep
-    * `sparkContext.getPersistentRDDs`, as Bench does between queries). */
-  def pack(df: DataFrame, idCol: String, tokensCol: String, budget: Long,
-           numPartitions: Int = 0): DataFrame =
-    packHandle(df, idCol, tokensCol, budget, numPartitions)._1
-
   /** Pack `df` into token-budget bins; returns
-    * (id, n_tokens, tok_offset, bin) plus a thunk that frees the
-    * intermediate cache once the caller has consumed the result.
+    * (id, n_tokens, tok_offset, bin). The intermediate (id, tokens) cache
+    * registers with the caller's [[graft.core.Materialize.Scope]].
     * `id` must be unique (it is the global packing order) and
     * numeric-castable — a failed cast surfaces loudly (ANSI cast error,
     * or the non-nullable tuple encoder rejecting the null), never as a
     * silently misplaced row. */
-  def packHandle(df: DataFrame, idCol: String, tokensCol: String, budget: Long,
-                 numPartitions: Int = 0): (DataFrame, () => Unit) = {
+  def pack(df: DataFrame, idCol: String, tokensCol: String, budget: Long,
+           numPartitions: Int = 0): DataFrame = {
     require(budget > 0, s"pack budget must be positive, got $budget")
     val spark = df.sparkSession
     import spark.implicits._
     val nPart = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val rdd = df
+    val rdd = graft.core.Materialize.persist(df
       .select(col(idCol).cast("long").as("id"),
         col(tokensCol).cast("long").as("n_tokens"))
       .repartitionByRange(nPart, col("id"))
       .sortWithinPartitions("id")
       .as[(Long, Long)]
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .rdd)
     // pass 1: one row per partition — the only driver-side data is O(nPart)
     val sums = rdd
       .mapPartitionsWithIndex((pid, it) => Iterator.single(pid -> it.map(_._2).sum),
@@ -71,7 +61,7 @@ object Packing {
     val bOff = spark.sparkContext.broadcast(offsets)
     // pass 2: within-partition running sum seeded by the partition's
     // exclusive prefix — no further shuffle
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
+    rdd.mapPartitionsWithIndex { (pid, it) =>
       var cum = bOff.value(pid)
       it.map { case (id, tok) =>
         val off = cum
@@ -79,6 +69,5 @@ object Packing {
         (id, tok, off, off / budget)
       }
     }.toDF("id", "n_tokens", "tok_offset", "bin")
-    (out, () => rdd.unpersist(blocking = false))
   }
 }

@@ -39,10 +39,10 @@ object BuildPipeline {
       documents: DataFrame,
       searchIndex: DataFrame,
       droppedEdges: DataFrame,
-      // frees the no-workdir stage-cut caches; lineage stays intact, so a
-      // late consumer recomputes instead of failing. Call once the outputs
-      // are persisted (the streaming path calls it per micro-batch); a
-      // no-op in checkpointed mode.
+      // frees the build's caches (the no-workdir stage cuts and anything
+      // a layer left cached); lineage stays intact, so a late consumer
+      // recomputes instead of failing. Call once the outputs are persisted
+      // (the streaming path calls it per micro-batch).
       cleanup: () => Unit = () => ())
 
   /** `docTags`: optional sidecar `(doc_id, tags: map<string,string>)` —
@@ -51,7 +51,17 @@ object BuildPipeline {
     * Document.tags, persistence/document.py + simple_repository.py:629-648). */
   def run(docs: Dataset[DocRow], extractor: SpanExtractor,
           checkpoints: Option[Checkpoints] = None,
-          docTags: Option[DataFrame] = None): BuildResult = {
+          docTags: Option[DataFrame] = None): BuildResult =
+    Materialize.Scope.open { scope =>
+      build(docs, extractor, checkpoints, docTags).copy(cleanup = () => scope.close())
+    }
+
+  /** The build; every cache it makes registers with the current scope —
+    * a long-running stream would otherwise accumulate ~9 cached RDDs per
+    * micro-batch until driver GC. */
+  private def build(docs: Dataset[DocRow], extractor: SpanExtractor,
+                    checkpoints: Option[Checkpoints],
+                    docTags: Option[DataFrame]): BuildResult = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -87,11 +97,6 @@ object BuildPipeline {
     // partition from the (deterministic, seeded) upstream instead of
     // crashing or corrupting — block availability can cost time, never
     // correctness.
-    // handles of the no-workdir stage cuts, so BuildResult.cleanup can free
-    // them deterministically once the caller has persisted the outputs —
-    // a long-running stream would otherwise accumulate ~9 cached RDDs per
-    // micro-batch until driver GC
-    val cuts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
     // The input table has THREE consumers (chunk packing, visual-span
     // routing inside the logs stage, full-text assembly for doc_meta) —
@@ -101,9 +106,7 @@ object BuildPipeline {
     // the block manager's per-partition lock shares it with the others,
     // and a fully-resumed checkpointed build never materializes it at
     // all. Freed with the other stage cuts by BuildResult.cleanup.
-    val (docsCut, docsRdd) = Materialize.stageCutLazyHandle(docs.toDF())
-    cuts += docsRdd
-    val docsC = docsCut.as[DocRow]
+    val docsC = Materialize.stageCutLazy(docs.toDF()).as[DocRow]
     // label the materializing jobs so the UI and graft.app.Profile
     // attribute stages to pipeline stages by name
     def stage(name: String, shared: Boolean = true)(compute: => DataFrame): DataFrame =
@@ -111,14 +114,7 @@ object BuildPipeline {
         checkpoints match {
           case Some(cp) => cp.stage(name)(compute)
           case None =>
-            if (shared) {
-              val (df, rdd) = Materialize.stageCutHandle(compute)
-              // stage() runs from concurrently forked branches — guard the
-              // plain ArrayBuffer (a lost append would leak the RDD past
-              // BuildResult.cleanup; a resize race could crash the build)
-              cuts.synchronized { cuts += rdd }
-              df
-            } else compute
+            if (shared) Materialize.stageCut(compute) else compute
         }
       }
 
@@ -201,9 +197,7 @@ object BuildPipeline {
       checkpoints match {
         case Some(cp) => cp.stage(name)(base.unionByName(part))
         case None =>
-          val (p, rdd) = Par.labelled(spark, s"graft-stage:$name-part")(Materialize.stageCutHandle(part))
-          cuts.synchronized { cuts += rdd }
-          base.unionByName(p)
+          base.unionByName(Par.labelled(spark, s"graft-stage:$name-part")(Materialize.stageCut(part)))
       }
     val nodesF = fork(stage("nodes") {
       layer.nodesWithCommunity.unionByName(layer.communityNodes).unionByName(layer.docNodes)
@@ -241,8 +235,7 @@ object BuildPipeline {
     val searchIndex = stage("search_index", shared = false)(SearchIndex.build(nodes, edges, properties))
 
     BuildResult(chunks, logs, mapping, nodes, edges, properties, triples,
-      documents, searchIndex, dropped,
-      () => cuts.foreach(_.unpersist(blocking = false)))
+      documents, searchIndex, dropped)
   }
 
   /** Parity metric: precision / recall of distinct (doc_id, subj, pred, obj)
@@ -258,8 +251,7 @@ object BuildPipeline {
     } finally {
       // deterministic release — a verify loop calling parity() per round
       // would otherwise pin two cached tables per call for the session
-      g.unpersist(blocking = false)
-      e.unpersist(blocking = false)
+      Seq(g, e).foreach(_.unpersist(blocking = false))
     }
   }
 }

@@ -31,36 +31,28 @@ object Centrality {
     *    never a driver-side collect, so the whole iteration stays on the
     *    executors.
     *  - each iteration materializes its rank table and FREES the superseded
-    *    one (same discipline as ConnectedComponents.runBigStarHandle):
-    *    plans stay O(1) deep instead of O(iterations) — flat driver
-    *    planning time —
-    *    and a run pins exactly one rank-table cache at any moment, not one
-    *    per iteration for the session's lifetime.
+    *    one (same discipline as ConnectedComponents.starRelation): plans
+    *    stay O(1) deep instead of O(iterations) — flat driver planning
+    *    time — and a run pins exactly one rank-table cache at any moment,
+    *    not one per iteration. The edge and degree tables are freed before
+    *    returning.
     *
     * High-degree hubs are exactly the rows AQE skew-splits on the (to)
     * aggregation; the (frm) join side is pre-divided by outdeg so hot
     * sources fan out value-free. Returns (id, rank) with rank rounded to
     * 6 decimals; ranks over all vertices sum to 1.
     *
-    * The returned frame reads the final cached rank table, which stays
-    * persisted for the session; long-lived callers use [[pageRankHandle]]
-    * and free it once the result is consumed (lineage is kept, so a late
-    * consumer recomputes instead of failing). */
+    * The returned frame reads the final cached rank table, which registers
+    * with the caller's [[graft.core.Materialize.Scope]] (lineage is kept,
+    * so a consumer after the scope closes recomputes instead of failing). */
   def pageRank(edges: DataFrame, frmCol: String = "frm", toCol: String = "to",
-               iterations: Int = 10, damping: Double = 0.85): DataFrame =
-    pageRankHandle(edges, frmCol, toCol, iterations, damping)._1
-
-  /** [[pageRank]] plus a cleanup thunk freeing the one cache the loop
-    * leaves behind (the final rank table). */
-  def pageRankHandle(edges: DataFrame, frmCol: String = "frm", toCol: String = "to",
-                     iterations: Int = 10, damping: Double = 0.85)
-      : (DataFrame, () => Unit) = {
+               iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val spark = edges.sparkSession
     // slim (src, dst) edge list, materialized ONCE — every iteration joins
     // against it; without the cut each iteration re-scans the edges input
-    val (e, eRdd) = graft.core.Materialize.stageCutHandle(
+    val (e, eRdd, _) = graft.core.Materialize.stageCutHandleN(
       edges.select(col(frmCol).as("src"), col(toCol).as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull))
     val vertices = e.select(col("src").as("id"))
@@ -68,41 +60,38 @@ object Centrality {
       .distinct()
     // (id, deg) for every vertex; deg null => dangling
     val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val (withDeg, dRdd) = graft.core.Materialize.stageCutHandle(
+    val (withDeg, dRdd, n) = graft.core.Materialize.stageCutHandleN(
       vertices.join(outDeg, Seq("id"), "left"))
-    val n = withDeg.count()
-    if (n == 0) {
-      eRdd.unpersist(blocking = false)
-      dRdd.unpersist(blocking = false)
-      return (spark.emptyDataFrame
-        .withColumn("id", lit(null).cast("string"))
-        .withColumn("rank", lit(null).cast("double")), () => ())
-    }
-    var (ranks, rRdd) = graft.core.Materialize.stageCutHandle(
-      withDeg.select(col("id"), lit(1.0 / n).as("rank")))
-    val base = (1.0 - damping) / n
-    for (_ <- 1 to iterations) {
-      val cur = ranks.join(withDeg.select("id", "deg"), Seq("id"))
-      val dangling = cur.agg(
-        coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0.0)).as("_dm"))
-      val contribs = cur.filter(col("deg").isNotNull)
-        .join(e, cur("id") === e("src"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum("c").as("inflow"))
-      val (cp, cpRdd) = graft.core.Materialize.stageCutHandle(
-        withDeg.select("id")
-          .join(contribs, Seq("id"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(col("id"),
-            (lit(base) + lit(damping) *
-              (coalesce(col("inflow"), lit(0.0)) + col("_dm") / n)).as("rank")))
-      rRdd.unpersist(blocking = false) // superseded; cp holds the data
-      ranks = cp
-      rRdd = cpRdd
-    }
-    eRdd.unpersist(blocking = false)
-    dRdd.unpersist(blocking = false)
-    (ranks.select(col("id"), round(col("rank"), 6).as("rank")),
-      () => rRdd.unpersist(blocking = false))
+    try {
+      if (n == 0)
+        spark.emptyDataFrame
+          .withColumn("id", lit(null).cast("string"))
+          .withColumn("rank", lit(null).cast("double"))
+      else {
+        var (ranks, rRdd, _) = graft.core.Materialize.stageCutHandleN(
+          withDeg.select(col("id"), lit(1.0 / n).as("rank")))
+        val base = (1.0 - damping) / n
+        for (_ <- 1 to iterations) {
+          val cur = ranks.join(withDeg.select("id", "deg"), Seq("id"))
+          val dangling = cur.agg(
+            coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0.0)).as("_dm"))
+          val contribs = cur.filter(col("deg").isNotNull)
+            .join(e, cur("id") === e("src"))
+            .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+            .groupBy("id").agg(sum("c").as("inflow"))
+          val (cp, cpRdd, _) = graft.core.Materialize.stageCutHandleN(
+            withDeg.select("id")
+              .join(contribs, Seq("id"), "left")
+              .crossJoin(broadcast(dangling))
+              .select(col("id"),
+                (lit(base) + lit(damping) *
+                  (coalesce(col("inflow"), lit(0.0)) + col("_dm") / n)).as("rank")))
+          rRdd.unpersist(blocking = false) // superseded; cp holds the data
+          ranks = cp
+          rRdd = cpRdd
+        }
+        ranks.select(col("id"), round(col("rank"), 6).as("rank"))
+      }
+    } finally Seq(eRdd, dRdd).foreach(_.unpersist(blocking = false))
   }
 }

@@ -68,15 +68,17 @@ object StreamingBuild {
     * replays the whole batch, so each write must be idempotent —
     * `appendBatch` overwrites the batch's own `_batch_id` partition, making
     * the replay a no-op for tables that already committed it. */
-  private def append(io: TableIO, r: BuildPipeline.BuildResult, batchId: Long): Unit = {
-    io.appendBatch(r.triples, "triples", batchId)
-    io.appendBatch(r.nodes, "nodes", batchId)
-    io.appendBatch(r.edges, "edges", batchId)
-    io.appendBatch(r.properties, "properties", batchId)
-    io.appendBatch(r.documents, "documents", batchId)
-    io.appendBatch(r.searchIndex, "search_index", batchId)
-    // all six tables are persisted — free this batch's stage-cut caches,
-    // or a long stream accumulates ~9 cached RDDs per micro-batch
-    r.cleanup()
-  }
+  private def append(io: TableIO, r: BuildPipeline.BuildResult, batchId: Long): Unit =
+    try {
+      io.appendBatch(r.triples, "triples", batchId)
+      io.appendBatch(r.nodes, "nodes", batchId)
+      io.appendBatch(r.edges, "edges", batchId)
+      io.appendBatch(r.properties, "properties", batchId)
+      io.appendBatch(r.documents, "documents", batchId)
+      io.appendBatch(r.searchIndex, "search_index", batchId)
+    } finally {
+      // free this batch's caches, also when a write throws — a long
+      // stream would otherwise accumulate ~9 cached RDDs per micro-batch
+      r.cleanup()
+    }
 }

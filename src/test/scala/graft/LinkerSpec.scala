@@ -67,7 +67,7 @@ class LinkerSpec extends SparkSpec {
           NodeExt("The John Smithsonian", "heads the cardiology department research wing")),
         edges = Seq(EdgeExt("Smith", "Research Council", "heads research in cardiology department wing")),
         properties = Seq(), main_visual_entity = "")))
-    val mapping = Linker.canonicalMapping(logs)
+    val mapping = Linker.canonicalMappingResult(logs).mapping
     val docRow = mapping.filter(col("chunk_id") === -1 && col("name_norm") === "smith").collect()
     assert(docRow.length === 1)
     assert(docRow.head.getAs[String]("canonical_norm") === "john smith")

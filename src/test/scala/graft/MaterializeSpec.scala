@@ -42,7 +42,7 @@ class MaterializeSpec extends SparkSpec {
 
   lazy val mat = {
     val ds = spark.createDataset(logs)
-    GraphTables.build(ds, Linker.canonicalMapping(ds))
+    GraphTables.build(ds, Linker.canonicalMappingResult(ds).mapping)
   }
 
   test("node dedup by (doc, lower(name)) with first-writer-wins description") {
@@ -62,7 +62,7 @@ class MaterializeSpec extends SparkSpec {
         nodes = Seq(NodeExt("anchor", "a node")),
         edges = Seq(EdgeExt("anchor", "ghost", "points at")),
         properties = Seq(), main_visual_entity = "")))
-    val m = GraphTables.build(ds, Linker.canonicalMapping(ds))
+    val m = GraphTables.build(ds, Linker.canonicalMappingResult(ds).mapping)
     assert(m.edges.count() === 0)
     assert(m.droppedEdges.count() === 1)
     val d = m.droppedEdges.collect().head
@@ -84,7 +84,7 @@ class MaterializeSpec extends SparkSpec {
       edges = Seq(EdgeExt("acme corp", "Acme Corp", "rebranded itself")),
       properties = Seq(), main_visual_entity = ""))
     val ds = spark.createDataset(selfLogs)
-    val m = GraphTables.build(ds, Linker.canonicalMapping(ds))
+    val m = GraphTables.build(ds, Linker.canonicalMappingResult(ds).mapping)
     assert(m.edges.count() === 0)
     assert(m.triples.count() === 0)
     val props = m.properties.collect()
@@ -113,7 +113,7 @@ class MaterializeSpec extends SparkSpec {
       ExtractionLog("d1", 1, is_visual = false,
         nodes = Seq(NodeExt("a", "x"), NodeExt("b", "y")),
         edges = Seq(EdgeExt("b", "a", "knows")), properties = Seq(), main_visual_entity = "")))
-    val m = GraphTables.build(ds, Linker.canonicalMapping(ds))
+    val m = GraphTables.build(ds, Linker.canonicalMappingResult(ds).mapping)
     val edges = m.edges.collect()
     assert(edges.length === 1)
     assert(edges.head.metadata.length === 2)
@@ -137,7 +137,7 @@ class MaterializeSpec extends SparkSpec {
       ExtractionLog("d1", 3, is_visual = false,
         nodes = Seq(NodeExt("Timmermans", "timmermans leads the finance team"), NodeExt("Acme", "a firm")),
         edges = Seq(EdgeExt("Acme", "Timmermans", "employs")), properties = Seq(), main_visual_entity = "")))
-    val mapping = Linker.canonicalMapping(ds)
+    val mapping = Linker.canonicalMappingResult(ds).mapping
     // chunk-level override rows exist for the ambiguous bare mention
     val overrides = mapping.filter(col("chunk_id") >= 0 && col("name_norm") === "timmermans")
       .collect().map(r => r.getAs[Int]("chunk_id") -> r.getAs[String]("canonical_norm")).toMap
@@ -157,7 +157,7 @@ class MaterializeSpec extends SparkSpec {
       nodes = Seq(NodeExt("Figure Hero", "caption"), NodeExt("Other", "caption")),
       edges = Seq(EdgeExt("Figure Hero", "Other", "is depicted with")),
       properties = Seq(), main_visual_entity = "Figure Hero")))
-    val m = GraphTables.build(ds, Linker.canonicalMapping(ds))
+    val m = GraphTables.build(ds, Linker.canonicalMappingResult(ds).mapping)
     val viz = m.nodes.collect().filter(_.is_visual).map(_.name)
     assert(viz.toSeq === Seq("Figure Hero"))
   }
@@ -173,7 +173,7 @@ class MaterializeSpec extends SparkSpec {
         edges = Seq(EdgeExt("chart entity", "text entity", "appears beside")),
         properties = Seq(), main_visual_entity = ""))
     val ds = spark.createDataset(vLogs)
-    val m = GraphTables.build(ds, Linker.canonicalMapping(ds))
+    val m = GraphTables.build(ds, Linker.canonicalMappingResult(ds).mapping)
     val byName = m.nodes.collect().map(n => n.name -> n).toMap
     val vis = byName("chart entity").metadata.flatMap(_.visual)
     assert(vis.nonEmpty)

@@ -168,11 +168,9 @@ class OpsSpec extends SparkSpec {
       (i.toLong, "the same boilerplate sentence repeated across the corpus body " * 5 +
         s"tail$i")).toDF("doc_id", "text")
     val before = Dedup.simhashValveTrips
-    val (tripped, freeT) = Dedup.simhashVerifiedPairsHandle(
+    val trippedPairs = scoped(Dedup.simhashVerifiedPairs(
       hot, "doc_id", "text", k = 3, threshold = 0.8, maxCandidates = 1000L)
-    val trippedPairs = tripped.select("ida", "idb").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    freeT()
+      .select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(Dedup.simhashValveTrips === before + 1, "the valve must trip loudly")
     // the LSH fallback keeps the contract: exact-verified pairs >= threshold
     val exact = Dedup.ngramJaccardPairs(hot, "doc_id", "text", k = 3, threshold = 0.8)
@@ -182,10 +180,7 @@ class OpsSpec extends SparkSpec {
     // the default bound does NOT trip on the fixture corpus (oracle bridge
     // keeps its exact wide-net semantics at verify scale)
     val b2 = Dedup.simhashValveTrips
-    val (untripped, freeU) = Dedup.simhashVerifiedPairsHandle(
-      docs, "doc_id", "text", k = 3, threshold = 0.8)
-    untripped.count()
-    freeU()
+    scoped(Dedup.simhashVerifiedPairs(docs, "doc_id", "text", k = 3, threshold = 0.8).count())
     assert(Dedup.simhashValveTrips === b2, "default valve must stay silent at verify scale")
   }
 
@@ -388,12 +383,10 @@ class OpsSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + lit(1000000L))
     val full = corpus.unionByName(planted)
     // production path: bounded-sample k-means centroids (no seed list)
-    val (ded, free) = Dedup.semanticDedupHandle(full, "vec_id", "embedding",
-      centroids = None, threshold = 0.95, nClusters = 8)
-    val byId = ded.collect()
+    val byId = scoped(Dedup.semanticDedup(full, "vec_id", "embedding",
+      centroids = None, threshold = 0.95, nClusters = 8).collect())
       .map(r => r.getAs[String]("id") ->
         ((r.getAs[String]("group"), r.getAs[Boolean]("keep")))).toMap
-    free()
     (0L until 10L).foreach { i =>
       // an identical copy always lands in its original's cluster, so the
       // pair is found regardless of where Lloyd put the centroids
@@ -424,11 +417,9 @@ class OpsSpec extends SparkSpec {
     val hot = base.toDF("vec_id", "embedding")
     val seed = Array(Array.tabulate(64)(_ => 1.0f))
     val before = Dedup.semanticValveTrips
-    val (ded, free) = Dedup.semanticDedupHandle(hot, "vec_id", "embedding",
-      centroids = Some(seed), threshold = 0.999, maxCandidates = 1000L)
-    val byId = ded.collect()
+    val byId = scoped(Dedup.semanticDedup(hot, "vec_id", "embedding",
+      centroids = Some(seed), threshold = 0.999, maxCandidates = 1000L).collect())
       .map(r => r.getAs[String]("id") -> r.getAs[String]("group")).toMap
-    free()
     assert(Dedup.semanticValveTrips === before + 1, "the valve must trip loudly")
     (0L until 10L).foreach { i =>
       assert(byId(i.toString) === byId((i + 1000L).toString),
@@ -440,10 +431,8 @@ class OpsSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$sf/embeddings.parquet")
     val seeds = corpus.filter(col("vec_id") < 8).orderBy("vec_id")
       .select("embedding").collect().map(_.getAs[Seq[Float]](0).toArray)
-    val (quiet, freeQ) = Dedup.semanticDedupHandle(corpus, "vec_id", "embedding",
-      centroids = Some(seeds), threshold = 0.95)
-    quiet.count()
-    freeQ()
+    scoped(Dedup.semanticDedup(corpus, "vec_id", "embedding",
+      centroids = Some(seeds), threshold = 0.95).count())
     assert(Dedup.semanticValveTrips === b2, "default valve must stay silent at verify scale")
   }
 
@@ -1006,9 +995,13 @@ class OpsSpec extends SparkSpec {
   test("curation funnel: monotone retention, contiguous packing, clean teardown") {
     import graft.ops.Curation
     docs.count() // materialize the fixture's own cache before the snapshot
-    val preCaches = spark.sparkContext.getPersistentRDDs.keySet
-    val (packed, stats, cleanup) = Curation.curateHandle(docs, "doc_id", "text")
-    val st = stats.collect().map(r => r.getString(0) -> r.getLong(1))
+    val preCaches = cachedRdds
+    val (st, rows) = scoped {
+      val (packed, stats) = Curation.curate(docs, "doc_id", "text")
+      (stats.collect().map(r => r.getString(0) -> r.getLong(1)),
+        packed.orderBy("id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
+    }
     val order = Seq("input", "lang_kept", "quality_kept", "exact_kept",
       "neardup_kept", "train_split", "packed")
     assert(st.map(_._1).toSeq === order)
@@ -1020,17 +1013,54 @@ class OpsSpec extends SparkSpec {
     assert(byName("train_split") === byName("packed"))
     assert(byName("packed") > 0)
     // offsets are the exclusive prefix sum in id order: contiguous, gapless
-    val rows = packed.orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     rows.foldLeft(0L) { case (expectOff, (_, n, off, bin)) =>
       assert(off === expectOff)
       assert(bin === off / 2048)
       off + n
     }
-    cleanup()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- preCaches
+    val leaked = cachedRdds -- preCaches
     assert(leaked.isEmpty,
       s"funnel teardown must release every cache it pinned, leaked: $leaked")
+  }
+
+  test("every caching op frees its caches when its scope closes; lineage recomputes") {
+    import graft.ops.{Classifier, Curation, LangModel}
+    import graft.query.Centrality
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+    val seeds = vecs.filter(col("vec_id") < 8).orderBy("vec_id")
+      .select("embedding").collect().map(_.getAs[Seq[Float]](0).toArray)
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+        maxShingleDf = 50L)),
+      "simhashVerifiedPairs" -> (() => Dedup.simhashVerifiedPairs(docs, "doc_id", "text")),
+      "dedupClusters" -> (() => Dedup.dedupClusters(docs, "doc_id",
+        Dedup.minhashLshPairs(docs, "doc_id", "text"))),
+      "semanticDedup" -> (() => Dedup.semanticDedup(vecs, "vec_id", "embedding", Some(seeds))),
+      "curate" -> (() => Curation.curate(docs, "doc_id", "text")._1),
+      "naiveBayes" -> (() => Classifier.naiveBayes(docs, "doc_id", "text",
+        docs, "source", "text")),
+      "pack" -> (() => Packing.pack(docs.select(col("doc_id"), length(col("text")).as("n")),
+        "doc_id", "n", budget = 2048L)),
+      "bigramPerplexity" -> (() => LangModel.bigramPerplexity(docs, "doc_id", "text",
+        docs, "text")),
+      "pageRank" -> (() => Centrality.pageRank(
+        Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")).toDF("frm", "to"))))
+    def sortedRows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    docs.count() // materialize the fixture's own cache before the snapshots
+    ops.foreach { case (name, op) =>
+      val before = cachedRdds
+      val scope = new graft.core.Materialize.Scope
+      val (out, rows, pinned) =
+        try scope.within {
+          val out = op()
+          val rows = sortedRows(out)
+          (out, rows, cachedRdds -- before)
+        } finally scope.close()
+      assert(rows.nonEmpty, s"$name: empty result proves nothing")
+      assert(pinned.nonEmpty, s"$name: no cache registered with the scope")
+      assert((cachedRdds -- before).isEmpty, s"$name leaked ${cachedRdds -- before}")
+      assert(sortedRows(out) === rows, s"$name: rows differ after close")
+    }
   }
 
   test("char entropy: closed-form values, empty docs, uniform vs degenerate") {

@@ -67,7 +67,7 @@ class SearchSpec extends SparkSpec {
       ExtractionLog("d1", 0, is_visual = false,
         nodes = Seq(NodeExt("Finance Team", "the finance department staff")),
         edges = Seq(), properties = Seq(), main_visual_entity = "")))
-    val m = GraphTables.build(logs, Linker.canonicalMapping(logs))
+    val m = GraphTables.build(logs, Linker.canonicalMappingResult(logs).mapping)
     val idx = SearchIndex.build(m.nodes.toDF(), m.edges.toDF(), m.properties.toDF())
     val hits = Search.quickSearch(idx, "quarterly revenue trend figure")
     val enriched = Search.enrich(hits, m.nodes.toDF(), m.edges.toDF(), m.properties.toDF())

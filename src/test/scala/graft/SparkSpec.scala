@@ -14,4 +14,13 @@ abstract class SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Run `body` in a fresh cache scope and close it afterwards. */
+  def scoped[T](body: => T): T = {
+    val scope = new graft.core.Materialize.Scope
+    try scope.within(body) finally scope.close()
+  }
+
+  /** Ids of the RDDs the session currently caches. */
+  def cachedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 }
