@@ -156,7 +156,7 @@ for r in $(seq 1 "$ROUNDS"); do
 done
 java $ADD_OPENS -cp "$CLASSES:/opt/spark/jars/*" \
   graft.app.ScalingBench summarize $CSV $OUT \
-  "standalone cluster, 1x8 vs 4x8-core executors (${EXEC_HEAP_GB}g each, pre-touch=${GRAFT_EXEC_PRETOUCH:-0}, waves=${GRAFT_TASKS_PER_CORE:-2}), pinned" \
+  "standalone cluster, 1x8 vs 4x8-core executors (${EXEC_HEAP_GB}g each, pre-touch=${GRAFT_EXEC_PRETOUCH:-0}, waves=2), pinned" \
   2>&1 | grep -E "\[scaling\]|^\|"
 echo "[scaling-driver] raw legs in $CSV"
 touch /tmp/campaign_done

@@ -276,20 +276,14 @@ object SparkEntry {
       Dedup.exact(s.read.parquet(t(d, "documents")), "doc_id", "text")),
     "q_fingerprint" -> ((s, d) =>
       TextAnalysis.fingerprint(s.read.parquet(t(d, "documents")), "doc_id", "text")),
-    // maxShingleDf bounds candidate volume (sum df^2) on stop-shingles; it
-    // prunes CANDIDATES only — surviving pairs re-verify against the FULL
-    // shingle sets (numerator and denominator), so the reported Jaccard is
-    // exact by construction and the uncapped DuckDB oracle hash-matches.
-    // The cap's only possible effect is dropping a pair whose EVERY shared
-    // shingle is hot. Measured capped (50) vs uncapped, exceptAll both ways:
-    // sf0.01 25 = 25 pairs, sf0.1 256 = 256 pairs, missing=0 spurious=0
-    // (OpsSpec pins the sf0.01 case).
+    // rare-first prefix-filtered self-join, verified on the full shingle
+    // sets: the exact pair relation the oracle computes, on any corpus.
     // no scope is open here, so the single-shingle-pass cache stays until
     // a sweep: Bench sweeps all persisted RDDs after each query and Verify
     // exits after one pass, so nothing pins past its use
     "q_ngram_jaccard" -> ((s, d) =>
       Dedup.ngramJaccardPairs(s.read.parquet(t(d, "documents")), "doc_id", "text",
-        k = 3, threshold = 0.8, maxShingleDf = 50L)),
+        k = 3, threshold = 0.8)),
     // oracle-checkable: candidates are verified with the EXACT shingle
     // Jaccard (no spurious pairs, values exact), so the only assumption the
     // exact-set oracle adds is banding recall 1.0 at J>=0.8. That is

@@ -15,7 +15,7 @@ object OracleCheck {
     spark.sparkContext.setLogLevel("WARN")
     for (sf <- args) {
       val docs = spark.read.parquet(s"/root/testdata/$sf/documents.parquet")
-      val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.8, maxShingleDf = 50L)
+      val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.8)
         .select("ida", "idb").cache()
       val mh = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 3, numPerm = 16, bands = 4, threshold = 0.8)
         .select("ida", "idb")

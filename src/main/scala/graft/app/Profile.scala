@@ -120,8 +120,9 @@ object Profile {
         val spark = session(rest.headOption.fold(cores)(_.toInt))
         val l = listen(spark)
         val t0 = System.nanoTime()
-        val n = BuildPipeline.run(Corpus.docs(spark, nDocs.toLong), new DeterministicExtractor)
-          .triples.count()
+        val triples = BuildPipeline.run(Corpus.docs(spark, nDocs.toLong),
+          new DeterministicExtractor).triples
+        val n = Par.labelled(spark, "graft-profile:count")(triples.count())
         println(f"[profile] build docs=$nDocs triples=$n wall=${secondsSince(t0)}%.1f s")
         (spark, l)
       case "query" :: sfDir :: reps :: queries if queries.nonEmpty =>

@@ -104,10 +104,9 @@ object Sessions {
     // single straggler idles every other core until the stage barrier; a
     // few waves let the scheduler backfill (real clusters run 2-4 waves).
     // Scales with the leg's core count, so both legs see the same waves.
-    // Default 2 — the one-wave layout is exactly the straggler-pathological
-    // configuration described above, so it should never be the default.
-    val tasksPerCore = sys.env.get("GRAFT_TASKS_PER_CORE").map(_.toInt).getOrElse(2)
-    val b = builder(masterUrl, appName, totalCores * tasksPerCore)
+    // Two waves: the one-wave layout is exactly the straggler-pathological
+    // configuration described above.
+    val b = builder(masterUrl, appName, totalCores * 2)
       .config("spark.cores.max", totalCores.toString)
       .config("spark.executor.cores", execCores.toString)
       .config("spark.executor.memory", s"${execHeapGb}g")

@@ -192,12 +192,13 @@ object GraphTables {
     // pipeline forks the triples/edges0 consumers immediately and the
     // first one to arrive populates the cache (block-level locking dedups
     // the concurrent computation). Column-pruned to what the two
-    // consumers and metaStruct read.
-    val withIds = Materialize.stageCutLazy(withBoth
+    // consumers and metaStruct read. Labelled: building the RDD runs the
+    // adaptive plan's shuffle stages (the endpoint joins) right here.
+    val withIds = Par.labelled(spark, "graft-mat:with_ids")(Materialize.stageCutLazy(withBoth
       .filter(col("frm_id").isNotNull && col("to_id").isNotNull)
       .select(col("doc_id"), col("chunk_id"), col("media_ref"), col("visual_kind"),
         col("relationship"), col("src_canon"), col("dst_canon"),
-        col("frm_id"), col("to_id")))
+        col("frm_id"), col("to_id"))))
     val droppedEdges = mappingMissDropped.unionByName(
       withBoth.filter(col("frm_id").isNull || col("to_id").isNull)
         .select(col("doc_id"), col("chunk_id"), col("source"), col("target"), col("relationship")))

@@ -7,23 +7,15 @@ import org.apache.spark.sql.functions._
 /** Deduplication family for large-scale training-data pipelines.
   *
   * All near-dup variants follow the same scale shape: per-doc feature →
-  * compact blocking key (band / bucket) → equi-join on the key → exact
-  * verification on the candidate pairs only. Nothing here is O(n²) in docs;
-  * the joins shuffle on blocking keys whose fan-out we bound explicitly
-  * (`maxShingleDf`), which is the knob that keeps candidate generation
-  * linear when a shingle is stop-word-common at 100 TB. The banded ops
-  * (simhash, minhash LSH) share one candidate core, [[bandJoin]], and one
-  * filter-and-verify core, [[bandedJaccard]].
+  * compact blocking key (prefix shingle / band / bucket) → equi-join on the
+  * key → exact verification on the candidate pairs only. Nothing here is
+  * O(n²) in docs. Exact n-gram Jaccard blocks on rare-first shingle
+  * prefixes ([[prefixCandidates]]), so stop-word-common shingles stay out
+  * of candidate generation without a cap. The banded ops (simhash, minhash
+  * LSH) share one candidate core, [[bandJoin]]; every Jaccard op shares one
+  * verify tail, [[verifiedJaccard]].
   */
 object Dedup {
-
-  /** Default shingle document-frequency cap for n-gram Jaccard candidate
-    * generation. Candidate volume through one shingle is df·(df−1)/2, so
-    * the default bounds any single shingle's contribution to ~500k pairs
-    * and shuts off the sum(df²) blowup on stop-shingles that an uncapped
-    * external call would otherwise execute at corpus scale. 0 = uncapped,
-    * explicit opt-in only. */
-  val DefaultMaxShingleDf: Long = 1000L
 
   /** Exact dedup: hash-groupBy, canonical survivor = min id.
     * Returns (id, content_hash, group_size, keep).
@@ -74,11 +66,19 @@ object Dedup {
   private def shingleSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol).as("id"), shinglesUdf(col(textCol), lit(k)).as("sh"))
 
-  /** LOSSLESS size prune over the set sizes `na`/`nb`: inter <= min(na, nb)
-    * and union >= max(na, nb), so J >= t forces min(na, nb) >= t·max(na, nb). */
-  private def sizeOk(threshold: Double): Column =
-    least(col("na"), col("nb")).cast("double") >=
-      lit(threshold) * greatest(col("na"), col("nb")).cast("double")
+  /** J = o / (na + nb − o) of a pair with overlap `o` and set sizes
+    * `na`/`nb`, in the doubles the DuckDB oracles compare in. */
+  private def jaccard(o: Column): Column = o.cast("double") / (col("na") + col("nb") - o)
+
+  /** LOSSLESS prune on an upper bound `o` of a pair's overlap: J rises with
+    * the overlap and rounding to double is monotone, so a pair whose bound
+    * fails the verify's own test fails the verify. A product instead of the
+    * quotient is not lossless: 0.55 * 100.0 > 55, which would drop a
+    * (55, 100)-size pair at J = 0.55 exactly. */
+  private def reaches(o: Column, threshold: Double): Column = jaccard(o) >= threshold
+
+  /** Size prune: an overlap of min(na, nb) leaves a union of max(na, nb). */
+  private def sizeOk(threshold: Double): Column = reaches(least(col("na"), col("nb")), threshold)
 
   /** (ida, idb, jaccard) from the exact intersection `inter` and the set
     * sizes `na`/`nb`. The threshold filter runs on the UNROUNDED value
@@ -87,7 +87,7 @@ object Dedup {
     * unrounded — exclude); rounding to 4 decimals happens only on the
     * reported column. */
   private def exactJaccard(pairs: DataFrame, inter: Column, threshold: Double): DataFrame =
-    pairs.withColumn("j", inter.cast("double") / (col("na") + col("nb") - inter))
+    pairs.withColumn("j", jaccard(inter))
       .filter(col("j") >= threshold)
       .select(col("ida"), col("idb"), round(col("j"), 4).as("jaccard"))
 
@@ -116,130 +116,75 @@ object Dedup {
   /** Exact-Jaccard pairs >= threshold over [[bandJoin]] candidates, for
     * [[minhashLshPairs]] and [[simhashVerifiedPairs]]. `rows` carry
     * `n` = |shingle set|, so the size prune runs in the join's filter after
-    * the blocker's `keep`; only survivors rejoin the lazy shingle `sets`.
-    * Nothing is cached. */
+    * the blocker's `keep`. Nothing is cached. */
   private def bandedJaccard(rows: DataFrame, keys: Column, bands: Int, keep: Column,
                             differs: Int => Column, sets: DataFrame,
                             threshold: Double): DataFrame =
+    verifiedJaccard(bandJoin(rows, keys, bands, keep && sizeOk(threshold), differs)
+      .select("ida", "idb", "na", "nb"), sets, threshold)
+
+  /** The verify tail every Jaccard op shares: candidate pairs
+    * (ida, idb, na, nb), each once, rejoin the sorted shingle `sets`
+    * (id, sh) on both sides; one merge counts the intersection. */
+  private def verifiedJaccard(pairs: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
     exactJaccard(
-      bandJoin(rows, keys, bands, keep && sizeOk(threshold), differs)
-        .select("ida", "idb", "na", "nb")
-        .join(sets.select(col("id").as("ida"), col("sh").as("sha")), Seq("ida"))
+      pairs.join(sets.select(col("id").as("ida"), col("sh").as("sha")), Seq("ida"))
         .join(sets.select(col("id").as("idb"), col("sh").as("shb")), Seq("idb")),
       graft.functions.SortedIntersectSize(col("sha"), col("shb")), threshold)
 
-  /** Exact n-gram (word k-shingle) Jaccard near-dup pairs >= threshold.
-    *
-    * Blocked self-join on shingles: candidate pair volume is
-    * sum(df(shingle)^2); shingles more frequent than `maxShingleDf` docs are
-    * excluded from *candidate generation* (a pair that only shares
-    * ultra-common shingles cannot reach a high Jaccard). The cap prunes
-    * CANDIDATES only — every surviving pair is re-verified against the FULL
-    * shingle sets, so the reported Jaccard (numerator included) is exact
-    * regardless of the cap.
-    *
-    * The cap DEFAULTS ON (1000): an uncapped call at corpus scale selects
-    * the blocked self-join whose candidate volume is sum(df^2) over
-    * stop-shingles — the scale-killing plan. A pair can only be *missed*
-    * by the cap if every shingle it shares appears in >1000 documents,
-    * i.e. the two docs overlap only through boilerplate; at the default
-    * 0.8 threshold such a pair is not a near-duplicate. Pass
-    * maxShingleDf=0 to EXPLICITLY opt into the uncapped all-shingles
-    * plan (small data / oracle-parity mode only).
-    *
-    * The capped path caches the exploded (id, shingle) stream and the
-    * hot-shingle table; both register with the caller's
-    * [[graft.core.Materialize.Scope]]. The uncapped path caches nothing. */
+  /** Exact n-gram (word k-shingle) Jaccard near-dup pairs >= threshold:
+    * [[prefixCandidates]] verified by [[verifiedJaccard]], the oracle's exact
+    * pair relation on any corpus. The one cache, the exploded (id, shingle)
+    * stream, registers with the caller's [[graft.core.Materialize.Scope]]. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3, threshold: Double = 0.8,
-                        maxShingleDf: Long = DefaultMaxShingleDf): DataFrame = {
-    val sets = shingleSets(df, idCol, textCol, k)
-    if (maxShingleDf > 0) {
-      // the capped path reads the exploded (id, g) stream THREE times (hot
-      // shingle counts, dup-shingle groups, per-doc features): cut it, so
-      // the corpus is shingled exactly once
-      val ex = graft.core.Materialize.stageCut(
-        sets.select(col("id"), explode(col("sh")).as("g")))
-      // Capped path: candidate generation AND exact verification without
-      // ever shuffling a full shingle array. Shared shingles split by the
-      // global hotness of the shingle (df > cap), and the two halves of
-      // the exact intersection come from different, individually cheap
-      // plans:
-      //   inter(a,b) = |shared non-hot|  (a COUNT on the in-group pair
-      //                join — each shared non-hot shingle contributes
-      //                exactly one row, since per-doc shingle sets are
-      //                distinct)
-      //             + |hotset(a) ∩ hotset(b)|  (per-DOC hot-shingle sets
-      //                are bounded by the doc's own shingle count and are
-      //                tiny in practice — only boilerplate shingles land
-      //                in them)
-      // so J = inter / (na + nb − inter) is exact — same integers the
-      // full-set formulation and the DuckDB oracle produce — while the
-      // heaviest thing any pair-keyed shuffle carries is a count.
-      //
-      // The hot-shingle anti-join MUST precede collect_set: filtering on
-      // size(ids) after collecting would still accumulate a boilerplate
-      // shingle's entire posting list (millions of ids at corpus scale)
-      // in one aggregation buffer before discarding it.
-      // ALWAYS stage-cut the (tiny, O(#hot shingles)) hot table: its two
-      // consumers are two broadcasts (the `docFeats` left join and the
-      // anti-join under the lazy `grouped`), each its own job, so
-      // without a cut the full-corpus hot aggregation runs once per
-      // broadcast — exchange reuse never applies across jobs. One tiny
-      // barrier buys back a full exploded-stream aggregation.
-      val hot0 = ex.groupBy("g").agg(count(lit(1)).as("df_g"))
-        .filter(col("df_g") > maxShingleDf).select("g")
-      val hot = graft.core.Materialize.stageCut(hot0)
-      // dup-shingle working set (groups of 2..cap docs): LAZY — its two
-      // consumers (the l/r posexplode sides of the pair join) sit in the
-      // SAME job, so AQE stage reuse dedups the aggregation exchange under
-      // it; only the cheap final collect_set merge runs once per side,
-      // bounded by the cap. The r5 stage cut here paid a barrier plus a
-      // cache copy of every ids array to save that duplicate final merge —
-      // measured at sf0.1 (min of 5 cold runs): cut 4.45 s, lazy 2.05 s, rows
-      // identical, shuffle 38→32 MiB, jobs 16→13. (Contrast `hot` above,
-      // whose consumers are in DIFFERENT jobs — exchange reuse never
-      // applies across jobs, so its cut stays.) Pairs expand through a
-      // posexplode self-join on (group, i < j) — pure codegen, and
-      // position comparison works for any id type
-      val grouped =
-        ex.join(broadcast(hot), Seq("g"), "left_anti")
-          .groupBy("g")
-          .agg(sort_array(collect_set(col("id"))).as("ids"))
-          .filter(size(col("ids")) >= 2)
-      val l = grouped.select(col("g"), posexplode(col("ids"))).toDF("g", "i", "ida")
-      val r = grouped.select(col("g").as("g2"), posexplode(col("ids"))).toDF("g2", "j", "idb")
-      val pairRare = l.join(r, col("g") === col("g2") && col("i") < col("j"))
-        .groupBy("ida", "idb").agg(count(lit(1)).as("ir"))
-      // one corpus pass for both per-doc features: full set size and the
-      // doc's (small) hot-shingle set — collect_set skips the nulls the
-      // left join leaves on non-hot shingles, so hsh is [] when none.
-      val docFeats = ex
-        .join(broadcast(hot.withColumn("is_hot", lit(true))), Seq("g"), "left")
-        .groupBy("id")
-        .agg(count(lit(1)).as("n"),
-          collect_set(when(col("is_hot"), col("g"))).as("hsh"))
-      // size prune before the hot-set intersection
-      val withFeats = pairRare
-        .join(docFeats.select(col("id").as("ida"), col("n").as("na"),
-          col("hsh").as("hsha")), Seq("ida"))
-        .join(docFeats.select(col("id").as("idb"), col("n").as("nb"),
-          col("hsh").as("hshb")), Seq("idb"))
-        .filter(sizeOk(threshold))
-      exactJaccard(withFeats,
-        col("ir") + size(array_intersect(col("hsha"), col("hshb"))), threshold)
-    } else {
-      // uncapped (oracle-parity mode): the oracle's own formulation — group
-      // sizes are unbounded, so no collect_set, but a streaming self-join
-      // on the shingle hash whose per-pair count is the exact intersection;
-      // the set sizes ride the exploded rows, so nothing is rejoined.
-      val e = sets.select(col("id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
-      def side(s: String) = e.select(col("g").as(s"g$s"), col("id").as(s"id$s"), col("n").as(s"n$s"))
-      val shared = side("a").join(side("b"),
-          col("ga") === col("gb") && col("ida") < col("idb") && sizeOk(threshold))
-        .groupBy("ida", "idb", "na", "nb").agg(count(lit(1)).as("inter"))
-      exactJaccard(shared, col("inter"), threshold)
-    }
+                        k: Int = 3, threshold: Double = 0.8): DataFrame = {
+    val (cands, sets) = prefixCandidates(df, idCol, textCol, k, threshold)
+    verifiedJaccard(cands, sets, threshold)
+  }
+
+  /** Prefix-filtered self-join (ppjoin, Xiao et al.): the candidate pairs
+    * (ida, idb, na, nb) of [[ngramJaccardPairs]], each once, plus the
+    * per-doc sorted shingle sets (id, sh) that verify them.
+    *
+    * Each doc orders its shingles rare-first by (df, hash), df counted over
+    * the corpus, and keeps its first n − ⌈t·n⌉ + 1 of them. A pair with
+    * J >= t shares at least ⌈t·n⌉ shingles, n the size of either side, so
+    * its first common shingle lies in both prefixes; there, at 0-based
+    * positions pa and pb, the overlap is at most
+    * ub = 1 + min(na − pa − 1, nb − pb − 1). The join on the prefix
+    * shingle keeps a row only if ub [[reaches]] t (the positional filter)
+    * and the sizes pass [[sizeOk]]. The prefix length is exact decimal
+    * arithmetic: in doubles 0.55 * 100 = 55.00000000000001, whose ceiling
+    * cuts the prefix one shingle short. Rare-first puts boilerplate
+    * shingles last, so they reach only the prefixes of boilerplate-only
+    * docs; the positional filter drops the pairs that meet on a shingle
+    * deep in both prefixes.
+    * On a corpus of 1 100 docs sharing 8 of their 10 shingles, a pure-hash
+    * order or a join without the positional filter emits ~600k rows; this
+    * one emits the true pairs only (OpsSpec). */
+  private[graft] def prefixCandidates(df: DataFrame, idCol: String, textCol: String,
+                                      k: Int, threshold: Double): (DataFrame, DataFrame) = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1]: a pair sharing no shingle has J = 0, got $threshold")
+    // the df count and its rejoin both read the stream: cut it, so the
+    // corpus is shingled once
+    val ex = graft.core.Materialize.stageCut(
+      shingleSets(df, idCol, textCol, k).select(col("id"), explode(col("sh")).as("g")))
+    val docs = ex.join(ex.groupBy("g").agg(count(lit(1)).as("df")), Seq("g"))
+      .groupBy("id").agg(sort_array(collect_list(struct(col("df"), col("g")))).as("o"))
+      .select(col("id"), size(col("o")).as("n"), col("o"))
+    val plen = (col("n") - ceil(lit(BigDecimal(threshold.toString)) * col("n")) + 1).cast("int")
+    val pre = docs.select(col("id"), col("n"), posexplode(slice(col("o"), lit(1), plen)))
+    def side(s: String) = pre.select(col("id").as(s"id$s"), col("n").as(s"n$s"),
+      col("pos").as(s"p$s"), col("col.g").as(s"g$s"))
+    val ub = least(col("na") - col("pa"), col("nb") - col("pb"))
+    // one distinct per pair: ownership by the first common shingle (as in
+    // bandJoin) saved that job on the neardup sample but shipped 16% more
+    // shuffle bytes, each prefix row carrying the prefix before it
+    val cands = side("a").join(side("b"), col("ga") === col("gb") && col("ida") < col("idb") &&
+        sizeOk(threshold) && reaches(ub, threshold))
+      .select("ida", "idb", "na", "nb").distinct()
+    (cands, docs.select(col("id"), sort_array(col("o.g")).as("sh")))
   }
 
   /** Minhash banding: band b's key hashes its slice of the `sig` array.
@@ -302,6 +247,16 @@ object Dedup {
       .select(col("ida"), col("idb"), hamming.as("hamming"))
   }
 
+  /** The candidate-volume valve probe: Σ c·(c−1)/2 over the sizes c of the
+    * `keys` groups of `rows`, one map-side-combined aggregation. Double,
+    * not long: the probe is a heuristic and Σc² on a pathological corpus
+    * can exceed Long — overflow must not wrap into "small". */
+  private def pairVolume(rows: DataFrame, keys: Column*): Double = {
+    val r = rows.groupBy(keys: _*).agg(count(lit(1)).as("c"))
+      .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2)).head()
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+  }
+
   /** Valve-trip counter — spec observability only (OpsSpec asserts the
     * valve fires on a hot-bucket corpus and stays silent on normal data). */
   @volatile private[graft] var simhashValveTrips: Long = 0L
@@ -356,16 +311,7 @@ object Dedup {
     val (sigs, sigsRdd, _) = graft.core.Materialize.stageCutHandleN(
       df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig"),
         size(shinglesUdf(col(textCol), lit(k))).as("n")))
-    // double, not long: the probe is a heuristic and Σc² on a pathological
-    // corpus can exceed Long — overflow must not wrap into "small"
-    val vol = sigs.select(posexplode(keys))
-      .groupBy(col("pos"), col("col")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2))
-      .head().getAs[Any](0) match {
-        case null => 0.0
-        case d: java.lang.Double => d.doubleValue()
-        case other => other.toString.toDouble
-      }
+    val vol = pairVolume(sigs.select(posexplode(keys)), col("pos"), col("col"))
     if (vol > maxCandidates.toDouble) {
       simhashValveTrips += 1
       System.err.println(f"[graft] WARNING: simhash wide-net candidate volume ~$vol%.3g " +
@@ -615,13 +561,7 @@ object Dedup {
     * Verification is the same exact unrounded-cosine filter either way. */
   private def guardedPairsFromAssigned(assigned: DataFrame, threshold: Double,
                                        maxCandidates: Long): DataFrame = {
-    val vol = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2))
-      .head().getAs[Any](0) match {
-        case null => 0.0
-        case d: java.lang.Double => d.doubleValue()
-        case other => other.toString.toDouble
-      }
+    val vol = pairVolume(assigned, col("cluster"))
     if (vol <= maxCandidates.toDouble) pairsFromAssigned(assigned, threshold)
     else {
       semanticValveTrips += 1

@@ -18,17 +18,15 @@ class OpsSpec extends SparkSpec {
     // the DuckDB oracle gives a document with no alphanumeric token one
     // ''-shingle, so any two such documents are a pair at 1.0 — on every
     // path: empty docs band-collide in every band (all-MaxValue minhash
-    // signatures, simhash 0), and both ngram paths need the '' shingle to
-    // generate the candidate at all
+    // signatures, simhash 0), and the ngram prefix join needs the ''
+    // shingle to generate the candidate at all
     val d = Seq((1L, ""), (2L, "   "), (3L, "a real document about graphs"), (4L, "!!! ---"))
       .toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val empties = Set((1L, 2L, 1.0), (1L, 4L, 1.0), (2L, 4L, 1.0))
     assert(rows(Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 3, threshold = 0.8)) === empties,
-      "ngram capped")
-    assert(rows(Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 3, threshold = 0.8,
-      maxShingleDf = 0L)) === empties, "ngram uncapped")
+      "ngram")
     assert(rows(Dedup.minhashLshPairs(d, "doc_id", "text", k = 3, numPerm = 16,
       bands = 4, threshold = 0.8)) === empties, "minhash")
     assert(rows(Dedup.simhashVerifiedPairs(d, "doc_id", "text", k = 3, threshold = 0.8)) ===
@@ -97,34 +95,27 @@ class OpsSpec extends SparkSpec {
     assert((lsh diff exact).isEmpty)
   }
 
-  test("ngram jaccard default cap never generates a candidate through a hot shingle") {
-    // 1102 docs share one boilerplate sentence -> every boilerplate
-    // shingle has df > DefaultMaxShingleDf (1000). Docs 9001/9002 are
-    // identical PURE boilerplate (a real J=1.0 pair — proven on a small
-    // uncapped subset below); the default path must not surface it,
-    // because its only shared shingles are hot and the cap excludes them
-    // from candidate generation entirely. Docs 9003/9004 duplicate a
-    // UNIQUE text (df=2 shingles) and must still be found — the cap
-    // prunes hot shingles only, not near-dup detection.
-    assert(Dedup.DefaultMaxShingleDf === 1000L)
+  test("ngram jaccard finds boilerplate-only pairs; prefix candidates stay linear") {
+    // 1100 docs share one boilerplate sentence: 8 of each doc's 10
+    // shingles have df >= 1100. Docs 9001/9002 are identical PURE
+    // boilerplate and docs 9003/9004 duplicate a unique text; both are true
+    // J=1.0 pairs and the exact join finds both. Boilerplate shingles sort
+    // last in the rare-first order, so they reach only the prefixes of
+    // 9001/9002; the other 1100 docs meet only on their third prefix
+    // shingle, where the positional filter drops every one of the
+    // C(1100, 2) pairs. A pure-hash order, or no positional filter, makes
+    // ~600k candidates here.
     val boiler = "terms of service apply to all users"
-    val corpus =
-      (1 to 1100).map(i => (i.toLong, s"$boiler unique content piece $i alpha")) ++
+    val d = ((1 to 1100).map(i => (i.toLong, s"$boiler unique content piece $i alpha")) ++
       Seq((9001L, boiler), (9002L, boiler),
           (9003L, "completely different duplicated report text here"),
-          (9004L, "completely different duplicated report text here"))
-    val d = corpus.toDF("doc_id", "text")
-    val byDefault = Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 3, threshold = 0.8)
-      .select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(byDefault === Set((9003L, 9004L)),
-      "default path: cold-shingle dup found, hot-shingle-only pair never a candidate")
-    // the missed pair IS a true duplicate — the uncapped (opt-in) path on
-    // a small subset reports it at jaccard 1.0
-    val sub = corpus.filter(c => c._1 >= 9001 || c._1 <= 3).toDF("doc_id", "text")
-    val uncapped = Dedup.ngramJaccardPairs(sub, "doc_id", "text", k = 3,
-        threshold = 0.8, maxShingleDf = 0L)
+          (9004L, "completely different duplicated report text here")))
+      .toDF("doc_id", "text")
+    val found = Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 3, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(uncapped.contains((9001L, 9002L, 1.0)))
+    assert(found === Set((9001L, 9002L, 1.0), (9003L, 9004L, 1.0)))
+    val candidates = scoped(Dedup.prefixCandidates(d, "doc_id", "text", 3, 0.8)._1.count())
+    assert(candidates === 2L, "the prefix join must emit the two true pairs only")
   }
 
   test("simhash pairs include the exact near-dup pairs") {
@@ -252,16 +243,53 @@ class OpsSpec extends SparkSpec {
     assert(chain.count(_._3) === 1, "exactly one survivor")
   }
 
-  test("ngram jaccard: the hot-shingle cap drops no pair at sf0.01") {
-    // maxShingleDf prunes candidates only; q_ngram_jaccard relies on the
-    // capped pair set equalling the uncapped one (its oracle is uncapped)
+  /** (ida, idb, jaccard) over every pair of shingle sets built in plain Scala,
+    * filtered and rounded as the ops and the oracles do. */
+  private def bruteJaccard(texts: Seq[(Long, String)], k: Int,
+                           t: Double): Set[(Long, Long, Double)] = {
+    val sets = texts.map { case (id, x) =>
+      val h = TextFns.shingleHashes(x, k)
+      (id, (if (h.isEmpty) Array(TextFns.fnv1a64("")) else h).toSet)
+    }
+    (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      inter = (sa intersect sb).size
+      j = inter.toDouble / (sa.size + sb.size - inter) if j >= t
+    } yield (a, b, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+  }
+
+  test("ngram jaccard: the prefix join equals brute-force exact Jaccard") {
+    def pairs(d: org.apache.spark.sql.DataFrame, k: Int, t: Double) =
+      scoped(Dedup.ngramJaccardPairs(d, "doc_id", "text", k = k, threshold = t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     val d01 = spark.read.parquet(sf.replace("sf0.001", "sf0.01") + "/documents.parquet")
-    def pairs(cap: Long) = Dedup.ngramJaccardPairs(d01, "doc_id", "text", k = 3,
-      threshold = 0.8, maxShingleDf = cap)
-    val (capped, uncapped) = (pairs(50L), pairs(0L))
-    assert(uncapped.count() === 25L)
-    assert(capped.exceptAll(uncapped).count() === 0L, "spurious pairs under the cap")
-    assert(uncapped.exceptAll(capped).count() === 0L, "pairs missing under the cap")
+    val texts01 = d01.select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1)))
+    val want01 = bruteJaccard(texts01, 3, 0.8)
+    assert(want01.size === 25)
+    assert(pairs(d01, 3, 0.8) === want01, "sf0.01")
+    // seeded random word sets (k = 1: the shingle set is the word set):
+    // ~100-word docs and mutated copies spread J across each threshold.
+    // 9000/9001 are a 55-word subset of a 100-word set, J = 0.55 exactly;
+    // the 45 words only 9001 has sort first in its rare-first order, so
+    // the first common word sits at 0-based position 45 — the last of the
+    // 100 − ⌈0.55·100⌉ + 1 = 46-word prefix. In doubles 0.55 * 100 is
+    // 55.00000000000001: that prefix is one word short, and a size or
+    // positional bound written as a product in doubles rejects the pair.
+    val rnd = new scala.util.Random(20261019L)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(600)}").distinct
+    val bases = (0 until 30).map(_ => words(80 + rnd.nextInt(50)))
+    val mutated = bases.map(b => b.filter(_ => rnd.nextDouble() > 0.25) ++ words(rnd.nextInt(30)))
+    val y = (0 until 100).map(i => s"u$i")
+    val planted = Seq((9000L, y.drop(45)), (9001L, y))
+    val texts = ((bases ++ mutated).zipWithIndex.map { case (ws, i) => (i.toLong, ws) } ++ planted)
+      .map { case (id, ws) => (id, ws.mkString(" ")) }
+    val d = texts.toDF("doc_id", "text")
+    for (t <- Seq(0.55, 0.7, 0.8)) {
+      val want = bruteJaccard(texts, 1, t)
+      assert(want.exists(p => p._1 < 9000L), s"t=$t: no random pair reaches the threshold")
+      assert(pairs(d, 1, t) === want, s"random sets at t=$t")
+    }
+    assert(bruteJaccard(texts, 1, 0.55).contains((9000L, 9001L, 0.55)))
   }
 
   test("exact dedup keeps exactly one survivor per content hash") {
@@ -1030,8 +1058,7 @@ class OpsSpec extends SparkSpec {
     val seeds = vecs.filter(col("vec_id") < 8).orderBy("vec_id")
       .select("embedding").collect().map(_.getAs[Seq[Float]](0).toArray)
     val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        maxShingleDf = 50L)),
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, "doc_id", "text")),
       "simhashVerifiedPairs" -> (() => Dedup.simhashVerifiedPairs(docs, "doc_id", "text")),
       "dedupClusters" -> (() => Dedup.dedupClusters(docs, "doc_id",
         Dedup.minhashLshPairs(docs, "doc_id", "text"))),
