@@ -276,8 +276,9 @@ object SparkEntry {
       Dedup.exact(s.read.parquet(t(d, "documents")), "doc_id", "text")),
     "q_fingerprint" -> ((s, d) =>
       TextAnalysis.fingerprint(s.read.parquet(t(d, "documents")), "doc_id", "text")),
-    // rare-first prefix-filtered self-join, verified on the full shingle
-    // sets: the exact pair relation the oracle computes, on any corpus.
+    // rare-first prefix-filtered self-join (on the per-bucket pair kernel,
+    // one bucket per prefix shingle), verified on the full shingle sets:
+    // the exact pair relation the oracle computes, on any corpus.
     // no scope is open here, so the single-shingle-pass cache stays until
     // a sweep: Bench sweeps all persisted RDDs after each query and Verify
     // exits after one pass, so nothing pins past its use
@@ -293,7 +294,8 @@ object SparkEntry {
     // driver's own sf0.01 corpus every `sbt test`, and app.OracleCheck
     // audits sf0.01 + sf0.1. A corpus where recall drops below 1.0 fails
     // the test suite, not silently the oracle hash. Lazy, no cache: the
-    // shared band core (Dedup.bandedJaccard) size-prunes in the join.
+    // shared band core (Dedup.bandedJaccard) size-prunes in the pair
+    // kernel's condition, per (band, key) bucket.
     "q_minhash_lsh" -> ((s, d) =>
       Dedup.minhashLshPairs(s.read.parquet(t(d, "documents")), "doc_id", "text",
         k = 3, numPerm = 16, bands = 4, threshold = 0.8)),
@@ -302,8 +304,9 @@ object SparkEntry {
     // pigeonhole, and wide because J=0.8 pairs reach Hamming 13 on the
     // audited corpora; Jaccard recall audited 1.0 and test-asserted),
     // exact Jaccard verification — output equals the exact pair relation.
-    // Same band core as q_minhash_lsh; its one stage cut is the (id, sig, n)
-    // table the candidate-volume valve reads.
+    // Same band core as q_minhash_lsh (the pair kernel walks each of the
+    // 16x16 band buckets once); its one stage cut is the (id, sig, n)
+    // table the candidate-volume valve reads before any pair is walked.
     "q_simhash" -> ((s, d) =>
       Dedup.simhashVerifiedPairs(s.read.parquet(t(d, "documents")), "doc_id", "text",
         k = 3, threshold = 0.8)),

@@ -19,9 +19,10 @@ import scala.collection.mutable
   * none. A stage belongs to the first job that lists it: a later job that
   * reuses its shuffle output lists it again, as skipped. Counters
   * accumulate once per (stageId, attempt). Per label the table shows jobs,
-  * stages run, task-seconds (executor run time), shuffle write bytes and
-  * records, and the span from the label's first job start to its last job
-  * end; the last row holds the grand totals.
+  * stages run, tasks run, task-seconds (executor run time), shuffle write
+  * bytes and records, and the span from the label's first job start to its
+  * last job end; the last row holds the grand totals. Tasks per stage show
+  * the stages AQE coalesced to one task.
   *
   * Usage (cores default to SPARK_GRAFT_CPUS, as in Bench/Verify):
   * {{{
@@ -38,15 +39,15 @@ object Profile {
 
   val Unlabelled = "(unlabelled)"
 
-  final case class Row(label: String, jobs: Int, stages: Int, taskMs: Long,
+  final case class Row(label: String, jobs: Int, stages: Int, tasks: Int, taskMs: Long,
                        shuffleWriteBytes: Long, shuffleWriteRecords: Long, spanMs: Long)
 
   final class Listener extends SparkListener {
     private final class Acc {
-      var jobs = 0; var stages = 0; var taskMs = 0L; var bytes = 0L; var records = 0L
+      var jobs = 0; var stages = 0; var tasks = 0; var taskMs = 0L; var bytes = 0L; var records = 0L
       var first = Long.MaxValue; var last = Long.MinValue
       def row(label: String) =
-        Row(label, jobs, stages, taskMs, bytes, records, math.max(last - first, 0L))
+        Row(label, jobs, stages, tasks, taskMs, bytes, records, math.max(last - first, 0L))
     }
     private val byLabel = mutable.LinkedHashMap.empty[String, Acc]
     private val total = new Acc
@@ -74,6 +75,7 @@ object Profile {
         val m = Option(si.taskMetrics)
         both(stageLabel.getOrElse(si.stageId, Unlabelled)).foreach { a =>
           a.stages += 1
+          a.tasks += si.numTasks
           m.foreach { m =>
             a.taskMs += m.executorRunTime
             a.bytes += m.shuffleWriteMetrics.bytesWritten
@@ -98,10 +100,10 @@ object Profile {
   /** The table, once every event posted so far has reached `l`. */
   def report(spark: SparkSession, l: Listener): Seq[String] = {
     GraftShims.drainListeners(spark.sparkContext)
-    def fmt(r: Row) = f"[profile] ${r.label}%-32s ${r.jobs}%5d ${r.stages}%6d " +
+    def fmt(r: Row) = f"[profile] ${r.label}%-32s ${r.jobs}%5d ${r.stages}%6d ${r.tasks}%6d " +
       f"${r.taskMs / 1e3}%9.1f ${r.shuffleWriteBytes}%14d ${r.shuffleWriteRecords}%11d " +
       f"${r.spanMs / 1e3}%8.2f"
-    val header = f"[profile] ${"label"}%-32s ${"jobs"}%5s ${"stages"}%6s ${"task_s"}%9s " +
+    val header = f"[profile] ${"label"}%-32s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"task_s"}%9s " +
       f"${"shuffle_w_bytes"}%14s ${"shuffle_rec"}%11s ${"span_s"}%8s"
     header +: l.rows.map(fmt) :+ fmt(l.totals)
   }

@@ -204,9 +204,11 @@ object Materialize {
     * The FIRST consumer populates the cache (the block manager's
     * per-partition locking dedups concurrent computation — two forked
     * consumers hitting the same uncomputed cached partition compute it
-    * once and share it), so the upstream plan still runs exactly once,
-    * but the producer thread never blocks — its consumers can be forked
-    * immediately instead of waiting behind an eager count barrier. */
+    * once and share it), so the upstream plan runs exactly once and no
+    * count job runs here. It is not lazy for a plan with an exchange:
+    * under AQE, `queryExecution.toRdd` runs every shuffle stage of the
+    * plan before it returns, so the calling thread blocks on those
+    * stages; only the final, exchange-free stage waits for a consumer. */
   def stageCutLazy(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession,
       persist(df.queryExecution.toRdd.map(_.copy())), df.schema)

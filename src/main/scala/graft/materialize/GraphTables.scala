@@ -188,12 +188,13 @@ object GraphTables {
     // concurrent consumers of a lazy plan = the whole join subtree twice);
     // this cuts the joins to a single run and both consumers read compact
     // rows (round-5 plan: 2x [resolved scan + 2 node-key joins]; now 1x +
-    // two cheap cache scans). LAZY persist — no count barrier here, so the
-    // pipeline forks the triples/edges0 consumers immediately and the
-    // first one to arrive populates the cache (block-level locking dedups
-    // the concurrent computation). Column-pruned to what the two
-    // consumers and metaStruct read. Labelled: building the RDD runs the
-    // adaptive plan's shuffle stages (the endpoint joins) right here.
+    // two cheap cache scans). Persist without a count: the first
+    // consumer to arrive fills the cache (block-level locking dedups the
+    // concurrent computation). Not lazy: building the RDD runs the
+    // adaptive plan's shuffle stages (the endpoint joins) right here, on
+    // this thread, before the triples/edges0 consumers are forked; only
+    // the final projection waits for them. Column-pruned to what the two
+    // consumers and metaStruct read. Labelled for those shuffle jobs.
     val withIds = Par.labelled(spark, "graft-mat:with_ids")(Materialize.stageCutLazy(withBoth
       .filter(col("frm_id").isNotNull && col("to_id").isNotNull)
       .select(col("doc_id"), col("chunk_id"), col("media_ref"), col("visual_kind"),

@@ -1,19 +1,24 @@
 package graft.ops
 
-import graft.functions.TextFns
+import graft.functions.{BucketPairs, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication family for large-scale training-data pipelines.
   *
   * All near-dup variants follow the same scale shape: per-doc feature →
-  * compact blocking key (prefix shingle / band / bucket) → equi-join on the
-  * key → exact verification on the candidate pairs only. Nothing here is
-  * O(n²) in docs. Exact n-gram Jaccard blocks on rare-first shingle
-  * prefixes ([[prefixCandidates]]), so stop-word-common shingles stay out
-  * of candidate generation without a cap. The banded ops (simhash, minhash
-  * LSH) share one candidate core, [[bandJoin]]; every Jaccard op shares one
-  * verify tail, [[verifiedJaccard]].
+  * compact blocking key (prefix shingle / band / bucket) → the pairs that
+  * share a key → exact verification on the candidate pairs only. Nothing
+  * here is O(n²) in docs. The blocked self-joins of the Jaccard and
+  * simhash ops run on one per-bucket pair kernel
+  * ([[graft.functions.BucketPairs]]): one exchange groups each key's rows
+  * into a bucket, and the kernel walks the bucket's unordered pairs once
+  * under the join's own condition. Exact n-gram Jaccard blocks on
+  * rare-first shingle prefixes ([[prefixCandidates]]), so stop-word-common
+  * shingles stay out of candidate generation without a cap. The banded ops
+  * (simhash, minhash LSH) share one candidate core, [[bandJoin]]; every
+  * Jaccard op shares one verify tail, [[verifiedJaccard]]. The embedding
+  * cosine pairs still block with an equi-join on their cells.
   */
 object Dedup {
 
@@ -98,25 +103,33 @@ object Dedup {
     * holds and its band is the pair's LOWEST agreeing band (`differs(b)`
     * must hold exactly when the band-b keys differ). Each candidate has
     * exactly one lowest agreeing band, so this is the pair set a `distinct`
-    * over the join gives, without shuffling every (pair, band) row. */
+    * over the join gives, without shuffling every (pair, band) row.
+    *
+    * The self-join runs on the per-bucket pair kernel
+    * ([[graft.functions.BucketPairs]]): one exchange by (band, key) as
+    * before, then each bucket's unordered pairs are walked once,
+    * c·(c−1)/2 filter calls for a bucket of c rows where the join matched
+    * c² rows. The rows are the join's: (banda, keya, ida, payload a, bandb,
+    * keyb, idb, payload b). A hot bucket still costs the square of its
+    * size, and its rows sit in one row of the aggregate, as they sat in
+    * the join's sort buffer; the simhash valve probes that volume before
+    * any pair is walked. */
   private[graft] def bandJoin(rows: DataFrame, keys: Column, bands: Int, keep: Column,
                               differs: Int => Column): DataFrame = {
     val payload = rows.columns.toSeq.filterNot(_ == "id")
-    val ex = rows.select(col("id") +: payload.map(col) :+ posexplode(keys): _*)
-    def side(s: String) = ex.select(Seq(col("pos").as(s"band$s"), col("col").as(s"key$s"),
-      col("id").as(s"id$s")) ++ payload.map(p => col(p).as(p + s)): _*)
-    // one conjunction, cheapest first: a join condition would be appended
-    // after the pushed-down filter, evaluating `keep` on both pair orders
+    val members = rows.select(Seq(posexplode(keys).as(Seq("band", "key")), col("id")) ++
+      payload.map(col): _*)
+    // one conjunction, cheapest first: the kernel evaluates it per pair
     val owned = (0 until bands - 1).foldLeft(col("ida") < col("idb") && keep)((c, b) =>
       c && (col("banda") <= b || differs(b)))
-    side("a").join(side("b"), col("banda") === col("bandb") && col("keya") === col("keyb"))
-      .filter(owned)
+    BucketPairs.selfJoin(members, Seq("band", "key"), owned)
   }
 
   /** Exact-Jaccard pairs >= threshold over [[bandJoin]] candidates, for
     * [[minhashLshPairs]] and [[simhashVerifiedPairs]]. `rows` carry
     * `n` = |shingle set|, so the size prune runs in the join's filter after
-    * the blocker's `keep`. Nothing is cached. */
+    * the blocker's `keep`, in the kernel's one pair condition. Nothing is
+    * cached. */
   private def bandedJaccard(rows: DataFrame, keys: Column, bands: Int, keep: Column,
                             differs: Int => Column, sets: DataFrame,
                             threshold: Double): DataFrame =
@@ -153,15 +166,21 @@ object Dedup {
     * positions pa and pb, the overlap is at most
     * ub = 1 + min(na − pa − 1, nb − pb − 1). The join on the prefix
     * shingle keeps a row only if ub [[reaches]] t (the positional filter)
-    * and the sizes pass [[sizeOk]]. The prefix length is exact decimal
-    * arithmetic: in doubles 0.55 * 100 = 55.00000000000001, whose ceiling
-    * cuts the prefix one shingle short. Rare-first puts boilerplate
+    * and the sizes pass [[sizeOk]]; it runs on the per-bucket pair kernel
+    * ([[graft.functions.BucketPairs]]), one bucket per prefix shingle. The
+    * prefix length is exact decimal arithmetic: in doubles
+    * 0.55 * 100 = 55.00000000000001, whose ceiling cuts the prefix one
+    * shingle short. Rare-first puts boilerplate
     * shingles last, so they reach only the prefixes of boilerplate-only
     * docs; the positional filter drops the pairs that meet on a shingle
     * deep in both prefixes.
     * On a corpus of 1 100 docs sharing 8 of their 10 shingles, a pure-hash
     * order or a join without the positional filter emits ~600k rows; this
-    * one emits the true pairs only (OpsSpec). */
+    * one emits the true pairs only (OpsSpec). It still CHECKS every pair of
+    * a hot prefix shingle: a shingle in the prefixes of m docs is one
+    * bucket of m rows and m·(m−1)/2 kernel steps in one task (~600k steps
+    * for the 1 100 docs above, which share their third prefix shingle), so
+    * that case is lossless but not bounded. */
   private[graft] def prefixCandidates(df: DataFrame, idCol: String, textCol: String,
                                       k: Int, threshold: Double): (DataFrame, DataFrame) = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -170,19 +189,22 @@ object Dedup {
     // corpus is shingled once
     val ex = graft.core.Materialize.stageCut(
       shingleSets(df, idCol, textCol, k).select(col("id"), explode(col("sh")).as("g")))
-    val docs = ex.join(ex.groupBy("g").agg(count(lit(1)).as("df")), Seq("g"))
+    // null ids never pair; dropping them here, where the verify's id join
+    // infers the same filter, keeps the candidate and verify reads of
+    // `docs` one plan, so they share its exchanges
+    val docs = ex.filter(col("id").isNotNull)
+      .join(ex.groupBy("g").agg(count(lit(1)).as("df")), Seq("g"))
       .groupBy("id").agg(sort_array(collect_list(struct(col("df"), col("g")))).as("o"))
       .select(col("id"), size(col("o")).as("n"), col("o"))
     val plen = (col("n") - ceil(lit(BigDecimal(threshold.toString)) * col("n")) + 1).cast("int")
-    val pre = docs.select(col("id"), col("n"), posexplode(slice(col("o"), lit(1), plen)))
-    def side(s: String) = pre.select(col("id").as(s"id$s"), col("n").as(s"n$s"),
-      col("pos").as(s"p$s"), col("col.g").as(s"g$s"))
+    val pre = docs.select(col("id"), col("n"),
+      posexplode(slice(col("o"), lit(1), plen)).as(Seq("p", "dg")))
     val ub = least(col("na") - col("pa"), col("nb") - col("pb"))
     // one distinct per pair: ownership by the first common shingle (as in
     // bandJoin) saved that job on the neardup sample but shipped 16% more
     // shuffle bytes, each prefix row carrying the prefix before it
-    val cands = side("a").join(side("b"), col("ga") === col("gb") && col("ida") < col("idb") &&
-        sizeOk(threshold) && reaches(ub, threshold))
+    val cands = BucketPairs.selfJoin(pre.select(col("id"), col("n"), col("p"), col("dg.g").as("g")),
+        Seq("g"), col("ida") < col("idb") && sizeOk(threshold) && reaches(ub, threshold))
       .select("ida", "idb", "na", "nb").distinct()
     (cands, docs.select(col("id"), sort_array(col("o.g")).as("sh")))
   }
@@ -336,22 +358,16 @@ object Dedup {
     * ([[graft.link.ConnectedComponents.runBigStar]]), O(log² n) rounds.
     * Output: (id, group, keep). Singleton docs keep themselves.
     *
-    * The expensive pair-table cache is freed before returning (once CC has
-    * converged, the star-relation cache carries everything the output
-    * reads); that small cache registers with the caller's
-    * [[graft.core.Materialize.Scope]]. */
+    * The pairs are read once, by the contraction's own cut of the
+    * oriented pair set; the loop's cuts register with the caller's
+    * [[graft.core.Materialize.Scope]], superseded ones freed as it goes. */
   def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    // materialize the pair stage ONCE (it is typically the output of an
-    // expensive LSH pipeline) so CC iterations never recompute it
-    val (p, pRdd, _) = graft.core.Materialize.stageCutHandleN(
-      pairs.select(col("ida").cast("string").as("a"),
-        col("idb").cast("string").as("b")))
     // only the pair graph iterates — the near-dup graph is a vanishing
     // fraction of the corpus, so the contraction rounds never shuffle the
     // full id set
     val comp = graft.link.ConnectedComponents.starRelation(
-      p.select(lit("g").as("key"), col("a"), col("b")))
-    pRdd.unpersist(blocking = false)
+      pairs.select(lit("g").as("key"), col("ida").cast("string").as("a"),
+        col("idb").cast("string").as("b")))
     // component label = lexicographic min member, so keep == (id == group)
     // — no window shuffle; roots and singletons (no row) keep themselves
     df.select(col(idCol).cast("string").as("id"))

@@ -64,6 +64,9 @@ object Similarity {
   private[ops] def codesUdf(tables: Int, bits: Int, dim: Int, seed: Long) = {
     val planes = planesFor(tables, bits, dim, seed)
     udf((v: Seq[Float]) => {
+      // Spark hands a Seq[Float] argument over as a List: index an array
+      val a = v.toArray
+      val n = math.min(dim, a.length)
       val out = new Array[Int](tables)
       var t = 0
       while (t < tables) {
@@ -72,8 +75,7 @@ object Similarity {
         while (b < bits) {
           var dot = 0.0
           var i = 0
-          val n = math.min(dim, v.length)
-          while (i < n) { dot += planes(t)(b)(i) * v(i); i += 1 }
+          while (i < n) { dot += planes(t)(b)(i) * a(i); i += 1 }
           if (dot > 0) code |= (1 << b)
           b += 1
         }

@@ -131,6 +131,37 @@ class LinkerSpec extends SparkSpec {
     assert(capped.forall { case (v, c) => c <= v })
   }
 
+  test("large-star/small-star equals UnionFind per shape; a star forest stops after 0 rounds") {
+    import spark.implicits._
+    def v(i: Int) = f"v$i%02d"
+    // (key, a, b) edges; every endpoint is declared
+    def check(name: String, es: Seq[(String, String, String)]): Int = {
+      val vs = es.flatMap(e => Seq(e._1 -> e._2, e._1 -> e._3)).distinct
+      val got = ConnectedComponents.runBigStar(vs.toDF("key", "v"), es.toDF("key", "a", "b"))
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+      val expect = vs.groupBy(_._1).toSeq.flatMap { case (k, kvs) =>
+        unionFindLabels(kvs.map(_._2), es.filter(_._1 == k).map(e => (e._2, e._3)))
+          .map { case (x, c) => (k, x) -> c }
+      }.toMap
+      assert(got === expect, s"($name) edges=$es")
+      ConnectedComponents.starRounds
+    }
+    val starForest = Seq(("k", v(0), v(5)), ("k", v(9), v(0)), ("k", v(0), v(7)),
+      ("k", v(3), v(4)), ("k", v(8), v(8)))
+    assert(check("star forest centred on minima", starForest) === 0,
+      "a star-forest input must stop on the init cut")
+    assert(check("single edges", Seq(("k", v(1), v(2)), ("k", v(4), v(3)))) === 0)
+    assert(check("chain", (0 until 30).map(i => ("k", v(i), v(i + 1)))) > 0)
+    assert(check("depth-3 tree", Seq(("k", v(0), v(1)), ("k", v(1), v(2)), ("k", v(2), v(3)),
+      ("k", v(1), v(4)), ("k", v(4), v(5)), ("k", v(0), v(6)))) > 0)
+    assert(check("star centred off its minimum", Seq(("k", v(5), v(1)), ("k", v(5), v(2)),
+      ("k", v(5), v(9)))) > 0)
+    assert(check("two keys", Seq(("k1", v(3), v(1)), ("k1", v(3), v(2)), ("k2", v(1), v(2)),
+      ("k2", v(2), v(3)), ("k2", v(6), v(7)))) > 0)
+    assert(check("two keys, each a star forest", Seq(("k1", v(1), v(3)), ("k1", v(1), v(2)),
+      ("k2", v(3), v(1)), ("k2", v(2), v(4)))) === 0)
+  }
+
   test("large-star/small-star scopes labels per key (shared vertex names)") {
     import spark.implicits._
     // the same vertex names exist under both keys; edges join them only

@@ -81,6 +81,54 @@ class OpsSpec extends SparkSpec {
     assert(owned.contains((500L, 501L)))
   }
 
+  test("band ownership holds when one bucket holds most rows") {
+    val rnd = new scala.util.Random(20261020L)
+    val (bands, keys, differs) = Dedup.simhashBanding(15, 4)
+    // 400 of 500 signatures share their lowest lane: band 0 has one bucket
+    // of 400 rows; the other lanes are random (about half negative)
+    val sigs = (0 until 500).map { i =>
+      val r = rnd.nextLong()
+      (i.toLong, if (i < 400) r & ~0xfL | 0x5L else r)
+    }.toDF("id", "sig")
+    val owned = pairList(Dedup.bandJoin(sigs, keys, bands, lit(true), differs))
+    assert(owned === distinctBandJoin(sigs, keys))
+    assert(owned.distinct.size === owned.size)
+    assert(owned.size >= 400 * 399 / 2, "every pair of the hot bucket is a candidate")
+  }
+
+  test("bucket pair kernel emits exactly the rows of the self-join it replaces") {
+    import graft.functions.BucketPairs
+    val rnd = new scala.util.Random(7L)
+    val (bands, keys, differs) = Dedup.simhashBanding(7, 8)
+    // random signatures (about half negative), a hot lane-0 bucket,
+    // repeated ids, which the self-join never pairs with themselves, and
+    // null sizes, which the condition's size sum never lets pair
+    val base = (0 until 300).map(i => (i.toLong, if (i % 3 == 0) rnd.nextLong() & ~0xffL
+      else rnd.nextLong(), if (i % 50 == 7) None else Some(rnd.nextInt(50))))
+    val rows = (base ++ base.take(5)).toDF("id", "sig", "n")
+      .select(posexplode(keys).as(Seq("band", "key")), col("id"), col("sig"), col("n"))
+    val cond = col("ida") < col("idb") && bit_count(col("siga").bitwiseXOR(col("sigb"))) <= 30 &&
+      (col("banda") <= 0 || differs(0)) && col("na") + col("nb") > 20
+    def selfJoin(r: org.apache.spark.sql.DataFrame) = {
+      def side(s: String) = r.select(r.columns.map(c => col(c).as(c + s)).toSeq: _*)
+      side("a").join(side("b"), col("banda") === col("bandb") && col("keya") === col("keyb"))
+        .filter(cond)
+    }
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString(","))
+    val kernel = BucketPairs.selfJoin(rows, Seq("band", "key"), cond)
+    val joined = selfJoin(rows)
+    assert(kernel.columns.toSeq === joined.columns.toSeq)
+    val expect = rowsOf(joined)
+    assert(expect.nonEmpty && expect.length < 300 * 299 / 2 * bands)
+    assert(rowsOf(kernel) === expect, "long ids")
+    // string ids order differently from their numbers: the kernel must
+    // order each pair by the id's own type
+    val strs = rows.withColumn("id", format_string("%d", col("id")))
+    assert(rowsOf(BucketPairs.selfJoin(strs, Seq("band", "key"), cond)) === rowsOf(selfJoin(strs)),
+      "string ids")
+  }
+
   test("minhash LSH finds all very-high-jaccard pairs found exactly") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.9)
       .select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

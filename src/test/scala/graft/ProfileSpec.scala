@@ -24,16 +24,18 @@ class ProfileSpec extends SparkSpec {
       val rows = l.rows.map(r => r.label -> r).toMap
       val first = rows("spec:shuffle")
       assert((first.jobs, first.stages) === (1, 2))
+      assert(first.tasks === 4 + sums.getNumPartitions, "4 map tasks plus the reduce tasks")
       assert(first.shuffleWriteBytes > 0L)
       assert(first.shuffleWriteRecords === 4L * 17L)
       val reuse = rows("spec:reuse")
-      assert((reuse.jobs, reuse.stages) === (1, 1))
+      assert((reuse.jobs, reuse.stages, reuse.tasks) === (1, 1, sums.getNumPartitions))
       assert((reuse.shuffleWriteBytes, reuse.shuffleWriteRecords) === (0L, 0L))
       assert(rows(Profile.Unlabelled).jobs >= 1, "the unlabelled job has its own row")
       val t = l.totals
       val all = l.rows
       assert(all.map(_.jobs).sum === t.jobs)
       assert(all.map(_.stages).sum === t.stages)
+      assert(all.map(_.tasks).sum === t.tasks)
       assert(all.map(_.taskMs).sum === t.taskMs)
       assert(all.map(_.shuffleWriteBytes).sum === t.shuffleWriteBytes)
       assert(all.map(_.shuffleWriteRecords).sum === t.shuffleWriteRecords)
