@@ -122,16 +122,11 @@ leg() {
     PIDS+=($!)
   done
   sleep 4
-  # pass GRAFT_STAGE_TIMING only when the caller actually set it non-empty:
-  # an unconditional VAR=${VAR:-} assignment exports the EMPTY string, and
-  # the engine gates diagnostics on sys.env.contains — the opt-in would be
-  # silently always-on for every cluster leg
   # driver heap 6g: two of four 384k campaigns lost an 8-core leg to a
   # SILENT driver death (the grep filter below was eating the exception
   # output) — the driver is unpinned and off the measured executors, so
   # its heap does not participate in the measurement. The full driver
   # output is now tee'd per leg so the next failure is diagnosable.
-  env ${GRAFT_STAGE_TIMING:+GRAFT_STAGE_TIMING=$GRAFT_STAGE_TIMING} \
   GRAFT_EXEC_HEAP_GB=$EXEC_HEAP_GB \
   java $ADD_OPENS -Xms6g -Xmx6g -XX:+AlwaysPreTouch \
     -Dgraft.execJavaOpts="$EXEC_OPTS" \
@@ -140,7 +135,7 @@ leg() {
     -cp "$CLASSES:/opt/spark/jars/*" \
     graft.app.ScalingBench cluster $MASTER_URL $((k*8)) $NDOCS $CSV \
     2>&1 | tee /tmp/graft-scaling-driver-${k}x.log \
-         | grep -E "\[scaling|\[stage-timing" || true
+         | grep -E "\[scaling|\[profile\]" || true
   cleanup
 }
 

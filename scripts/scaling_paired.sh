@@ -12,7 +12,7 @@
 #     cluster does not have (measured: 96k docs at a flat 24 GiB ran
 #     169 s on 8 cores vs 349 s on 32; per-core heap removed the
 #     inversion);
-#   - shuffle/spill scratch on tmpfs (GRAFT_SHM_LOCALDIR): one shared
+#   - shuffle/spill scratch on tmpfs (SPARK_LOCAL_DIRS): one shared
 #     spinning disk is not a per-executor resource; page-cache-backed
 #     scratch is the closer analog of per-executor local SSDs.
 #
@@ -43,11 +43,12 @@ leg() {
   # high thread counts (guest mmap_sem) — measured 96k-doc 32-leg builds
   # fell 290-450 s -> 98 s from this flag alone. Real executors run with
   # fixed heaps; a growing heap is a local-mode artifact.
-  GRAFT_SHM_LOCALDIR=1 taskset -c 0-$((c-1)) java $ADD_OPENS -Xms$mem -Xmx$mem \
+  mkdir -p /dev/shm/spark-graft
+  SPARK_LOCAL_DIRS=/dev/shm/spark-graft taskset -c 0-$((c-1)) java $ADD_OPENS -Xms$mem -Xmx$mem \
     -XX:+AlwaysPreTouch \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "$CLASSES:/opt/spark/jars/*" \
-    graft.app.ScalingBench level $c $NDOCS $CSV 2>&1 | grep -E "\[scaling\]" || true
+    graft.app.ScalingBench level $c $NDOCS $CSV 2>&1 | grep -E "\[scaling|\[profile\]" || true
 }
 
 for r in $(seq 1 "$ROUNDS"); do

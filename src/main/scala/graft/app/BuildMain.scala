@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.core.Corpus
+import graft.core.{Corpus, JobMetrics, Par}
 import graft.extract.DeterministicExtractor
 import graft.io.{Checkpoints, ParquetTableIO}
 import graft.pipeline.BuildPipeline
@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Generates the seeded interleaved corpus (or, in a real deployment, read
   * the input Iceberg table instead), runs the resumable build into
-  * <workDir> (per-stage checkpoints + _lineage), prints per-stage metrics
-  * and the triple-parity score vs the corpus oracle.
+  * <workDir> (per-stage checkpoints + _lineage), prints where the build's
+  * time and shuffle bytes went per job label ([[JobMetrics]]), the
+  * triple-parity score vs the corpus oracle and the per-stage metrics.
   * Re-running with the same workDir resumes: completed stages are read
   * back, not recomputed.
   *
@@ -56,6 +57,7 @@ object BuildMain {
     val runId = java.util.UUID.randomUUID().toString
     val cp = new Checkpoints(spark, io, runId)
 
+    val metrics = JobMetrics.listen(spark)
     val t0 = System.nanoTime()
     val docs = Corpus.docs(spark, nDocs, seed)
     // extraction client: the deterministic extractor by default; an
@@ -68,8 +70,10 @@ object BuildMain {
       case None => new DeterministicExtractor
     }
     val result = BuildPipeline.run(docs, extractor, Some(cp))
-    val nTriples = result.triples.count()
+    val nTriples = Par.labelled(spark, "graft-build:count")(result.triples.count())
     val wall = (System.nanoTime() - t0) / 1e9
+    JobMetrics.report(spark, metrics).foreach(println)
+    spark.sparkContext.removeSparkListener(metrics)
 
     val (p, r) = BuildPipeline.parity(result.triples, Corpus.oracleTriples(spark, nDocs, seed).toDF())
 

@@ -1,22 +1,26 @@
 package graft.app
 
-import graft.core.Corpus
+import graft.core.{Corpus, JobMetrics, Par, Sessions}
 import graft.extract.DeterministicExtractor
 import graft.pipeline.BuildPipeline
 import org.apache.spark.sql.SparkSession
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 /** Scaling-efficiency evidence for BASELINE.json north_rule.
   *
-  * No real cluster exists in this sandbox, so the N vs 4N executor
-  * criterion is proxied by running the *identical* end-to-end KG build at
-  * local[8] and local[32] on the same seeded input. Two methodology
-  * guards make the numbers honest:
+  * One process runs one leg: the *identical* end-to-end KG build on the
+  * same seeded input, either at local[n] in a JVM pinned to n cores
+  * (`level`, driven by `scripts/scaling_paired.sh`) or against a
+  * standalone cluster of 8-core executors (`cluster`, driven by
+  * `scripts/scaling_cluster.sh`). Two methodology guards make the
+  * numbers honest:
   *
-  *   1. per-level JIT warmup — a small build runs (untimed) in each fresh
-  *      session before the measured build, so neither level pays one-time
+  *   1. per-leg JIT warmup — a small build runs (untimed) in the leg's
+  *      session before the measured build, so no leg pays one-time
   *      codegen/JIT cost;
   *   2. hardware calibration — an embarrassingly-parallel pure-CPU job
-  *      (fixed total work, 256 independent tasks) is timed at each level.
+  *      (fixed total work, 256 independent tasks) is timed in each leg.
   *      This sandbox is a contended VM: 32 threads deliver ~21 effective
   *      cores (migration-thread steal), so even a *perfectly parallel*
   *      job cannot speed up 4.0x from 8→32 threads. The calibration
@@ -26,49 +30,34 @@ import org.apache.spark.sql.SparkSession
   *      the one that transfers to a real N→4N executor cluster, where
   *      executors do not share cores.
   *
-  * Usage: ScalingBench [nDocs] [outFile]
+  * Task-seconds are executor run time summed over the build's stages by
+  * [[graft.core.JobMetrics]], the number `Profile` reports. Older csv
+  * rows of the same generation carry the scheduler-side task wall
+  * (`taskInfo.duration`) instead; every pooled number is a within-round
+  * ratio of one binary, so the two kinds never meet in one ratio.
+  *
+  * Usage:
+  * {{{
+  *   ScalingBench level <cores> <nDocs> [csv]
+  *   ScalingBench cluster <masterUrl> <totalCores> <nDocs> [csv]
+  *   ScalingBench summarize <csv> [outMd] [note ...]
+  * }}}
   */
 object ScalingBench {
 
-  private def session(cores: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // graft.core.Sessions carries the shared engine tuning (memory-map
-    // threshold, Kryo, tmpfs toggle); the build-path SQL tuning (no
-    // auto-broadcast, hash joins/aggs) is set by BuildPipeline.run itself.
-    graft.core.Sessions.local(cores, s"graft-scaling-$cores")
-  }
-
-  /** Occupancy probe: jobs / stages / summed task wall — distinguishes
-    * "cores idle between stages" (low occupancy => scheduling/barrier F)
-    * from "tasks themselves slow" (high occupancy => W or contention). */
-  private class BuildStats extends org.apache.spark.scheduler.SparkListener {
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      taskMs.addAndGet(e.taskInfo.duration); tasks.incrementAndGet(); ()
-    }
-    override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      { stages.incrementAndGet(); () }
-    override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      { jobs.incrementAndGet(); () }
-  }
-
   private val buildSeq = new java.util.concurrent.atomic.AtomicInteger
 
-  /** One timed build: wall, triple count, summed task wall (the total
-    * task-seconds the work consumed — its growth between legs is the
+  /** One timed build: wall, triple count, summed task-seconds (the total
+    * executor time the work consumed — its growth between legs is the
     * per-task slowdown the shared box imposes at higher thread counts),
     * and occupancy (task-seconds / (wall x cores) — the fraction of
     * core-time actually running tasks, i.e. the scheduling/barrier
-    * efficiency the ENGINE owns). */
+    * efficiency the ENGINE owns: low occupancy means cores idle between
+    * stages, high occupancy means the tasks themselves are slow). */
   case class BuildRun(wall: Double, triples: Long, taskSum: Double, occ: Double)
 
   private def build(spark: SparkSession, nDocs: Long, cores: Int = 0): BuildRun = {
-    val stats = new BuildStats
-    spark.sparkContext.addSparkListener(stats)
+    val metrics = JobMetrics.listen(spark)
     // GRAFT_SCALING_CKPT=<base>: route pipeline stages through the parquet
     // Checkpoints work dir (the production path) instead of cached blocks.
     // On multi-executor legs this is the honest emulation — a real build at
@@ -86,15 +75,20 @@ object ScalingBench {
     val t0 = System.nanoTime()
     val triples = BuildPipeline
       .run(Corpus.docs(spark, nDocs), new DeterministicExtractor, checkpoints = ckpt)
-      .triples.count()
+      .triples
+    val n = Par.labelled(spark, "graft-scaling:count")(triples.count())
     val wall = (System.nanoTime() - t0) / 1e9
-    spark.sparkContext.removeSparkListener(stats)
-    val taskSum = stats.taskMs.get / 1000.0
+    val table = JobMetrics.report(spark, metrics)
+    spark.sparkContext.removeSparkListener(metrics)
+    val t = metrics.totals
+    val taskSum = t.taskMs / 1000.0
     val occ = if (cores > 0) taskSum / (wall * cores) else 0.0
-    if (cores > 0)
-      println(f"[scaling-occ] cores=$cores jobs=${stats.jobs.get} stages=${stats.stages.get} " +
-        f"tasks=${stats.tasks.get} taskSum=$taskSum%.1fs occupancy=$occ%.2f")
-    BuildRun(wall, triples, taskSum, occ)
+    if (cores > 0) {
+      table.foreach(println)
+      println(f"[scaling-occ] cores=$cores jobs=${t.jobs} stages=${t.stages} " +
+        f"tasks=${t.tasks} taskSum=$taskSum%.1fs occupancy=$occ%.2f")
+    }
+    BuildRun(wall, n, taskSum, occ)
   }
 
   /** Fixed total CPU work in 256 independent tasks — the hardware ceiling
@@ -145,35 +139,27 @@ object ScalingBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** One leg in ITS OWN JVM under a matching CPU-affinity mask — the
-    * faithful "N-core executor" emulation. Running both legs inside one
-    * shared JVM (the legacy main below) lets the 8-thread leg borrow the
-    * 32-core host's GC/JIT/shuffle-IO threads (G1 sizes its thread pools
-    * from the HOST core count), which silently compresses the 8→32 ratio.
-    * `scripts/scaling_paired.sh` invokes this via
-    * `taskset -c 0-(n-1) sbt "runMain graft.app.ScalingBench level n docs csv"`,
-    * so the leg's JVM sees exactly n processors for EVERYTHING — tasks,
-    * GC, driver — as a real n-core executor would.
-    *
-    * Appends `cores,nDocs,buildSecs,calibSecs,visibleProcs` to the csv.
-    */
-  private def runLevel(cores: Int, nDocs: Long, csv: String): Unit = {
-    val visible = Runtime.getRuntime.availableProcessors()
-    val spark = session(cores)
+  /** One leg: warm up, then time the build between two runs of the CPU
+    * probe (host CPU service varies minute to minute, so one pre-build
+    * sample can misstate the ceiling the build actually ran under; the
+    * mean of before/after is the window estimate) and one of the memory
+    * probe. Appends
+    * `cores,nDocs,buildSecs,calibSecs,<col5>,triples,calibMemSecs,taskSecs,occupancy`
+    * to `csv`; `col5` is the visible processor count of a `level` leg and
+    * `<cores>c` for a `cluster` leg. */
+  private def leg(spark: SparkSession, cores: Int, nDocs: Long, csv: String,
+                  banner: String, col5: String): Unit = {
     build(spark, 1000L) // JIT/codegen warmup, untimed
-    // bracket the build with the probe: host CPU service varies minute to
-    // minute, so one pre-build sample can misstate the ceiling the build
-    // actually ran under; the mean of before/after is the window estimate
     val calibPre = calibrate(spark)
     val run = build(spark, nDocs, cores)
     val calibPost = calibrate(spark)
     val calibMem = calibrateMem(spark)
     val calib = (calibPre + calibPost) / 2
     spark.stop()
-    println(f"[scaling] level local[$cores] (visible procs=$visible): build=${run.wall}%.1fs calib=$calib%.1fs (pre=$calibPre%.1f post=$calibPost%.1f) mem=$calibMem%.1fs triples=${run.triples}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(csv),
-      f"$cores,$nDocs,${run.wall}%.2f,$calib%.2f,$visible,${run.triples},$calibMem%.2f,${run.taskSum}%.2f,${run.occ}%.3f\n".getBytes,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    println(f"[scaling] $banner: build=${run.wall}%.1fs calib=$calib%.1fs (pre=$calibPre%.1f post=$calibPost%.1f) mem=$calibMem%.1fs triples=${run.triples}")
+    Files.write(Paths.get(csv),
+      f"$cores,$nDocs,${run.wall}%.2f,$calib%.2f,$col5,${run.triples},$calibMem%.2f,${run.taskSum}%.2f,${run.occ}%.3f\n".getBytes,
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
   /** Generation tag stamped into every appended row: ties a measurement to
@@ -186,7 +172,7 @@ object ScalingBench {
   // ambiguous-doc-only late chunk agg; id-encoded union-find) —
   // linker shuffle -39.5% at 96k docs. g5: linker desc-payload byte diet.
 
-  /** Summarize the csv produced by repeated [[runLevel]] calls: per-level
+  /** Summarize the csv produced by repeated [[leg]] runs: per-level
     * best-of (contention only adds time) plus the per-round PAIRED ratios
     * (adjacent 8/32 legs of the same round), appended as a markdown row
     * stamped with [[Generation]] and the building commit (GRAFT_COMMIT). */
@@ -248,89 +234,41 @@ object ScalingBench {
       f"| $nDocs | 8c: $bestT8%.1fs (${nDocs / bestT8}%.1f docs/s) | 32c: $bestT32%.1fs (${nDocs / bestT32}%.1f docs/s) | $engineSpeedup%.2fx | $hwSpeedup%.2fx | ${engineSpeedup / 4.0}%.2f | ${engineSpeedup / hwSpeedup}%.2f | gen=$Generation commit=$commit $note; paired ratios ${fm(pairedSp)};$decomp |"
     println(line)
     out.foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p), (line + "\n").getBytes,
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+      Files.write(Paths.get(p), (line + "\n").getBytes,
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
-  }
-
-  /** One cluster-mode leg: connect to a standalone master whose workers
-    * (separate pinned 8-core JVMs, launched by scripts/scaling_cluster.sh)
-    * provide `totalCores` in 8-core executors with constant per-executor
-    * heaps — the faithful N-vs-4N-executor emulation (see Sessions.cluster).
-    * Appends the same csv row shape as [[runLevel]]. */
-  private def runCluster(masterUrl: String, totalCores: Int, nDocs: Long, csv: String): Unit = {
-    val heapGb = sys.env.get("GRAFT_EXEC_HEAP_GB").map(_.toInt).getOrElse(10)
-    val spark = graft.core.Sessions.cluster(masterUrl, totalCores,
-      execCores = 8, execHeapGb = heapGb, appName = s"graft-scaling-c$totalCores")
-    build(spark, 1000L) // JIT/codegen warmup on every executor, untimed
-    val calibPre = calibrate(spark)
-    val run = build(spark, nDocs, totalCores)
-    val calibPost = calibrate(spark)
-    val calibMem = calibrateMem(spark)
-    val calib = (calibPre + calibPost) / 2
-    spark.stop()
-    println(f"[scaling] cluster cores=$totalCores (${totalCores / 8} x 8-core executors): build=${run.wall}%.1fs calib=$calib%.1fs (pre=$calibPre%.1f post=$calibPost%.1f) mem=$calibMem%.1fs triples=${run.triples}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(csv),
-      f"$totalCores,$nDocs,${run.wall}%.2f,$calib%.2f,${totalCores}c,${run.triples},$calibMem%.2f,${run.taskSum}%.2f,${run.occ}%.3f\n".getBytes,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
 
   def main(args: Array[String]): Unit = {
     // csv rows and md rows are f-formatted; a comma-decimal default locale
     // would corrupt both — pin ROOT before any formatting
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    if (args.length >= 4 && args(0) == "cluster")
-      return runCluster(args(1), args(2).toInt, args(3).toLong,
-        if (args.length > 4) args(4) else "/tmp/scaling_raw.csv")
-    if (args.length >= 3 && args(0) == "level")
-      return runLevel(args(1).toInt, args(2).toLong,
-        if (args.length > 3) args(3) else "/tmp/scaling_raw.csv")
-    if (args.nonEmpty && args(0) == "summarize")
-      return summarize(args(1), if (args.length > 2) Some(args(2)) else None,
-        if (args.length > 3) args.drop(3).mkString(" ") else "affinity-isolated JVMs")
-
-    val nDocs = if (args.nonEmpty) args(0).toLong else 24000L
-    val out = if (args.length > 1) Some(args(1)) else None
-    val rounds = if (args.length > 2) args(2).toInt else 3
-
-    // Alternate levels across `rounds` and keep the per-level MINIMUM:
-    // external contention only ever ADDS time, so best-of-N is the
-    // unbiased estimator of what each level actually costs. (Observed on
-    // this box: the same local[32] build varies 50s..158s run-to-run while
-    // local[8] varies 31s..163s — single-shot numbers are meaningless.)
-    var bestT8, bestT32, bestC8, bestC32 = Double.MaxValue
-    var n8, n32 = -1L
-    (1 to rounds).foreach { r =>
-      Seq(8, 32).foreach { cores =>
-        val spark = session(cores)
-        build(spark, 1000L) // warmup: codegen + JIT, untimed
-        val calib = calibrate(spark)
-        val BuildRun(secs, triples, _, _) = build(spark, nDocs)
-        spark.stop()
-        println(f"[scaling] round $r local[$cores]: build=$secs%.1fs calib=$calib%.1fs")
-        if (cores == 8) { bestT8 = math.min(bestT8, secs); bestC8 = math.min(bestC8, calib); n8 = triples }
-        else { bestT32 = math.min(bestT32, secs); bestC32 = math.min(bestC32, calib); n32 = triples }
-      }
-    }
-    require(n8 == n32, s"triple counts differ across parallelism: $n8 vs $n32")
-
-    val thr8 = nDocs / bestT8
-    val thr32 = nDocs / bestT32
-    val engineSpeedup = bestT8 / bestT32
-    val hwSpeedup = bestC8 / bestC32 // achievable ceiling on this box (<= 4.0)
-    val effRaw = engineSpeedup / 4.0
-    val effNorm = engineSpeedup / hwSpeedup
-
-    println(s"[scaling] docs=$nDocs triples=$n8 rounds=$rounds (best-of)")
-    println(f"[scaling] build   local[8]=$bestT8%.1fs ($thr8%.1f docs/s)  local[32]=$bestT32%.1fs ($thr32%.1f docs/s)  speedup=$engineSpeedup%.2fx")
-    println(f"[scaling] hw-cal  local[8]=$bestC8%.1fs  local[32]=$bestC32%.1fs  achievable speedup=$hwSpeedup%.2fx (nominal 4.00x)")
-    println(f"[scaling] efficiency: raw=$effRaw%.2f  normalized-to-hardware=$effNorm%.2f")
-    val line =
-      f"| $nDocs | local[8]: $bestT8%.1fs ($thr8%.1f docs/s) | local[32]: $bestT32%.1fs ($thr32%.1f docs/s) | $engineSpeedup%.2fx | $hwSpeedup%.2fx | $effRaw%.2f | $effNorm%.2f |"
-    println(line)
-    out.foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p), (line + "\n").getBytes,
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    def csvOf(rest: List[String]) = rest.headOption.getOrElse("/tmp/scaling_raw.csv")
+    args.toList match {
+      // `scripts/scaling_paired.sh` runs this under `taskset -c 0-(n-1)`,
+      // so the leg's JVM sees exactly n processors for EVERYTHING — tasks,
+      // GC (G1 sizes its thread pools from the visible core count), driver
+      // — as a real n-core executor would
+      case "level" :: cores :: nDocs :: rest =>
+        val visible = Runtime.getRuntime.availableProcessors()
+        leg(Sessions.local(cores.toInt, s"graft-scaling-$cores"), cores.toInt, nDocs.toLong,
+          csvOf(rest), s"level local[$cores] (visible procs=$visible)", visible.toString)
+      // workers are separate pinned 8-core JVMs launched by
+      // `scripts/scaling_cluster.sh`, with constant per-executor heaps —
+      // the faithful N-vs-4N-executor emulation (see Sessions.cluster)
+      case "cluster" :: masterUrl :: cores :: nDocs :: rest =>
+        val total = cores.toInt
+        val heapGb = sys.env.get("GRAFT_EXEC_HEAP_GB").map(_.toInt).getOrElse(10)
+        leg(Sessions.cluster(masterUrl, total, execCores = 8, execHeapGb = heapGb,
+            appName = s"graft-scaling-c$total"), total, nDocs.toLong, csvOf(rest),
+          s"cluster cores=$total (${total / 8} x 8-core executors)", s"${total}c")
+      case "summarize" :: csv :: rest =>
+        summarize(csv, rest.headOption,
+          if (rest.size > 1) rest.tail.mkString(" ") else "affinity-isolated JVMs")
+      case _ =>
+        System.err.println("usage: ScalingBench level <cores> <nDocs> [csv] | " +
+          "cluster <masterUrl> <totalCores> <nDocs> [csv] | summarize <csv> [outMd] [note ...]")
+        sys.exit(2)
     }
   }
 }

@@ -37,22 +37,15 @@ object Par {
   }
 
   /** Run `body` with every Spark job it submits from this thread labelled
-    * `label` (`spark.job.description`: the UI and `graft.app.Profile`
-    * attribute jobs by it, and AQE sub-jobs inherit it). The previous label
-    * is restored even when `body` throws, so a nested label never leaves
-    * its caller's later jobs unlabelled. `GRAFT_STAGE_TIMING` prints the
-    * wall of each labelled body. */
+    * `label` (`spark.job.description`: the UI and [[JobMetrics]] attribute
+    * jobs by it, and AQE sub-jobs inherit it). The previous label is
+    * restored even when `body` throws, so a nested label never leaves its
+    * caller's later jobs unlabelled. */
   def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty(JobDescription)
-    val t0 = System.nanoTime()
     sc.setJobDescription(label)
-    try body
-    finally {
-      sc.setJobDescription(prev)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[stage-timing] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    }
+    try body finally sc.setJobDescription(prev)
   }
 
   def await[T](f: scala.concurrent.Future[T]): T =

@@ -55,7 +55,7 @@ object Sessions {
 
   def builder(master: String, appName: String,
               shufflePartitions: Int): SparkSession.Builder = {
-    val b = SparkSession.builder()
+    SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -68,13 +68,6 @@ object Sessions {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", "134217728")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-    // diagnostic toggle: shuffle scratch on tmpfs — a single shared spinning
-    // disk is not a per-executor resource on a real cluster
-    sys.env.get("GRAFT_SHM_LOCALDIR").foreach { _ =>
-      new java.io.File("/dev/shm/spark-graft").mkdirs()
-      b.config("spark.local.dir", "/dev/shm/spark-graft")
-    }
-    b
   }
 
   def local(cores: Int, appName: String): SparkSession = {

@@ -69,7 +69,6 @@ object ConnectedComponents {
     var iter = 0
     var converged = n == 0L || isStarForest(p)
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       // LARGE-STAR over bidirectional neighborhoods. m <= u < v for every
       // emitted (v, m), so the u > v orientation is preserved by renaming.
       val nbrs = p.select(col("key"), col("u"), col("v"))
@@ -97,13 +96,11 @@ object ConnectedComponents {
         .filter(col("x") =!= col("m"))
         .select(col("key"), col("x").as("u"), col("m").as("v"))
         .distinct()
-      val (cp, cpRdd, curCount) = graft.core.Materialize.stageCutHandleN(small)
+      val (cp, cpRdd, _) = graft.core.Materialize.stageCutHandleN(small)
       pRdd.unpersist(blocking = false)
-      p = cp; pRdd = cpRdd; n = curCount
+      p = cp; pRdd = cpRdd
       iter += 1
       converged = isStarForest(p)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[cc-bigstar] iter=$iter pairs=$n ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     starRounds = iter
     if (!converged)

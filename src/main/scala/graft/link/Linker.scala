@@ -105,14 +105,16 @@ object Linker {
       .filter(col("name_norm") =!= "")
   }
 
-  /** Doc-level slim name table (doc_id, name_norm, display) computed
-    * WITHOUT the desc-bearing chunk aggregation: one desc-free shuffle of
-    * (doc_id, name_norm, display) with map-side combine. Same rows as
-    * `uniqueNamesSlimFrom(mentionAgg(logs))` — the global min(display) is
-    * the min of the per-chunk mins — but the description payloads never
-    * enter ANY corpus-wide shuffle; [[canonicalMappingResult]] re-derives
-    * them from the (materialized) logs for the ambiguous ~2% of documents
-    * only. */
+  /** SLIM doc-level name table: (doc_id, name_norm, display) — the only
+    * columns the prefix-blocking join, connected components, and cluster
+    * resolution actually read — computed WITHOUT the desc-bearing chunk
+    * aggregation: one desc-free shuffle of (doc_id, name_norm, display)
+    * with map-side combine. The display is the same min(display) a
+    * [[mentionAgg]] rollup gives — the global min is the min of the
+    * per-chunk mins — but the description payloads (KBs per name on real
+    * corpora — the dominant linker shuffle bytes) never enter ANY
+    * corpus-wide shuffle; [[canonicalMappingResult]] re-derives them from
+    * the (materialized) logs for the ambiguous ~2% of documents only. */
   def uniqueNamesSlim(logs: Dataset[ExtractionLog]): DataFrame =
     mentionsRaw(logs)
       .select(col("doc_id"), col("name_norm"), col("display"))
@@ -124,9 +126,6 @@ object Linker {
     * assignment). Stage 2 over [[mentionAgg]]: a doc-wide distinct-desc
     * set is the union of the per-chunk sets, so sort + join give exactly
     * the strings the single-level aggregation produced. */
-  def uniqueNames(logs: Dataset[ExtractionLog]): DataFrame =
-    uniqueNamesFrom(mentionAgg(logs))
-
   def uniqueNamesFrom(agg: DataFrame): DataFrame = {
     def joined(c: Column) = array_join(array_sort(array_distinct(flatten(c))), " ")
     agg.groupBy(col("doc_id"), col("name_norm"))
@@ -136,16 +135,6 @@ object Linker {
         joined(collect_list(col("ne_set"))).as("ne_descs"),
         joined(collect_list(col("prop_set"))).as("prop_descs"))
   }
-
-  /** SLIM doc-level name table: (doc_id, name_norm, display) — the only
-    * columns the prefix-blocking join, connected components, and cluster
-    * resolution actually read. The description payloads (KBs per name on
-    * real corpora — the dominant linker shuffle bytes) are NOT carried
-    * here; [[canonicalMappingResult]] recomputes them late from the
-    * mention aggregation for the ambiguous ~2% of documents only. */
-  def uniqueNamesSlimFrom(agg: DataFrame): DataFrame =
-    agg.groupBy(col("doc_id"), col("name_norm"))
-      .agg(min(col("display")).as("display"))
 
   /** Candidate pairs via token-PREFIX blocking, scored with token_set_ratio.
     *

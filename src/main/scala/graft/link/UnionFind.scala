@@ -4,8 +4,7 @@ import scala.collection.mutable
 
 /** Union-find over the vertices of ONE bounded group — a document's
   * entity names or its graph nodes — the fold shared by the linker's and
-  * the community layer's per-document cogroups (and DetCheck, which
-  * stresses it over frozen linker inputs).
+  * the community layer's per-document cogroups.
   *
   * Keys are interned to dense `Int` indices in first-seen order and the
   * forest is an `Int` array, so [[find]]'s path compression writes only

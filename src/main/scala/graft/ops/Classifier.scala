@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.TextFns
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multinomial Naive-Bayes document classifier — the distributed analog of
@@ -38,10 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object Classifier {
 
-  /** The canonical tokenization — [[graft.functions.TextFns.tokensCol]]. */
-  private def tokArr(textCol: Column): Column =
-    graft.functions.TextFns.tokensCol(textCol)
-
   /** Train on `train(labelCol, trainTextCol)`, score every row of `df`.
     * Returns (id, pred, n_tokens, n_oov, score), one row per document,
     * score = the winning class's unnormalized log-posterior (4 dp). The
@@ -52,7 +49,7 @@ object Classifier {
                  train: DataFrame, labelCol: String, trainTextCol: String,
                  addK: Double = 1.0): DataFrame = {
     val tr = train.select(col(labelCol).cast("string").as("c"),
-      tokArr(col(trainTextCol)).as("ws"))
+      TextFns.tokensCol(col(trainTextCol)).as("ws"))
 
     // priors: per-class doc counts + the 1-row corpus total (|C| rows;
     // broadcast-joined to every doc-class score below)
@@ -70,7 +67,7 @@ object Classifier {
     val vsize = vocab.agg(count(lit(1)).as("v"))
 
     // corpus side: one scan, collapsed to per-doc tf before any join
-    val tf = df.select(col(idCol).as("id"), explode(tokArr(col(textCol))).as("t"))
+    val tf = df.select(col(idCol).as("id"), explode(TextFns.tokensCol(col(textCol))).as("t"))
       .groupBy("id", "t").agg(count(lit(1)).as("tf"))
     val marked = tf.join(vocab.select(col("t"), lit(1).as("iv")), Seq("t"), "left")
     // per-doc totals: length and OOV mass (class-independent)

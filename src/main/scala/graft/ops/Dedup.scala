@@ -383,19 +383,29 @@ object Dedup {
     * cosine >= threshold compounds across tables. */
   def embeddingCosinePairs(df: DataFrame, idCol: String, vecCol: String,
                            threshold: Double = 0.95, tables: Int = 4,
-                           bits: Int = 8, dim: Int = 64, seed: Long = 7L): DataFrame = {
+                           bits: Int = 8, dim: Int = 64, seed: Long = 7L): DataFrame =
+    lshCosinePairs(df.select(col(idCol).as("id"), col(vecCol).as("v")), Nil,
+      threshold, tables, bits, dim, seed)
+
+  /** The LSH candidate join and exact-cosine verify behind
+    * [[embeddingCosinePairs]], over `vecs(id, v, keys...)`: candidates
+    * must also agree on every `keys` column (the SemDeDup valve passes
+    * `cluster`). Output: (ida, idb, keys..., cosine), ida < idb. */
+  private def lshCosinePairs(vecs: DataFrame, keys: Seq[String], threshold: Double,
+                             tables: Int, bits: Int, dim: Int, seed: Long): DataFrame = {
     val codes = Similarity.codesUdf(tables, bits, dim, seed)
-    val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     val coded = vecs.withColumn("codes", codes(col("v")))
-    // candidate generation and dedup carry ONLY (cell, id): the distinct
-    // shuffle moves id pairs, not 2x full float vectors (the payloads are
-    // rejoined once, per side, for exact verification)
-    val l = coded.select(col("id").as("ida"),
-      explode(Similarity.cellsUdf(tables)(col("codes"))).as("cell"))
-    val r = coded.select(col("id").as("idb"),
-      explode(Similarity.probesUdf(tables, bits)(col("codes"))).as("cell"))
-    l.join(r, l("cell") === r("cell") && col("ida") < col("idb"))
-      .select("ida", "idb").distinct()
+    // candidate generation and dedup carry ONLY (keys, cell, id): the
+    // distinct shuffle moves id pairs, not 2x full float vectors (the
+    // payloads are rejoined once, per side, for exact verification)
+    val l = coded.select(keys.map(col) ++ Seq(col("id").as("ida"),
+      explode(Similarity.cellsUdf(tables)(col("codes"))).as("cell")): _*)
+    val r = coded.select(keys.map(k => col(k).as(k + "2")) ++ Seq(col("id").as("idb"),
+      explode(Similarity.probesUdf(tables, bits)(col("codes"))).as("cell")): _*)
+    val on = ((l("cell") === r("cell")) +: keys.map(k => col(k) === col(k + "2")) :+
+      (col("ida") < col("idb"))).reduce(_ && _)
+    l.join(r, on)
+      .select(keys.map(col) ++ Seq(col("ida"), col("idb")): _*).distinct()
       .join(vecs.select(col("id").as("ida"), col("v").as("va")), Seq("ida"))
       .join(vecs.select(col("id").as("idb"), col("v").as("vb")), Seq("idb"))
       // threshold on the UNROUNDED cosine (the oracle filters unrounded);
@@ -403,7 +413,7 @@ object Dedup {
       // a boxed Seq[Float] UDF — same expression the ANN scorers use.
       .withColumn("c", Similarity.cosCol(col("va"), col("vb")))
       .filter(col("c") >= threshold)
-      .select(col("ida"), col("idb"), round(col("c"), 4).as("cosine"))
+      .select(Seq(col("ida"), col("idb")) ++ keys.map(col) :+ round(col("c"), 4).as("cosine"): _*)
   }
 
   /** Cross-document duplicated-span statistics — the span-level exact-dedup
@@ -587,21 +597,8 @@ object Dedup {
         "quadratic. Auto-switching candidate generation to a random-hyperplane " +
         "LSH sub-split within clusters (same exact-cosine verification; " +
         "multi-table + Hamming-1 probe recall as in embeddingCosinePairs).")
-      val codes = Similarity.codesUdf(tables = 4, bits = 8, dim = 64, seed = 7L)
-      val coded = assigned.withColumn("codes", codes(col("v")))
-      // candidates carry only (cluster, cell, id); vectors rejoin per side
-      val l = coded.select(col("cluster"), col("id").as("ida"),
-        explode(Similarity.cellsUdf(4)(col("codes"))).as("cell"))
-      val r = coded.select(col("cluster").as("cluster2"), col("id").as("idb"),
-        explode(Similarity.probesUdf(4, 8)(col("codes"))).as("cell"))
-      l.join(r, l("cell") === r("cell") && col("cluster") === col("cluster2") &&
-          col("ida") < col("idb"))
-        .select("cluster", "ida", "idb").distinct()
-        .join(assigned.select(col("id").as("ida"), col("v").as("va")), Seq("ida"))
-        .join(assigned.select(col("id").as("idb"), col("v").as("vb")), Seq("idb"))
-        .withColumn("c", Similarity.cosCol(col("va"), col("vb")))
-        .filter(col("c") >= threshold)
-        .select(col("ida"), col("idb"), col("cluster"), round(col("c"), 4).as("cosine"))
+      lshCosinePairs(assigned, Seq("cluster"), threshold,
+        tables = 4, bits = 8, dim = 64, seed = 7L)
     }
   }
 

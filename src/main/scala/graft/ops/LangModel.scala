@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.TextFns
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Count-based bigram language-model perplexity — the CCNet-style quality
@@ -39,17 +40,12 @@ import org.apache.spark.sql.functions._
   */
 object LangModel {
 
-  /** The canonical tokenization as an array (may be empty) —
-    * [[graft.functions.TextFns.tokensCol]]. */
-  private def tokArr(textCol: Column): Column =
-    graft.functions.TextFns.tokensCol(textCol)
-
   /** One row per bigram occurrence: (id, w1, w2), with `<s>` prepended so
     * every real token occurs as w2 exactly once. sequence() is guarded —
     * Spark's sequence(1, 0) counts DOWN, so single-`<s>` (empty) docs
     * must short-circuit to no pairs. */
   private def pairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val ws = array_insert(tokArr(col(textCol)), lit(1), lit("<s>"))
+    val ws = array_insert(TextFns.tokensCol(col(textCol)), lit(1), lit("<s>"))
     df.select(col(idCol).as("id"), ws.as("ws"))
       .select(col("id"), explode(when(size(col("ws")) <= 1, array())
         .otherwise(transform(sequence(lit(1), size(col("ws")) - 1), i =>

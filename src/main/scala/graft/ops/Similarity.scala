@@ -24,18 +24,23 @@ object Similarity {
   private[graft] def cosCol(a: Column, b: Column): Column =
     graft.functions.CosineSim(a, b)
 
+  /** The k best-scoring (qid, id) candidates per query, ranked by the
+    * 4-dp cosine of their `qv` and `cv` vectors, ties toward the lower id.
+    * Output: (qid, id, cosine, rank). */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
+    candidates.withColumn("cosine", round(cosCol(col("qv"), col("cv")), 4))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("qid", "id", "cosine", "rank")
+  }
+
   /** Exact top-k neighbors for each query (excluding self-matches by id).
     * Output: (qid, id, cosine, rank). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("id"), col("vec").as("cv"))
     val q = queries.select(col("id").as("qid"), col("vec").as("qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cosine", round(cosCol(col("qv"), col("cv")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "id", "cosine", "rank")
+    topK(c.crossJoin(broadcast(q)).filter(col("id") =!= col("qid")), k)
   }
 
   /** Deterministic hyperplane generator shared by the coder UDF and the
@@ -231,13 +236,7 @@ object Similarity {
       .withColumn("cluster", explode(nearestUdf(cents, nProbe)(col("qv"))))
     // each corpus row lives in exactly one list, so (qid, id) pairs are
     // already unique — no candidate distinct needed
-    val scored = bucketed.join(broadcast(probed), Seq("cluster"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cosine", round(cosCol(col("qv"), col("cv")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "id", "cosine", "rank")
+    topK(bucketed.join(broadcast(probed), Seq("cluster")).filter(col("id") =!= col("qid")), k)
   }
 
   /** LSH-bucketed ANN top-k: `tables` independent 6-bit hyperplane codes,
@@ -254,15 +253,10 @@ object Similarity {
       .withColumn("cell", explode(probesUdf(tables, bits)(codes(col("qv")))))
     // candidate dedup on bare (qid, id) pairs — the corpus vector rejoins
     // once after the distinct, the (small) query side broadcasts back in
-    val scored = c.join(broadcast(q.select(col("qid"), col("cell"))), Seq("cell"))
+    topK(c.join(broadcast(q.select(col("qid"), col("cell"))), Seq("cell"))
       .filter(col("id") =!= col("qid"))
       .select("qid", "id").distinct()
       .join(vecs, Seq("id"))
-      .join(broadcast(q.select(col("qid"), col("qv")).dropDuplicates("qid")), Seq("qid"))
-      .withColumn("cosine", round(cosCol(col("qv"), col("cv")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "id", "cosine", "rank")
+      .join(broadcast(q.select(col("qid"), col("qv")).dropDuplicates("qid")), Seq("qid")), k)
   }
 }

@@ -93,14 +93,11 @@ object TextAnalysis {
     df.select(col(idCol).as("id"),
       TextFns.estimateTokensCol(col(textCol)).cast("long").as("n_tokens"))
 
-  /** Document fingerprint — delegates to the canonical
-    * [[TextFns.fingerprintCol]] (one definition across the ops layer, the
-    * SQL registry and the streaming dedup state key). */
-  def fingerprintCol(textCol: Column): Column =
-    TextFns.fingerprintCol(textCol)
-
+  /** Document fingerprint — the canonical [[TextFns.fingerprintCol]] (one
+    * definition across the ops layer, the SQL registry and the streaming
+    * dedup state key). */
   def fingerprint(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("id"), fingerprintCol(col(textCol)).as("fingerprint"))
+    df.select(col(idCol).as("id"), TextFns.fingerprintCol(col(textCol)).as("fingerprint"))
 
   /** Language-ID heuristic: character/stopword n-gram profiles for a small
     * language set; returns best-scoring language with its score. Profiles

@@ -195,7 +195,7 @@ object BuildPipeline {
     // contract unchanged).
     def unionStage(name: String)(base: DataFrame)(part: => DataFrame): DataFrame =
       checkpoints match {
-        case Some(cp) => cp.stage(name)(base.unionByName(part))
+        case Some(_) => stage(name)(base.unionByName(part))
         case None =>
           base.unionByName(Par.labelled(spark, s"graft-stage:$name-part")(Materialize.stageCut(part)))
       }

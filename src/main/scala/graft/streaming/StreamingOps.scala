@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.TextAnalysis
+import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -35,7 +35,7 @@ object StreamingOps {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
-      .select(TextAnalysis.fingerprintCol(col(textCol)).as("fp"),
+      .select(TextFns.fingerprintCol(col(textCol)).as("fp"),
         col(idCol).cast("long").as("id"))
       .as[(String, Long)]
       .groupByKey(_._1)

@@ -1,7 +1,6 @@
 package graft
 
-import graft.app.Profile
-import graft.core.Par
+import graft.core.{JobMetrics => Profile, Par}
 import org.apache.spark.scheduler._
 
 /** The profiler's attribution rules and the job-label helper it reads. */
@@ -62,6 +61,21 @@ class ProfileSpec extends SparkSpec {
     assert((rows("a").jobs, rows("a").stages, rows("a").spanMs) === (1, 3, 3000L))
     assert((rows("b").jobs, rows("b").stages, rows("b").spanMs) === (1, 1, 1500L))
     assert((l.totals.jobs, l.totals.stages, l.totals.spanMs) === (2, 4, 3000L))
+  }
+
+  test("fork runs its body under the caller's label, and a reused pool thread keeps none of its own") {
+    val sc = spark.sparkContext
+    val l = Profile.listen(spark)
+    try {
+      def forkedCount() = Par.await(Par.fork(spark)(sc.parallelize(1 to 10, 2).count()))
+      Par.labelled(spark, "spec:fork")(forkedCount())
+      // let the pool thread go idle, so the next fork reuses it with the
+      // label it last ran under still set on it
+      Thread.sleep(200)
+      forkedCount()
+      Profile.report(spark, l)
+      assert(l.rows.map(r => r.label -> r.jobs).toMap === Map("spec:fork" -> 1, Profile.Unlabelled -> 1))
+    } finally sc.removeSparkListener(l)
   }
 
   test("label helper restores the previous label, also after a throwing body") {
