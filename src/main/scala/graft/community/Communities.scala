@@ -106,7 +106,7 @@ object Communities {
     }.toDF("doc_id", "node_id", "min_member")
 
     val membership = Par.labelled(spark, "graft-comm:membership") {
-      Materialize.eager(minMembers.select(col("doc_id"), col("node_id"),
+      Materialize.stageCut(minMembers.select(col("doc_id"), col("node_id"),
         commIdUdf(col("doc_id"), col("min_member")).as("community_id")))
     }
 

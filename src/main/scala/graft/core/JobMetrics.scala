@@ -1,7 +1,9 @@
 package graft.core
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import scala.collection.mutable
 
@@ -18,6 +20,12 @@ import scala.collection.mutable
   * bytes and records, and the span from the label's first job start to its
   * last job end; the last row holds the grand totals. Tasks per stage show
   * the stages AQE coalesced to one task.
+  *
+  * The report ends with the run's whole-stage/expression codegen: the
+  * classes Janino compiled since the listener was made and the time that
+  * took — a fixed cost per distinct plan that no job row shows. The
+  * counters are JVM-wide: the driver's compiles, plus the executors' in
+  * local mode (a cluster executor compiles in its own JVM).
   */
 object JobMetrics {
 
@@ -38,6 +46,8 @@ object JobMetrics {
     private val jobLabel = mutable.HashMap.empty[Int, String]
     private val stageLabel = mutable.HashMap.empty[Int, String]
     private val seen = mutable.HashSet.empty[(Int, Int)]
+    private val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    private val compileNs0 = CodeGenerator.compileTime
 
     private def both(label: String) = Seq(byLabel.getOrElseUpdate(label, new Acc), total)
 
@@ -72,6 +82,9 @@ object JobMetrics {
     /** One row per label, in order of first appearance. */
     def rows: Seq[Row] = synchronized(byLabel.toSeq.map { case (l, a) => a.row(l) })
     def totals: Row = synchronized(total.row("total"))
+    /** (classes compiled, compile ms) since this listener was made. */
+    def codegen: (Long, Long) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+      (CodeGenerator.compileTime - compileNs0) / 1000000L)
   }
 
   /** Attach a fresh [[Listener]] to `spark`. */
@@ -89,6 +102,8 @@ object JobMetrics {
       f"${r.spanMs / 1e3}%8.2f"
     val header = f"[profile] ${"label"}%-32s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"task_s"}%9s " +
       f"${"shuffle_w_bytes"}%14s ${"shuffle_rec"}%11s ${"span_s"}%8s"
-    header +: l.rows.map(fmt) :+ fmt(l.totals)
+    val (compiles, compileMs) = l.codegen
+    (header +: l.rows.map(fmt) :+ fmt(l.totals)) :+
+      s"[profile] codegen compiles=$compiles compile_ms=$compileMs"
   }
 }

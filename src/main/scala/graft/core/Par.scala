@@ -52,15 +52,21 @@ object Par {
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 }
 
-/** Materialize-once for INTERNAL multi-consumer intermediates: eager
-  * persist instead of localCheckpoint. Same barrier semantics, two
-  * differences that matter in a shared local-mode heap:
+/** Materialize-once for INTERNAL multi-consumer intermediates: one
+  * mechanism, the stage cut ([[stageCut]] and its variants) — persist the
+  * plan's InternalRow RDD and wrap it as a fresh LogicalRDD. Persist
+  * instead of localCheckpoint, for two reasons that matter in a shared
+  * local-mode heap:
   *   1. blocks are freed DETERMINISTICALLY by `unpersist()` — localCheckpoint
   *      blocks wait for driver-GC + ContextCleaner and pin memory for the
   *      whole build;
   *   2. lineage stays intact, so freeing early is always SAFE — a late
   *      consumer recomputes from the upstream checkpoint instead of
   *      crashing on missing checkpoint blocks.
+  * Not `Dataset.persist`: that stores a columnar CachedBatch which every
+  * consumer scan decodes through a generated accessor, and its SQL
+  * `count()` plans an aggregate with an exchange and a one-task final
+  * stage of its own.
   *
   * Cache lifetime is decided in ONE place, [[Scope]]: every cache made
   * here registers with the innermost scope open on the calling thread and
@@ -146,19 +152,6 @@ object Materialize {
   def persist[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
     register(() => rdd.unpersist(blocking = false))
     rdd.persist(CacheLevel)
-  }
-
-  def eager(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    register(() => df.unpersist(blocking = false))
-    val p = df.persist(CacheLevel)
-    // count(), NOT foreachPartition: foreachPartition is a typed action that
-    // deserializes every InternalRow to an external Row (GenerateSafeProjection
-    // per row — jstack showed all workers blocked on its codegen lock, then
-    // paying object conversion for every wide metadata row). count() plans a
-    // codegen aggregate over the persisted scan and populates the cache as a
-    // side effect, no row conversion.
-    p.count()
-    p
   }
 
   /** Pipeline-stage materialization: persist the stage's InternalRow RDD

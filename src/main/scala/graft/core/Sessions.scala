@@ -23,7 +23,17 @@ import org.apache.spark.sql.SparkSession
   * Both are read at SparkContext construction, so they must be set on the
   * builder, not with `spark.conf.set` afterwards.
   *
-  * The four SQL-level settings below are the engine's session defaults
+  *   - `spark.sql.codegen.cache.maxEntries=1000` — a static SQL conf (read
+  *     once, when the first class is generated), so it too must be set on
+  *     the builder. A cold 1 000-doc build compiles ~345 distinct classes;
+  *     Spark's default cap of 100 evicts them within the build, so every
+  *     later build in the session compiles them again (a second 20-doc
+  *     build compiled 477 classes under the default, under 50 with this
+  *     cap: SessionsSpec) — and each StreamingBuild micro-batch is such a
+  *     build. 1000 holds about three builds' classes; each entry's key is
+  *     its generated source, so the cap also bounds the heap it pins.
+  *
+  * The SQL-level settings below are the engine's session defaults
   * (formerly mutated inside BuildPipeline.run — a build must NOT leak conf
   * changes into a caller's session, so they live here, set once at
   * construction):
@@ -50,6 +60,14 @@ import org.apache.spark.sql.SparkSession
   *     provenance aggregations silently fall back to SORT-based
   *     aggregation after 128 in-memory groups (default); groups here are
   *     per-(doc, name) and small, so keep the agg hash-based.
+  *   - `icu.caseMappings.enabled=false` — `lower()`/`upper()` map case
+  *     with `UTF8String.toLowerCase` (the JVM's rules), not through ICU:
+  *     the first ICU case mapping initializes `CollationAwareUTF8String`,
+  *     which took 1.1 s in a fresh JVM (1 113 and 1 141 ms measured) while
+  *     every `graft-link:names` task blocked on it — the linker's
+  *     `lower(trim(display))` is the build's first `lower()`. Both paths
+  *     map ASCII the same way, and the native text expressions
+  *     (WordGramsExpr) already lower-case with `UTF8String.toLowerCase`.
   */
 object Sessions {
 
@@ -68,6 +86,8 @@ object Sessions {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", "134217728")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
+      .config("spark.sql.icu.caseMappings.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
   }
 
   def local(cores: Int, appName: String): SparkSession = {

@@ -213,7 +213,7 @@ object Linker {
     * live HttpExtractor) could rank ambiguous-member overrides against
     * different descriptions than the name table saw. Every in-repo caller
     * passes a checkpointed/persisted stage (BuildPipeline's logs stage,
-    * or an eager cut of the logs); external callers with a lazy
+    * or a stage cut of the logs); external callers with a lazy
     * non-deterministic source must cut it first. A deterministic lazy
     * plan is correct but pays a second extraction pass. */
   def canonicalMappingResult(logs: Dataset[ExtractionLog]): LinkResult =
@@ -223,8 +223,6 @@ object Linker {
   private def mappingPlan(logs: Dataset[ExtractionLog]): DataFrame = {
     val spark = logs.sparkSession
     import spark.implicits._
-
-    def materialize(df: DataFrame): DataFrame = Materialize.eager(df)
 
     // SLIM name table straight from the logs: the blocking join,
     // union-find, and resolution read only (doc_id, name_norm, display).
@@ -236,14 +234,14 @@ object Linker {
     // documents ever read — measured 58% of linker shuffle bytes at 96k
     // docs). The chunk aggregation is re-run below over the
     // ambiguous-document slice of the (upstream-materialized) logs.
-    // EAGER: the name table has three consumers inside the `resolved` job
+    // CUT: the name table has three consumers inside the `resolved` job
     // (the fused resolve's nameRows and both sides of the prefix-blocking
     // self-join). A lazy plan was measured to RE-RUN the mention-explode
     // rollup per consumer at 96k docs (graft-link:* shuffle write:
     // 505 -> 1406 MiB — the rollup's exchange was not reused across the
     // three differently-projected subtrees), so the one-barrier cut is
     // the cheaper trade at scale.
-    val names = Par.labelled(spark, "graft-link:names")(materialize(uniqueNamesSlim(logs)))
+    val names = Par.labelled(spark, "graft-link:names")(Materialize.stageCut(uniqueNamesSlim(logs)))
     // Dictionary encoding: a 64-bit xxhash64 id per name. Pair rows carry
     // 8-byte ids instead of name strings (matchedPairIds). A same-doc id
     // collision would merge two names; at ~2^-64 per same-doc name pair it
@@ -276,7 +274,7 @@ object Linker {
       .as[(String, Long, String, String)]
       .groupByKey(_._1)
     val pairRows = pairs.as[(String, Long, Long)].groupByKey(_._1)
-    val resolved = Par.labelled(spark, "graft-link:resolved")(materialize(nameRows.cogroup(pairRows) {
+    val resolved = Par.labelled(spark, "graft-link:resolved")(Materialize.stageCut(nameRows.cogroup(pairRows) {
       (doc: String, ns: Iterator[(String, Long, String, String)],
        ps: Iterator[(String, Long, Long)]) =>
         // union-find over 8-byte ids (roots are opaque here: resolveCluster
@@ -310,7 +308,7 @@ object Linker {
     // description text instead of all of it
     val logsAmbig = logs.toDF().join(ambigDocs, Seq("doc_id"), "left_semi")
       .as[graft.core.ExtractionLog]
-    def ambiguousCut(df: DataFrame) = Par.labelled(spark, "graft-link:ambiguous")(materialize(df))
+    def ambiguousCut(df: DataFrame) = Par.labelled(spark, "graft-link:ambiguous")(Materialize.stageCut(df))
     val aggAmbig = ambiguousCut(mentionAgg(logsAmbig))
     // full name table (descs/ne_descs/prop_descs) for ambiguous docs —
     // containment gathering scans ALL names of the doc, so this derives

@@ -31,10 +31,11 @@ import org.apache.spark.sql.functions._
 object GraphTables {
 
   /** `cleanup` frees the three internal materializations (the node map,
-    * the endpoint-resolution join and the node-resolved edge cut) — call
-    * once the downstream table checkpoints exist. Safe at any point: they
-    * are PERSISTS with intact lineage, so a late consumer recomputes
-    * instead of failing. */
+    * the endpoint-resolution join and the endpoint-join cut) — call
+    * once the downstream table checkpoints exist, `droppedEdges`' too: it
+    * is two filters over those cuts. Safe at any point: they are PERSISTS
+    * with intact lineage, so a late consumer recomputes instead of
+    * failing. */
   case class Materialized(
       nodes: Dataset[NodeRow],
       edges: Dataset[EdgeRow],
@@ -137,7 +138,7 @@ object GraphTables {
     // resolution map for edges/properties. Independent of the edge-mention
     // resolution below — the two materializations overlap (Par).
     val nodesF = Par.fork(spark)(
-      Par.labelled(spark, "graft-mat:nodes_map")(Materialize.eager(nodesPlan)))
+      Par.labelled(spark, "graft-mat:nodes_map")(Materialize.stageCut(nodesPlan)))
 
     lazy val nodes = Par.await(nodesF)
     lazy val nodeKeys = nodes.select(col("doc_id").as("nk_doc"), col("canonical_norm").as("nk_name"),
@@ -153,7 +154,7 @@ object GraphTables {
         lower(trim(col("e.source"))).as("src_norm"), lower(trim(col("e.target"))).as("dst_norm"))
 
     // materialized once: dropped/triples/edges all branch from this join
-    val resolved = Par.labelled(spark, "graft-mat:edge_resolve")(Materialize.eager(resolveNames(
+    val resolved = Par.labelled(spark, "graft-mat:edge_resolve")(Materialize.stageCut(resolveNames(
         resolveNames(edgeMentions, mapping, "src_norm", "s"), mapping, "dst_norm", "d")
       .withColumnRenamed("s_canon_norm", "src_canon_norm")
       .withColumnRenamed("s_canon", "src_canon")
@@ -195,14 +196,18 @@ object GraphTables {
     // this thread, before the triples/edges0 consumers are forked; only
     // the final projection waits for them. Column-pruned to what the two
     // consumers and metaStruct read. Labelled for those shuffle jobs.
-    val withIds = Par.labelled(spark, "graft-mat:with_ids")(Materialize.stageCutLazy(withBoth
-      .filter(col("frm_id").isNotNull && col("to_id").isNotNull)
+    // The rows whose endpoint has no node ride the same cut, with the
+    // source/target names only they carry, so `droppedEdges` filters this
+    // cut instead of re-running both joins in a second plan.
+    val hasIds = col("frm_id").isNotNull && col("to_id").isNotNull
+    val endpoints = Par.labelled(spark, "graft-mat:with_ids")(Materialize.stageCutLazy(withBoth
       .select(col("doc_id"), col("chunk_id"), col("media_ref"), col("visual_kind"),
         col("relationship"), col("src_canon"), col("dst_canon"),
-        col("frm_id"), col("to_id"))))
-    val droppedEdges = mappingMissDropped.unionByName(
-      withBoth.filter(col("frm_id").isNull || col("to_id").isNull)
-        .select(col("doc_id"), col("chunk_id"), col("source"), col("target"), col("relationship")))
+        col("frm_id"), col("to_id"),
+        when(!hasIds, col("source")).as("source"), when(!hasIds, col("target")).as("target"))))
+    val withIds = endpoints.filter(hasIds)
+    val droppedEdges = mappingMissDropped.unionByName(endpoints.filter(!hasIds)
+      .select(col("doc_id"), col("chunk_id"), col("source"), col("target"), col("relationship")))
 
     // triples: directional, canonical, distinct — the parity surface;
     // built from the node-resolved edges so triples and edges agree

@@ -77,14 +77,14 @@ object BuildPipeline {
         "graft.core.Sessions (autoBroadcastJoinThreshold != -1); corpus-sized " +
         "intermediates may be driver-broadcast — build sessions with Sessions.builder")
 
-    // Without a work dir, a stage is materialized (eager persist) only when
+    // Without a work dir, a stage is materialized (a stage cut) only when
     // >= 2 downstream consumers would otherwise recompute its lineage (the
     // reference materializes its BuildLog list for the same reason);
     // single-consumer stages stay lazy so Catalyst fuses them into their
     // consumer — fewer jobs, less fixed overhead per build. With a work dir
     // every stage persists to parquet (that is the resume contract).
     //
-    // Eager persist, NOT localCheckpoint: a local checkpoint TRUNCATES
+    // A persisted cut, NOT localCheckpoint: a local checkpoint TRUNCATES
     // lineage, so its correctness depends on every block staying fetchable
     // for the build's lifetime. On a multi-executor cluster that is not a
     // safe assumption — concretely, Spark 4.1 cannot serve a remote fetch
@@ -149,36 +149,42 @@ object BuildPipeline {
     }
     val logsT = logs.as[ExtractionLog]
 
+    // The linker, materializer and community layers are each built by the
+    // first stage body that needs them (OnDemand): a stage that resumes
+    // from the work dir never runs its body, so a fully resumed build
+    // builds none of their internal cuts, and frees only what it built.
+
     // --- linking + canonicalization (J4/J5/L7/L11) --------------------------
-    val link = Linker.canonicalMappingResult(logsT)
-    val mapping = stage("mapping")(link.mapping)
+    val link = new OnDemand(Linker.canonicalMappingResult(logsT))(_.cleanup)
+    val mapping = stage("mapping")(link.get.mapping)
     // the mapping checkpoint exists now — free the linker's internal
     // materializations (names/resolved/ambiguous) so they stop competing
     // for executor memory with the materialize/community stages
-    link.cleanup()
+    link.free()
 
     // --- materialize level-0 graph (G1) -------------------------------------
     // GraphTables.build materializes the shared resolution lineage once;
-    // the four table projections are then independent — materialize them
-    // concurrently.
-    val mat = GraphTables.build(logsT, mapping)
+    // the five table projections are then independent — materialize them
+    // concurrently. dropped_edges is cut with them: it filters the
+    // materializer's own cuts, which mat.free() releases below.
+    val mat = new OnDemand(GraphTables.build(logsT, mapping))(_.cleanup)
     // nodes0 is ALREADY materialized inside GraphTables (endpoint-resolution
-    // map) — a second eager checkpoint would copy it for nothing, so the
-    // stage is lazy without a work dir (and persists normally with one).
-    val nodes0F = fork(stage("nodes0", shared = false)(mat.nodes.toDF()))
-    val edges0F = fork(stage("edges0")(mat.edges.toDF()))
-    val props0F = fork(stage("properties0")(mat.properties.toDF()))
-    val triplesF = fork(stage("triples")(mat.triples))
-    val dropped = stage("dropped_edges", shared = false)(mat.droppedEdges)
-    val (nodes0, edges0, props0, triples) =
-      (await(nodes0F), await(edges0F), await(props0F), await(triplesF))
+    // map) — a second cut would copy it for nothing, so the stage is lazy
+    // without a work dir (and persists normally with one).
+    val nodes0F = fork(stage("nodes0", shared = false)(mat.get.nodes.toDF()))
+    val edges0F = fork(stage("edges0")(mat.get.edges.toDF()))
+    val props0F = fork(stage("properties0")(mat.get.properties.toDF()))
+    val triplesF = fork(stage("triples")(mat.get.triples))
+    val droppedF = fork(stage("dropped_edges")(mat.get.droppedEdges))
+    val (nodes0, edges0, props0, triples, dropped) =
+      (await(nodes0F), await(edges0F), await(props0F), await(triplesF), await(droppedF))
 
     // --- community + document layers (G2/G3/G4) -----------------------------
     val docMeta = await(docMetaF)
-    val layer = Communities.build(
+    val layer = new OnDemand(Communities.build(
       nodes0.as[NodeRow], edges0.as[EdgeRow], props0.as[PropertyRow],
       docMeta.select(col("doc_id"), col("keywords")),
-      docMeta.select(col("doc_id"), col("summary")))
+      docMeta.select(col("doc_id"), col("summary"))))(_.cleanup)
 
     // the three final tables derive from the SAME materialized membership —
     // independent of each other.
@@ -200,18 +206,18 @@ object BuildPipeline {
           base.unionByName(Par.labelled(spark, s"graft-stage:$name-part")(Materialize.stageCut(part)))
       }
     val nodesF = fork(stage("nodes") {
-      layer.nodesWithCommunity.unionByName(layer.communityNodes).unionByName(layer.docNodes)
+      val l = layer.get
+      l.nodesWithCommunity.unionByName(l.communityNodes).unionByName(l.docNodes)
     })
-    val edgesF = fork(unionStage("edges")(edges0)(layer.communityEdges))
+    val edgesF = fork(unionStage("edges")(edges0)(layer.get.communityEdges))
     val propertiesF = fork(unionStage("properties")(props0) {
-      layer.communityProperties.unionByName(layer.docProperties)
+      layer.get.communityProperties.unionByName(layer.get.docProperties)
     })
     val (nodes, edges, properties) = (await(nodesF), await(edgesF), await(propertiesF))
     // all downstream tables are checkpointed (or derive from checkpoints) —
-    // free the materialize/community internals; late lazy consumers
-    // (dropped_edges without a work dir) recompute from the logs checkpoint
-    mat.cleanup()
-    layer.cleanup()
+    // free the materialize/community internals
+    mat.free()
+    layer.free()
 
     // --- documents registry (S6) ---------------------------------------------
     val documents = stage("documents", shared = false) {
@@ -236,6 +242,14 @@ object BuildPipeline {
 
     BuildResult(chunks, logs, mapping, nodes, edges, properties, triples,
       documents, searchIndex, dropped)
+  }
+
+  /** A layer built by the first caller of [[get]], on any thread; [[free]]
+    * runs its cleanup only if it was built. */
+  private final class OnDemand[T](make: => T)(cleanup: T => () => Unit) {
+    private var built: Option[T] = None
+    def get: T = synchronized(built.getOrElse { val t = make; built = Some(t); t })
+    def free(): Unit = synchronized(built).foreach(cleanup(_)())
   }
 
   /** Parity metric: precision / recall of distinct (doc_id, subj, pred, obj)

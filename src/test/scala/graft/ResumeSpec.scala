@@ -38,6 +38,30 @@ class ResumeSpec extends SparkSpec {
     assert(counts.forall(_.getLong(1) === 1L))
   }
 
+  test("a fully resumed run builds no linker, materializer or community internals") {
+    val io = new ParquetTableIO(Files.createTempDirectory("graft-resume3").toString)
+    val internal = Seq("graft-link:", "graft-mat:", "graft-comm:")
+    def labels(runId: String): Seq[String] = {
+      val l = JobMetrics.listen(spark)
+      try {
+        val r = BuildPipeline.run(Corpus.docs(spark, 20), new DeterministicExtractor,
+          Some(new Checkpoints(spark, io, runId)))
+        Seq(r.triples, r.nodes, r.edges, r.properties, r.searchIndex, r.documents, r.droppedEdges)
+          .foreach(_.count())
+        r.cleanup()
+        JobMetrics.report(spark, l)
+        l.rows.map(_.label)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val fresh = labels("fresh")
+    assert(internal.forall(p => fresh.exists(_.startsWith(p))), s"fresh run labels: $fresh")
+    val resumed = labels("resumed")
+    assert(!resumed.exists(l => internal.exists(l.startsWith)), s"resumed run labels: $resumed")
+    val lineage = io.read(spark, "_lineage")
+    import org.apache.spark.sql.functions._
+    assert(lineage.filter(col("run_id") === "resumed" && !col("resumed")).count() === 0)
+  }
+
   test("fresh rebuild (no checkpoints) produces the same triples as checkpointed") {
     val dir = Files.createTempDirectory("graft-resume2").toString
     val cp = new Checkpoints(spark, new ParquetTableIO(dir), "run-x")
